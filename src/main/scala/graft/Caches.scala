@@ -3,10 +3,9 @@ package graft
 /** The ONE teardown list for every module's memoized implicit stores
   * (temp-dir indexes, persisted shingle tiers, gap-fill grids). Every
   * main that can run ARBITRARY declared queries calls this on
-  * shutdown — the per-main copy-paste lists drifted twice (DevExplain
-  * round 13, DevShowFilter round 14), each time silently leaking the
-  * modules the copy predated. Adding a module's releaseCaches here is
-  * the whole registration. */
+  * shutdown — per-main copy-paste lists drifted twice, each time
+  * silently leaking the modules the copy predated. Adding a module's
+  * releaseCaches here is the whole registration. */
 object Caches {
   def releaseAll(): Unit = {
     graft.operators.Dedup.releaseCaches()

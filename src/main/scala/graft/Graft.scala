@@ -5,12 +5,13 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.{VectorFunctions => VF}
 import graft.functions.{VectorExpressions => V}
-import graft.sources.{DocumentStore, ManifestBackend, StoreBackend}
+import graft.sources.{DocumentStore, ManifestBackend, ManifestStore}
 
 /** The library facade: the reference's four HTTP routes as library
-  * calls over a collection-partitioned parquet store — what a user of
-  * dist-bit/nebuia_vector_db swaps in (reference main.go:162-167:
-  * POST /store, /search, /multi_search, /delete_collection).
+  * calls over a [[graft.sources.ManifestStore]] chunk table — what a
+  * user of dist-bit/nebuia_vector_db swaps in (reference
+  * main.go:162-167: POST /store, /search, /multi_search,
+  * /delete_collection).
   *
   * Semantics follow SURVEY.md §7.0's decisions: score is
   * `dot(q/‖q‖₂, v)` with stored vectors raw (D1, the reference's
@@ -27,14 +28,9 @@ import graft.sources.{DocumentStore, ManifestBackend, StoreBackend}
   * collections is ONE pruned scan + one global top-k, provably ≡ the
   * reference's per-collection fan-out + re-top-k (PropertySpec).
   *
-  * Every route takes a [[graft.sources.StoreBackend]]; the default is
-  * [[graft.sources.ManifestBackend]] — the object-store-safe layout
-  * matching where the reference actually keeps data (MinIO, reference
-  * main.go:131-143). Pass [[graft.sources.FlatBackend]] for plain
-  * collection-partitioned parquet (HDFS/POSIX, any-tool-readable).
-  * Both ingest the same flattened chunk table and read to the same
-  * schema, so results are identical row-for-row across backends
-  * (ReferenceWorkflowSpec runs the full lifecycle against both).
+  * Storage is [[graft.sources.ManifestBackend]] — the object-store-safe
+  * segment + pointer-manifest layout, matching where the reference
+  * actually keeps data (MinIO, reference main.go:131-143).
   */
 object Graft {
 
@@ -42,36 +38,32 @@ object Graft {
     * chunk table. Fresh UUID per document, like the reference
     * (main.go:330) — re-storing a document yields a new identity. */
   def store(spark: SparkSession, requestsJsonPath: String,
-      tablePath: String, backend: StoreBackend = ManifestBackend): Unit =
-    backend.store(DocumentStore.flattenChunks(
+      tablePath: String): Unit =
+    ManifestBackend.store(DocumentStore.flattenChunks(
       DocumentStore.readStoreRequests(spark, requestsJsonPath)), tablePath)
 
   /** POST /search: top-k chunks of one collection by dot(q̂, v). */
   def search(spark: SparkSession, tablePath: String,
-      queryVector: Array[Double], collection: String, topK: Int,
-      backend: StoreBackend = ManifestBackend): DataFrame =
-    searchIn(backend.read(spark, tablePath, Some(Seq(collection))),
+      queryVector: Array[Double], collection: String, topK: Int): DataFrame =
+    searchIn(ManifestBackend.read(spark, tablePath, Some(Seq(collection))),
       queryVector, topK)
 
   /** POST /multi_search: one pruned scan over the named collections,
     * one global top-k (≡ per-collection top-k then merge). Unknown
     * collections prune to nothing (Q7: defined, not skipped-and-logged). */
   def multiSearch(spark: SparkSession, tablePath: String,
-      queryVector: Array[Double], collections: Seq[String], topK: Int,
-      backend: StoreBackend = ManifestBackend): DataFrame =
-    searchIn(backend.read(spark, tablePath, Some(collections)),
+      queryVector: Array[Double], collections: Seq[String],
+      topK: Int): DataFrame =
+    searchIn(ManifestBackend.read(spark, tablePath, Some(collections)),
       queryVector, topK)
 
-  /** POST /delete_collection: synchronous drop — a partition delete
-    * (flat) or a tombstone commit (manifest). */
+  /** POST /delete_collection: synchronous drop — a tombstone commit. */
   def deleteCollection(spark: SparkSession, tablePath: String,
-      collection: String, backend: StoreBackend = ManifestBackend): Unit =
-    backend.deleteCollection(spark, tablePath, collection)
+      collection: String): Unit =
+    ManifestStore.deleteCollection(spark, tablePath, collection)
 
-  /** Core of every search route over any chunk-table frame — the same
-    * projection serves both store backends ([[DocumentStore]]'s flat
-    * partitions and [[graft.sources.ManifestStore]]'s generation
-    * snapshots read to the identical schema). */
+  /** Core of every search route over a chunk-table frame
+    * ([[DocumentStore.chunkTableSchema]]). */
   private[graft] def searchIn(chunks: DataFrame, queryVector: Array[Double],
       topK: Int): DataFrame = {
     val qn = VF.vecLit(VF.normalize(queryVector)) // driver-side, once (O5)

@@ -403,9 +403,6 @@ object Dedup {
     // repartition on the one relation each round shuffles — never by
     // mutating the session's shuffle-partitions conf, which would
     // silently narrow any concurrent query planned while the loop runs.
-    val tDbg0 = System.nanoTime()
-    def dbg(l: String): Unit = if (sys.env.contains("GRAFT_CC_DEBUG"))
-      System.err.println(f"CCDBG $l ${(System.nanoTime() - tDbg0) / 1e9}%.2f")
     // ONE fused stats job: materializes the persisted edge set (the
     // count side) and reads the convergence baseline Σ doc_id (the sum
     // side — initial labels are cluster_id = doc_id, so the node sum IS
@@ -413,7 +410,6 @@ object Dedup {
     val st = edges.agg(count(lit(1)).as("n")).crossJoin(
       nodes.agg(coalesce(sum("doc_id"), lit(0L)).as("s"))).head
     val nEdges = st.getLong(0)
-    dbg("edges-counted")
     // SMALL-GRAPH FAST PATH (see [[SmallGraphEdgeCap]]): the stats job
     // above materialized the persisted edge set, so the collect is a
     // cache read; union-find reproduces the min-label fixpoint exactly
@@ -428,7 +424,6 @@ object Dedup {
         .select(col("doc_id"),
           coalesce(col("cluster_id"), col("doc_id")).as("cluster_id"))
       val w0 = Window.partitionBy(col("cluster_id"))
-      dbg("small-graph-labeled")
       return lbl
         .withColumn("cluster_size", count(lit(1)).over(w0))
         .withColumn("keep", col("doc_id") === col("cluster_id"))
@@ -470,7 +465,6 @@ object Dedup {
       labels.unpersist()
       labels = next
       iter += 1
-      dbg(s"round-$iter")
     }
     // a silent non-converged return would emit WRONG clusters (multiple
     // keepers per component) — fail loudly instead; near-dup components

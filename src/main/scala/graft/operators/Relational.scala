@@ -37,8 +37,6 @@ object Relational {
     * target scale has headroom over the data's true scale). */
   private def dec(c: Column, p: Int, s: Int): Column = c.cast(DecimalType(p, s))
   private def money(c: Column): Column = dec(c, 14, 2)
-  private def rate1(c: Column): Column = dec(lit(1.0) - c, 8, 4)   // 1-l_discount
-  private def rate1p(c: Column): Column = dec(lit(1.0) + c, 8, 4)  // 1+l_tax
 
   /** UNSCALED-LONG money arithmetic — the fast path for money SUMS
     * whose values reach output as doubles (r19 optimization; DuckDB

@@ -1148,9 +1148,6 @@ object TextAnalysis {
     size(filter(matched, x => x)).cast("long")
   }
 
-  private def phraseTf(ws: Column, w1: String, w2: String): Column =
-    phraseNTf(ws, Seq(w1, w2))
-
   /** PHRASE search, compute-on-scan face: documents containing the
     * exact consecutive phrase, ranked by occurrence count. Pure
     * scan-side array arithmetic into a shuffle-free top-k — the
@@ -1430,7 +1427,7 @@ object TextAnalysis {
 
   /** One batch's index contribution as ONE relation, so maintenance is
     * ONE tagged pointer commit (atomic + replay-idempotent — the
-    * [[graft.streaming.EventStream.ingestStoreRequestsManifest]]
+    * [[graft.streaming.EventStream.ingestStoreRequests]]
     * exactly-once discipline applied to index maintenance). Row
     * shapes, discriminated by `kind`:
     *   - `'p'` posting: (doc_id, dl, word, tf, bkt) — bkt =

@@ -1,34 +1,27 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** The reference's storage layer re-expressed for Spark.
+/** The reference's ingest wire format and the chunk table it flattens
+  * to — shared by every ingest path ([[graft.Graft.store]],
+  * [[graft.streaming.EventStream.ingestStoreRequests]]) in front of
+  * [[ManifestStore]].
   *
   * Reference model (main.go:58-62, 334): one JSON blob per document at
   * MinIO key `{collection}/{uuid}_doc.json`, re-read and re-decoded in
-  * full on every query. Here the same documents live in ONE parquet
-  * dataset partitioned by `collection` — the partition column is the
-  * exact analogue of the key prefix (main.go:186-189) and gives pruned
-  * scans, column projection, and predicate pushdown for free.
+  * full on every query. Here the documents are flattened once at
+  * ingest to one row per chunk, stored per collection — the collection
+  * is the exact analogue of the key prefix (main.go:186-189) and gives
+  * pruned scans, column projection, and predicate pushdown for free.
   *
-  * Write semantics (SURVEY.md D3): synchronous appends replace the
+  * Write semantics (SURVEY.md D3): synchronous commits replace the
   * reference's fire-and-forget goroutines (main.go:294-349) — the
-  * reference acks before writing and can silently lose data; a Spark
-  * write is atomic per job and readable when it returns.
+  * reference acks before writing and can silently lose data; a store
+  * call is atomic and readable when it returns.
   */
 object DocumentStore {
-
-  // Partition values are escaped by partitionBy on write
-  // (ExternalCatalogUtils.escapePathName); every hand-built partition
-  // path must escape the same way, or a collection named with '%',
-  // '/', ':' or '=' (names come from arbitrary ingest JSON) silently
-  // misses its directory — or worse, hits a different one.
-  private def esc(c: String): String =
-    org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName(c)
-  private def unesc(s: String): String =
-    org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.unescapePathName(s)
 
   /** Wire schema of the reference's ingest JSON (main.go:25-62;
     * FIXTURES.md §A). `metadata.source` is `interface{}` in the
@@ -82,11 +75,6 @@ object DocumentStore {
         col("chunk.metadata.name").as("meta_name"),
         col("chunk.semantic_score").as("semantic_score"))
 
-  /** Store chunks into the collection-partitioned dataset (O10). */
-  def store(chunks: DataFrame, tablePath: String): Unit =
-    chunks.write.mode(SaveMode.Append)
-      .partitionBy("collection").parquet(tablePath)
-
   /** Schema of the flattened chunk table ([[flattenChunks]]'s output,
     * with the partition column last as parquet stores it). */
   val chunkTableSchema: StructType = StructType(Seq(
@@ -100,142 +88,4 @@ object DocumentStore {
     StructField("meta_name", StringType),
     StructField("semantic_score", DoubleType),
     StructField("collection", StringType)))
-
-  /** Read the full store, pruned to one collection if given (O1/O2).
-    * An empty or not-yet-created store reads as an empty typed frame —
-    * deleting the last collection must not turn subsequent searches
-    * into schema-inference errors (Q7: defined empties, never faults). */
-  def read(spark: SparkSession, tablePath: String,
-      collection: Option[String] = None): DataFrame = {
-    val base = new org.apache.hadoop.fs.Path(tablePath)
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val df =
-      if (fs.exists(base) && fs.listStatus(base).exists(st =>
-          st.isDirectory || st.getPath.getName.endsWith(".parquet")))
-        spark.read.schema(chunkTableSchema).parquet(tablePath)
-      else
-        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          chunkTableSchema)
-    collection.fold(df)(c => df.where(col("collection") === c))
-  }
-
-  /** Delete a collection (O11): drop the partition directory — a
-    * metadata-level operation (what Hive `ALTER TABLE ... DROP PARTITION`
-    * does), touching none of the other collections' files. The
-    * reference's analogue is a prefix-wildcard object delete
-    * (main.go:407-458), async and unacknowledged; this is synchronous
-    * (D3). On a table format with a transaction log (Delta/Iceberg) this
-    * becomes a log entry; for raw parquet the directory is the partition
-    * metadata. */
-  def deleteCollection(spark: SparkSession, tablePath: String,
-      collection: String): Unit = {
-    val dir = new org.apache.hadoop.fs.Path(
-      s"$tablePath/collection=${esc(collection)}")
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(dir, true)
-  }
-
-  /** Compact one collection's partition to `targetFiles` files — the
-    * maintenance job an append-per-request store needs at scale: every
-    * reference-style store call appends a file, and a year of small
-    * appends turns scans into open-file storms (the classic small-files
-    * problem; at 100 TB compaction targets ~128 MB files to match
-    * `spark.sql.files.maxPartitionBytes`). Rewrites ONLY the named
-    * partition: read → repartition → write to a staging directory →
-    * atomic-ish swap (rename), leaving other collections' files
-    * untouched. Readers see the OLD files, the NEW files, or — for the
-    * instant between the two renames — an ABSENT partition (which
-    * [[read]] defines as an empty collection); never a partial mix of
-    * generations. A crash between the renames leaves the only copy in
-    * the `.compact_old_` backup dir, invisible to readers until
-    * [[recoverCompaction]] restores it — run it on store startup (or
-    * after any compaction crash) before serving. A table format with a
-    * manifest/transaction log (Delta/Iceberg) removes the absent
-    * window entirely; for raw parquet, rename+recover is the
-    * contract. */
-  def compactCollection(spark: SparkSession, tablePath: String,
-      collection: String, targetFiles: Int = 1): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val dir = new org.apache.hadoop.fs.Path(
-      s"$tablePath/collection=${esc(collection)}")
-    val fs = dir.getFileSystem(conf)
-    if (!fs.exists(dir)) return
-    val staging = new org.apache.hadoop.fs.Path(
-      s"$tablePath/.compact_tmp_collection=${esc(collection)}")
-    val backup = new org.apache.hadoop.fs.Path(
-      s"$tablePath/.compact_old_collection=${esc(collection)}")
-    fs.delete(staging, true)
-    fs.delete(backup, true)
-    read(spark, tablePath, Some(collection))
-      .drop("collection") // partition value is the directory name
-      .repartition(targetFiles)
-      .write.mode(SaveMode.Overwrite).parquet(staging.toString)
-    // drop the _SUCCESS marker so the swapped dir holds only data files
-    fs.delete(new org.apache.hadoop.fs.Path(staging, "_SUCCESS"), false)
-    // two renames, never a delete of the only copy: move the live dir
-    // aside, move the compacted one in, THEN drop the old copy. A crash
-    // between the renames leaves the backup restorable; a concurrent
-    // reader sees the old files or the new ones, never a deleted window
-    // with the data stranded in a dot-dir.
-    require(fs.rename(dir, backup),
-      s"compaction: could not move $dir aside — store unchanged")
-    if (!fs.rename(staging, dir)) {
-      require(fs.rename(backup, dir),
-        s"compaction rollback failed — original data is at $backup")
-      fs.delete(staging, true)
-      throw new IllegalStateException(
-        s"compaction swap failed for $dir — rolled back to the original")
-    }
-    fs.delete(backup, true)
-  }
-
-  /** Recover from a crash mid-[[compactCollection]] swap: if the live
-    * partition directory is absent but the `.compact_old_` backup
-    * exists, restore the backup and drop any staging leftovers.
-    * Idempotent; returns true iff a restore happened. Call on store
-    * startup before serving reads. */
-  def recoverCompaction(spark: SparkSession, tablePath: String,
-      collection: String): Boolean = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val dir = new org.apache.hadoop.fs.Path(
-      s"$tablePath/collection=${esc(collection)}")
-    val fs = dir.getFileSystem(conf)
-    val staging = new org.apache.hadoop.fs.Path(
-      s"$tablePath/.compact_tmp_collection=${esc(collection)}")
-    val backup = new org.apache.hadoop.fs.Path(
-      s"$tablePath/.compact_old_collection=${esc(collection)}")
-    if (!fs.exists(dir) && fs.exists(backup)) {
-      require(fs.rename(backup, dir),
-        s"compaction recovery: could not restore $backup to $dir")
-      fs.delete(staging, true)
-      true
-    } else false
-  }
-
-  /** Startup recovery sweep: scan the store for orphaned
-    * `.compact_old_` backups (crashes mid-swap) and restore each via
-    * [[recoverCompaction]] — no collection list needed, so a store
-    * opener can always run this first. A backup found NEXT TO a healthy
-    * live dir is the other crash window (after the second rename,
-    * before the backup delete): the completed swap makes the live dir
-    * authoritative, so the stale old-generation copy is dropped rather
-    * than left to linger until the next compaction. Returns the
-    * collections that were actually restored. */
-  def recoverAll(spark: SparkSession, tablePath: String): Seq[String] = {
-    val base = new org.apache.hadoop.fs.Path(tablePath)
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(base)) return Seq.empty
-    val prefix = ".compact_old_collection="
-    fs.listStatus(base).toSeq.map(_.getPath.getName)
-      .filter(_.startsWith(prefix))
-      .map(n => unesc(n.stripPrefix(prefix))) // dir names are escaped
-      .filter { c =>
-        val restored = recoverCompaction(spark, tablePath, c)
-        if (!restored)
-          // swap completed: live dir exists, backup is a stale copy
-          fs.delete(new org.apache.hadoop.fs.Path(
-            s"$tablePath/$prefix${esc(c)}"), true)
-        restored
-      }
-  }
 }

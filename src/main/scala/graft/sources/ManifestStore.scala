@@ -9,13 +9,12 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   * committed by an append-only MANIFEST of pointer files — the minimal
   * Delta/Iceberg-style commit protocol, sized to this engine's needs.
   *
-  * [[DocumentStore]]'s compaction swaps partition directories with two
-  * renames, which is correct where rename is atomic (HDFS, POSIX) but
-  * NOT on the object stores the reference actually runs against (MinIO,
-  * reference main.go:131-143): S3-style rename is copy+delete, so the
-  * "briefly absent partition" window and the rename-based recovery
-  * contract do not carry over. This layout removes the dependence on
-  * rename entirely:
+  * A rename-based compaction swap is correct only where rename is
+  * atomic (HDFS, POSIX), NOT on the object stores the reference
+  * actually runs against (MinIO, reference main.go:131-143): S3-style
+  * rename is copy+delete, so a swap has a "briefly absent partition"
+  * window and needs a recovery sweep. This layout removes the
+  * dependence on rename entirely:
   *
   *   - data: `table/collection=<c>/seg=<NNNNNN>/part-*.parquet` —
   *     segments are IMMUTABLE once referenced by a pointer; appends
@@ -35,8 +34,8 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   *     change goes through a pointer, so every state change is
   *     all-or-nothing to readers.
   *
-  * Crash matrix (why no recovery sweep is needed, unlike the rename
-  * protocol's `recoverAll`):
+  * Crash matrix (why no recovery sweep is needed, unlike a rename
+  * protocol):
   *   - crash while writing a segment (append or compaction) → pointer
   *     unmoved, the partial directory is unreferenced and invisible;
   *     the next attempt claims a FRESH segment number (the crashed
@@ -640,9 +639,6 @@ object ManifestStore {
       content.stripPrefix(Tombstone + ";ts=").stripSuffix(SegsSuffix)
         .toLongOption.map(Some(_))
     else None
-
-  private def parseSegs(content: String): Option[Seq[Long]] =
-    parseBody(content).map(_._1)
 
   /** THE commit-instant rule, shared by every reader ([[resolveAt]]'s
     * `maxInstant`, [[listVersions]]' per-version `instantMs` — which
@@ -2379,9 +2375,10 @@ object ManifestStore {
     * which `_manifest` exists, the read-side check never fires again,
     * and every manifest read silently SHADOWS all pre-existing flat
     * data. Refuse before touching anything: a collection dir holding
-    * non-`seg=` entries (the flat layout's `part-*.parquet` land
-    * directly in it) is [[DocumentStore]] data — write it with
-    * FlatBackend, or migrate it through ManifestStore first. */
+    * non-`seg=` entries (a `partitionBy("collection")` write's
+    * `part-*.parquet` land directly in it) is flat-layout data written
+    * outside this store — re-ingest it through ManifestStore into a
+    * fresh table. */
   private def assertNotFlatLayout(fs: FileSystem, tablePath: String,
       c: String): Unit = {
     // a transient listing failure must NOT read as "not flat": this
@@ -2407,9 +2404,9 @@ object ManifestStore {
       else Seq(collectionDir(tablePath, c))
     suspects.find(holdsFlatData).foreach { dir =>
       throw new IllegalArgumentException(
-        s"$dir holds non-seg= files: this is a flat DocumentStore " +
-          "layout - write it with FlatBackend / DocumentStore.store, " +
-          "or re-ingest through ManifestStore into a fresh table")
+        s"$dir holds non-seg= files: this is a flat collection-" +
+          "partitioned parquet layout, not a manifest table - " +
+          "re-ingest it through ManifestStore into a fresh table")
     }
   }
 
@@ -2641,7 +2638,7 @@ object ManifestStore {
     }
   }
 
-  /** Read schema = the flat store's chunk table + the `seg` partition
+  /** Read schema = the chunk table + the `seg` partition
     * column (dropped after the scan). */
   private val segReadSchema: StructType = StructType(
     DocumentStore.chunkTableSchema.fields.toSeq :+
@@ -2671,12 +2668,13 @@ object ManifestStore {
     }
     // layout misconfiguration must fail LOUD, not read as empty: a
     // table with collection= data but no _manifest at all is a FLAT
-    // store ([[DocumentStore]]) being queried through the manifest
-    // backend — silently returning zero results is indistinguishable
-    // from "no matching documents". (Only checked when nothing
-    // resolved — the happy path pays no extra RPC; a genuinely
-    // missing collection in a real manifest store still reads as a
-    // defined empty, Q7.)
+    // collection-partitioned parquet table (an older release's layout,
+    // or any Spark partitionBy("collection") job) being queried as a
+    // manifest table — silently returning zero results is
+    // indistinguishable from "no matching documents". (Only checked
+    // when nothing resolved — the happy path pays no extra RPC; a
+    // genuinely missing collection in a real manifest store still
+    // reads as a defined empty, Q7.)
     if (paths.isEmpty &&
         !fs.exists(new Path(s"$tablePath/_manifest")) &&
         fs.exists(new Path(tablePath)) &&
@@ -2684,8 +2682,8 @@ object ManifestStore {
           _.getPath.getName.startsWith("collection=")))
       throw new IllegalArgumentException(
         s"$tablePath has collection= data but no _manifest: this is a " +
-          "flat DocumentStore layout - read it with FlatBackend / " +
-          "DocumentStore.read, or re-ingest through ManifestStore")
+          "flat collection-partitioned parquet layout, not a manifest " +
+          "table - re-ingest it through ManifestStore into a fresh table")
     readPaths(spark, tablePath, paths)
   }
 

@@ -1,11 +1,7 @@
 package graft.sources
 
-/** Collection-name ⇄ path-segment codec for the MANIFEST layout
-  * (which hand-builds every path it writes and reads — unlike the
-  * flat layout, whose `partitionBy` write escapes with raw
-  * `escapePathName` and whose hand-built paths must match that
-  * byte-for-byte, and whose `collection=` prefix already shields it
-  * from traversal).
+/** Collection-name ⇄ path-segment codec for the MANIFEST layout,
+  * which hand-builds every path it writes and reads.
   *
   * Names come from arbitrary ingest JSON (the reference's
   * `collection_name` field, main.go:300): escape them exactly the way
@@ -19,8 +15,8 @@ package graft.sources
   * through, so a collection literally named ".." would resolve
   * `_manifest/..` to the TABLE ROOT and "." would alias `_manifest`
   * itself — a hostile name could plant pointer files outside the
-  * manifest tree (the flat layout is shielded by its `collection=`
-  * prefix; the bare manifest dir is not). Dot-only names are
+  * manifest tree (a `collection=<c>` data dir is shielded by its
+  * prefix; the bare `_manifest/<c>` dir is not). Dot-only names are
   * percent-encoded ("." → "%2E", ".." → "%2E%2E"), which round-trips
   * through the same unescape and cannot collide with a user name
   * ("%2E" the literal escapes to "%252E"). The empty name — not a

@@ -612,46 +612,15 @@ object EventStream {
   // ------------------------------------------------------------------
 
   /** Stream reference-format JSON store requests from a drop directory
-    * into the collection-partitioned chunk table — the streaming analogue
-    * of the reference's async POST /store (main.go:294-326), with the
-    * guarantees it lacks: checkpointed source offsets give at-least-once
-    * delivery into foreachBatch, and writing each batch under its own
-    * (collection, ingest_batch) partition with DYNAMIC partition
-    * overwrite makes replays idempotent — a re-delivered batch rewrites
-    * exactly its own partitions (fresh uuids and all) instead of
-    * appending duplicates. At-least-once + idempotent = effective
-    * exactly-once; completion is observable via the query status instead
-    * of silently assumed. */
-  def ingestStoreRequests(spark: SparkSession, dropDir: String,
-      tablePath: String, checkpoint: String): StreamingQuery = {
-    import graft.sources.DocumentStore
-    val docs = spark.readStream
-      .schema(DocumentStore.storeRequestSchema)
-      .json(dropDir)
-      .select(col("collection_name").as("collection"),
-        explode(col("documents")).as("doc"))
-      .withColumn("doc_id", expr("uuid()"))
-    DocumentStore.flattenChunks(docs)
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.withColumn("ingest_batch", lit(batchId))
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("collection", "ingest_batch")
-          .parquet(tablePath)
-      }
-      .start()
-  }
-
-  /** [[ingestStoreRequests]] against the object-store-safe
-    * [[graft.sources.ManifestStore]]: each micro-batch commits one
-    * pointer-gated segment per collection, tagged
+    * into the [[graft.sources.ManifestStore]] chunk table — the streaming
+    * analogue of the reference's async POST /store (main.go:294-326),
+    * with the guarantees it lacks: checkpointed source offsets give
+    * at-least-once delivery into foreachBatch, and each micro-batch
+    * commits one pointer-gated segment per collection, tagged
     * `<ingest-id>-<batchId>` — on an at-least-once redelivery the tag
-    * is already in the pointer log and the commit is skipped, so the
-    * effective-exactly-once contract carries over to the backend where
-    * dynamic partition overwrite (the flat store's idempotency trick)
-    * is not rename-safe.
+    * is already in the pointer log and the commit is skipped.
+    * At-least-once + idempotent = effective exactly-once; completion is
+    * observable via the query status instead of silently assumed.
     *
     * The ingest id lives IN the checkpoint directory (the Delta
     * txn-appId discipline): batch ids only identify a batch relative
@@ -661,12 +630,12 @@ object EventStream {
     * from the SAME checkpoint reuses the id and replays dedup exactly.
     *
     * NULL collection_name rows land under the Hive default-partition
-    * name (the flat path's behavior via partitionBy) instead of
-    * NPE-ing the per-collection loop. The driver-side loop is
+    * name (what Spark's partitionBy writes for a null partition value)
+    * instead of NPE-ing the per-collection loop. The driver-side loop is
     * metadata-cardinality (the reference's /store is one collection
     * per request, main.go:25-29); the batch is pinned while both jobs
     * (distinct + per-collection writes) read it. */
-  def ingestStoreRequestsManifest(spark: SparkSession, dropDir: String,
+  def ingestStoreRequests(spark: SparkSession, dropDir: String,
       tablePath: String, checkpoint: String): StreamingQuery = {
     import graft.sources.{DocumentStore, ManifestStore}
     val ingestId = ingestIdentity(spark, checkpoint)
@@ -702,7 +671,7 @@ object EventStream {
     * postings + the batch's additive stats row land atomically, and an
     * at-least-once redelivery finds its `<ingest-id>-<batchId>` tag
     * already in the pointer log and no-ops — the
-    * [[ingestStoreRequestsManifest]] exactly-once contract applied to
+    * [[ingestStoreRequests]] exactly-once contract applied to
     * index maintenance. Searches ([[graft.operators.TextAnalysis
     * .bm25ManifestTopK]]) run against committed versions only; run
     * [[graft.operators.TextAnalysis.compactManifestTextIndex]] on a

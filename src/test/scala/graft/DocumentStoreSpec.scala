@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 
-import graft.sources.{DocumentStore, ManifestStore}
+import graft.sources.{DocumentStore, ManifestBackend, ManifestStore}
 
 class DocumentStoreSpec extends SparkSpecBase {
 
@@ -760,75 +760,6 @@ class DocumentStoreSpec extends SparkSpecBase {
     assert(chunks(1).getAs[Double]("semantic_score") == 0.9)
   }
 
-  test("store/read/delete collection lifecycle (O10/O11, D3)") {
-    val dir = tmp()
-    Files.writeString(java.nio.file.Paths.get(dir, "req.json"), storeJson)
-    def freshChunks() = DocumentStore.flattenChunks(
-      DocumentStore.readStoreRequests(spark, dir))
-    val table = tmp() + "/table"
-    DocumentStore.store(freshChunks(), table)
-    // a second store request is a new plan => new uuid seed, new identity
-    DocumentStore.store(
-      freshChunks().withColumn("collection", lit("colB")), table)
-
-    // synchronous read-after-write (D3 fixes the reference's async loss)
-    assert(DocumentStore.read(spark, table).count() == 4)
-    assert(DocumentStore.read(spark, table, Some("colA")).count() == 2)
-
-    // same doc stored twice gets two identities (reference main.go:330)
-    val ids = DocumentStore.read(spark, table)
-      .select("doc_id").distinct().count()
-    assert(ids == 2)
-
-    DocumentStore.deleteCollection(spark, table, "colA")
-    assert(DocumentStore.read(spark, table).count() == 2)
-    assert(DocumentStore.read(spark, table, Some("colA")).count() == 0)
-  }
-
-  test("collection filter prunes partitions (scan posture at scale)") {
-    val dir = tmp()
-    Files.writeString(java.nio.file.Paths.get(dir, "req.json"), storeJson)
-    val chunks = DocumentStore.flattenChunks(
-      DocumentStore.readStoreRequests(spark, dir))
-    val table = tmp() + "/table"
-    DocumentStore.store(chunks, table)
-    DocumentStore.store(chunks.withColumn("collection", lit("colB")), table)
-    val plan = DocumentStore.read(spark, table, Some("colB"))
-      .queryExecution.executedPlan.toString
-    // partition filter must reach the scan, not a post-scan Filter
-    assert(plan.contains("PartitionFilters") &&
-      plan.contains("collection"), plan)
-  }
-
-  test("compaction collapses append-per-request files, preserves rows") {
-    import org.apache.spark.sql.functions._
-    val table = java.nio.file.Files
-      .createTempDirectory("graft_compact").toString
-    // simulate the reference's append-per-store pattern: many tiny files
-    val base = spark.range(10).select(
-      lit("c1").as("collection"), col("id").cast("string").as("doc_id"),
-      lit("n").as("doc_name"), lit("s").as("doc_source"),
-      lit(1).as("chunk_idx"), lit("t").as("text"),
-      array(lit(1.0)).as("embedding"), lit("ms").as("meta_source"),
-      lit("mn").as("meta_name"), lit(0.5).as("semantic_score"))
-    (0 until 5).foreach(_ => DocumentStore.store(base, table))
-    def files(c: String) = {
-      val d = new java.io.File(s"$table/collection=$c")
-      d.listFiles().count(_.getName.endsWith(".parquet"))
-    }
-    DocumentStore.store(base.withColumn("collection", lit("c2")), table)
-    val before = DocumentStore.read(spark, table, Some("c1")).collect()
-      .map(_.getAs[String]("doc_id")).sorted
-    assert(files("c1") >= 5)
-    DocumentStore.compactCollection(spark, table, "c1")
-    assert(files("c1") == 1)
-    val after = DocumentStore.read(spark, table, Some("c1")).collect()
-      .map(_.getAs[String]("doc_id")).sorted
-    assert(after.toSeq == before.toSeq)
-    // the other collection's files were not touched
-    assert(DocumentStore.read(spark, table, Some("c2")).count() == 10)
-  }
-
   private def tenRows(collection: String) = {
     import org.apache.spark.sql.functions._
     spark.range(10).select(
@@ -839,62 +770,28 @@ class DocumentStoreSpec extends SparkSpecBase {
       lit("mn").as("meta_name"), lit(0.5).as("semantic_score"))
   }
 
-  test("crash mid-compaction swap: defined empty read, recoverCompaction restores") {
+  test("collection-scoped reads scan only the named collections' " +
+      "segment dirs (ManifestBackend.read, Graft.multiSearch)") {
     val table = tmp() + "/table"
-    DocumentStore.store(tenRows("c1"), table)
-    val fs = new org.apache.hadoop.fs.Path(table)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // simulate the crash window between compaction's two renames: the
-    // live dir is moved aside, the compacted dir never moved in
-    assert(fs.rename(
-      new org.apache.hadoop.fs.Path(s"$table/collection=c1"),
-      new org.apache.hadoop.fs.Path(s"$table/.compact_old_collection=c1")))
-    // a reader in the window sees an ABSENT partition = a defined empty
-    assert(DocumentStore.read(spark, table, Some("c1")).count() == 0)
-    // startup recovery restores the backup; idempotent second call no-ops
-    assert(DocumentStore.recoverCompaction(spark, table, "c1"))
-    assert(DocumentStore.read(spark, table, Some("c1")).count() == 10)
-    assert(!DocumentStore.recoverCompaction(spark, table, "c1"))
-    assert(DocumentStore.read(spark, table, Some("c1")).count() == 10)
-  }
-
-  test("recoverAll sweeps every orphaned compaction backup at startup") {
-    val table = tmp() + "/table"
-    DocumentStore.store(tenRows("c1"), table)
-    DocumentStore.store(tenRows("c2"), table)
-    DocumentStore.store(tenRows("c3"), table)
-    val fs = new org.apache.hadoop.fs.Path(table)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // two collections crashed mid-swap; one is healthy
-    Seq("c1", "c3").foreach { c =>
-      assert(fs.rename(
-        new org.apache.hadoop.fs.Path(s"$table/collection=$c"),
-        new org.apache.hadoop.fs.Path(s"$table/.compact_old_collection=$c")))
+    val all = Seq("colA", "colB", "colC")
+    for (c <- all; _ <- 0 until 2) ManifestStore.store(tenRows(c), table, c)
+    val segFile = raw".*/collection=([^/]+)/seg=(\d+)/[^/]+\.parquet".r
+    // every scanned file sits in a seg= dir of a NAMED collection, and
+    // every live segment of each named collection is scanned
+    def assertScans(df: org.apache.spark.sql.DataFrame,
+        named: Seq[String]): Unit = {
+      val segs = df.inputFiles.toSeq.map {
+        case segFile(c, seg) => (c, seg)
+        case f => fail(s"$f is not a segment file")
+      }.distinct
+      assert(segs.map(_._1).toSet == named.toSet, segs)
+      assert(segs.size == 2 * named.size, segs)
     }
-    assert(DocumentStore.recoverAll(spark, table).sorted == Seq("c1", "c3"))
-    Seq("c1", "c2", "c3").foreach { c =>
-      assert(DocumentStore.read(spark, table, Some(c)).count() == 10)
-    }
-    // idempotent; and a missing store path is a defined no-op
-    assert(DocumentStore.recoverAll(spark, table).isEmpty)
-    assert(DocumentStore.recoverAll(spark, tmp() + "/never").isEmpty)
-  }
-
-  test("recoverAll drops a stale backup left beside a healthy live dir") {
-    // the OTHER crash window: after the second rename, before the
-    // backup delete — live dir authoritative, backup is a stale copy
-    val table = tmp() + "/table"
-    DocumentStore.store(tenRows("c1"), table)
-    val fs = new org.apache.hadoop.fs.Path(table)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val backup = new org.apache.hadoop.fs.Path(
-      s"$table/.compact_old_collection=c1")
-    assert(fs.mkdirs(backup))
-    // nothing to restore (live dir healthy) — but the sweep must leave
-    // the store clean instead of letting the stale copy linger
-    assert(DocumentStore.recoverAll(spark, table).isEmpty)
-    assert(!fs.exists(backup))
-    assert(DocumentStore.read(spark, table, Some("c1")).count() == 10)
+    assertScans(ManifestBackend.read(spark, table, Some(Seq("colB"))),
+      Seq("colB"))
+    assertScans(Graft.multiSearch(spark, table, Array(1.0),
+      Seq("colA", "colC"), 5), Seq("colA", "colC"))
+    assertScans(ManifestBackend.read(spark, table), all)
   }
 
   test("manifest store: pointer-committed lifecycle on the object-store scheme") {
@@ -1525,11 +1422,12 @@ class DocumentStoreSpec extends SparkSpecBase {
 
   test("manifest read of a flat-layout table fails loud, not silently empty") {
     val ft = tmp() + "/flat"
-    DocumentStore.store(tenRows("c1"), ft)
+    tenRows("c1").write.partitionBy("collection").parquet(ft)
     val e = intercept[IllegalArgumentException] {
       ManifestStore.read(spark, ft, Some("c1")).count()
     }
-    assert(e.getMessage.contains("FlatBackend"), e.getMessage)
+    assert(e.getMessage.contains("re-ingest it through ManifestStore"),
+      e.getMessage)
     // a genuinely fresh path still reads as a defined empty (Q7)
     assert(ManifestStore.read(spark, tmp() + "/none").count() == 0)
   }
@@ -1587,50 +1485,20 @@ class DocumentStoreSpec extends SparkSpecBase {
     assert(ManifestStore.read(spark, mt, Some("a%41b")).count() == 0)
     assert(ManifestStore.read(spark, mt, Some("x/y")).count() == 10)
     assert(ManifestStore.read(spark, mt).count() == 30)
-    // flat layout: partitionBy escapes on write; every hand-built path
-    // (delete, compact, recover) must escape identically
+    // flat layout: partitionBy escapes on write; the write guard's
+    // hand-built collection path must escape identically, or flat data
+    // appended under a hostile name slips past it and is shadowed
     val ft = tmp() + "/ftable"
-    names.foreach(n => DocumentStore.store(tenRows(n), ft))
-    assert(DocumentStore.read(spark, ft, Some("a%41b")).count() == 10)
-    DocumentStore.compactCollection(spark, ft, "a%41b")
-    assert(DocumentStore.read(spark, ft, Some("a%41b")).count() == 10)
-    DocumentStore.deleteCollection(spark, ft, "x/y")
-    assert(DocumentStore.read(spark, ft, Some("x/y")).count() == 0)
-    assert(DocumentStore.read(spark, ft).count() == 30)
-  }
-
-  test("store lifecycle is FS-agnostic: non-default scheme (s3a stand-in)") {
-    // the reference's storage system is an object store (MinIO,
-    // main.go:131-143); every store/compact/recover path here goes
-    // through the Hadoop FileSystem API only, proven by running the
-    // full lifecycle on a scheme that is NOT the default local fs —
-    // the same seam an s3a:// URI plugs into on a real cluster
-    spark.sparkContext.hadoopConfiguration
-      .set("fs.graftfs.impl", classOf[GraftTestFs].getName)
-    val table = s"graftfs://${tmp()}/table"
-    DocumentStore.store(tenRows("c1"), table)
-    DocumentStore.store(tenRows("c2"), table)
-    assert(DocumentStore.read(spark, table).count() == 20)
-    assert(DocumentStore.read(spark, table, Some("c1")).count() == 10)
-    // append-per-request files compact on the foreign scheme too
-    (0 until 3).foreach(_ => DocumentStore.store(tenRows("c1"), table))
-    DocumentStore.compactCollection(spark, table, "c1")
-    val fs = new org.apache.hadoop.fs.Path(table)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(fs.getUri.getScheme == "graftfs")
-    val dataFiles = fs.listStatus(
-      new org.apache.hadoop.fs.Path(s"$table/collection=c1"))
-      .count(_.getPath.getName.endsWith(".parquet"))
-    assert(dataFiles == 1)
-    assert(DocumentStore.read(spark, table, Some("c1")).count() == 40)
-    // crash-window recovery uses the same FS handle
-    assert(fs.rename(
-      new org.apache.hadoop.fs.Path(s"$table/collection=c2"),
-      new org.apache.hadoop.fs.Path(s"$table/.compact_old_collection=c2")))
-    assert(DocumentStore.recoverCompaction(spark, table, "c2"))
-    assert(DocumentStore.read(spark, table, Some("c2")).count() == 10)
-    DocumentStore.deleteCollection(spark, table, "c2")
-    assert(DocumentStore.read(spark, table).count() == 40)
+    ManifestStore.store(tenRows("seed"), ft, "seed") // _manifest exists
+    names.foreach(n => tenRows(n).write.mode("append")
+      .partitionBy("collection").parquet(ft))
+    names.foreach { n =>
+      val e = intercept[IllegalArgumentException] {
+        ManifestStore.store(tenRows(n), ft, n)
+      }
+      assert(e.getMessage.contains("re-ingest"), n)
+    }
+    assert(ManifestStore.read(spark, ft, Some("seed")).count() == 10)
   }
 
   test("two racing writers on one collection: both batches land exactly " +
@@ -1798,7 +1666,7 @@ class DocumentStoreSpec extends SparkSpecBase {
 
   test("flat-layout table: vacuum plants no _manifest, manifest write refuses") {
     val ft = tmp() + "/flat"
-    DocumentStore.store(tenRows("c1"), ft)
+    tenRows("c1").write.partitionBy("collection").parquet(ft)
     val fs = new org.apache.hadoop.fs.Path(ft)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     // a vacuum mistakenly pointed at the flat table must not create
@@ -1815,7 +1683,8 @@ class DocumentStoreSpec extends SparkSpecBase {
     val e = intercept[IllegalArgumentException] {
       ManifestStore.store(tenRows("c1"), ft, "c1")
     }
-    assert(e.getMessage.contains("FlatBackend"), e.getMessage)
+    assert(e.getMessage.contains("re-ingest it through ManifestStore"),
+      e.getMessage)
     // ... even into a collection the flat table does NOT have (the
     // first-write sweep checks the whole root, because _manifest
     // appearing anywhere defeats the read-side check for every
@@ -1824,8 +1693,8 @@ class DocumentStoreSpec extends SparkSpecBase {
       ManifestStore.storeBatch(tenRows("cX"), ft, "cX", "b0")
     }
     assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$ft/_manifest")))
-    // flat data is intact and still readable through its own layout
-    assert(DocumentStore.read(spark, ft).count() == 10)
+    // flat data is intact and still readable as plain parquet
+    assert(spark.read.parquet(ft).count() == 10)
   }
 
   test("history: the pointer log reads back as a DataFrame with " +

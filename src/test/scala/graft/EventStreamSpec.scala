@@ -789,28 +789,6 @@ class EventStreamSpec extends SparkSpecBase {
     }
   }
 
-  test("streaming ingest lands store requests in the partitioned table") {
-    val drop = Files.createTempDirectory("graft_drop").toString
-    val table = Files.createTempDirectory("graft_stream_store").toString
-    val ckpt = Files.createTempDirectory("graft_ckpt").toString
-    val json =
-      """{"collection_name":"s1","documents":[
-        |{"text":"d","metadata":{"source":"s","name":"doc1"},
-        | "chunks":[{"text":"c1","embedding":{"vector":[1.0,0.0]},
-        |   "metadata":{"source":"cs","name":"cn"},"semantic_score":0.5},
-        |  {"text":"c2","embedding":{"vector":[0.0,1.0]},
-        |   "metadata":{"source":"cs","name":"cn"},"semantic_score":0.1}]}]}"""
-        .stripMargin.replace("\n", "")
-    Files.writeString(java.nio.file.Paths.get(s"$drop/req1.json"), json)
-    val q = EventStream.ingestStoreRequests(spark, drop, table, ckpt)
-    try q.processAllAvailable() finally q.stop()
-    val stored = spark.read.parquet(table)
-    assert(stored.count() == 2)
-    assert(stored.select("collection").distinct().collect()
-      .map(_.getString(0)).toSeq == Seq("s1"))
-    assert(stored.where(col("chunk_idx") === 1).count() == 1)
-  }
-
   test("streaming ingest into the manifest store: committed, exactly-once shape") {
     import graft.sources.ManifestStore
     val drop = Files.createTempDirectory("graft_mdrop").toString
@@ -825,10 +803,12 @@ class EventStreamSpec extends SparkSpecBase {
         |   "metadata":{"source":"cs","name":"cn"},"semantic_score":0.1}]}]}"""
         .stripMargin.replace("\n", "")
     Files.writeString(java.nio.file.Paths.get(s"$drop/req1.json"), json)
-    val q = EventStream.ingestStoreRequestsManifest(spark, drop, table, ckpt)
+    val q = EventStream.ingestStoreRequests(spark, drop, table, ckpt)
     try q.processAllAvailable() finally q.stop()
     val stored = ManifestStore.read(spark, table)
     assert(stored.count() == 2)
+    assert(stored.select("collection").distinct().collect()
+      .map(_.getString(0)).toSeq == Seq("s1"))
     assert(stored.where(col("chunk_idx") === 1).count() == 1)
     // the commit is pointer-gated and tagged with the checkpoint-scoped
     // ingest id: a manual redelivery of the same (id, batch) tag is a

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.{VectorExpressions => V}
 import graft.functions.VectorFunctions
-import graft.sources.DocumentStore
+import graft.sources.{DocumentStore, ManifestBackend, ManifestStore}
 
 /** End-to-end reference workflow: a user of dist-bit/nebuia_vector_db
   * does store -> search -> multi_search -> delete_collection over the
@@ -20,7 +20,7 @@ class ReferenceWorkflowSpec extends SparkSpecBase {
 
   test("store -> search -> multi-search -> delete lifecycle") {
     val drop = Files.createTempDirectory("graft_wf_drop").toString
-    val table = Files.createTempDirectory("graft_wf_store").toString
+    val table = Files.createTempDirectory("graft_wf_store").toString + "/t"
 
     // --- store (reference POST /store, one request per collection) ---
     writeReq(drop, "a.json",
@@ -39,19 +39,19 @@ class ReferenceWorkflowSpec extends SparkSpecBase {
         |   "metadata":{"source":"cs","name":"b1"},"semantic_score":0.2}]}]}"""
         .stripMargin.replace("\n", ""))
     val docs = DocumentStore.readStoreRequests(spark, drop)
-    DocumentStore.store(DocumentStore.flattenChunks(docs), table)
+    ManifestBackend.store(DocumentStore.flattenChunks(docs), table)
 
     // duplicate store: same doc gets a fresh identity (main.go:330)
-    DocumentStore.store(DocumentStore.flattenChunks(
+    ManifestBackend.store(DocumentStore.flattenChunks(
       DocumentStore.readStoreRequests(spark, s"$drop/a.json")), table)
-    assert(DocumentStore.read(spark, table, Some("alpha")).count() == 4)
-    assert(DocumentStore.read(spark, table, Some("alpha"))
+    assert(ManifestStore.read(spark, table, Some("alpha")).count() == 4)
+    assert(ManifestStore.read(spark, table, Some("alpha"))
       .select("doc_id").distinct().count() == 2)
 
     // --- search one collection (reference POST /search, E1) ---
     val q = VectorFunctions.normalize(Array(1.0, 0.0))
     def search(collection: Option[String], k: Int) =
-      DocumentStore.read(spark, table, collection)
+      ManifestStore.read(spark, table, collection)
         .select(col("collection"), col("text"), col("chunk_idx"),
           V.dot(VectorFunctions.vecLit(q), col("embedding")).as("similarity"))
         .orderBy(col("similarity").desc, col("text"), col("chunk_idx"))
@@ -69,17 +69,15 @@ class ReferenceWorkflowSpec extends SparkSpecBase {
     // strictly better than the reference's silent skip-and-log)
     assert(search(Some("nope"), 5).count() == 0)
 
-    // --- delete (reference POST /delete_collection, partition drop) ---
-    DocumentStore.deleteCollection(spark, table, "alpha")
-    assert(DocumentStore.read(spark, table, Some("alpha")).count() == 0)
-    assert(DocumentStore.read(spark, table, Some("beta")).count() == 1)
+    // --- delete (reference POST /delete_collection, tombstone commit) ---
+    ManifestStore.deleteCollection(spark, table, "alpha")
+    assert(ManifestStore.read(spark, table, Some("alpha")).count() == 0)
+    assert(ManifestStore.read(spark, table, Some("beta")).count() == 1)
   }
 
-  // the four-route lifecycle, driven through the PUBLIC facade against
-  // each pluggable backend — identical assertions, identical results
-  for (backend <- Seq(graft.sources.FlatBackend, graft.sources.ManifestBackend))
-  test(s"Graft facade: the reference's four routes as library calls " +
-      s"(${backend.getClass.getSimpleName.stripSuffix("$")})") {
+  // the four-route lifecycle, driven through the PUBLIC facade
+  test("Graft facade: the reference's four routes as library calls " +
+      "(ManifestBackend)") {
     val drop = Files.createTempDirectory("graft_api_drop").toString
     val table = Files.createTempDirectory("graft_api_store").toString + "/t"
     writeReq(drop, "a.json",
@@ -98,11 +96,16 @@ class ReferenceWorkflowSpec extends SparkSpecBase {
         |   "metadata":{"source":"cs","name":"b1"},"semantic_score":0.2}]}]}"""
         .stripMargin.replace("\n", ""))
 
-    Graft.store(spark, drop, table, backend)
+    Graft.store(spark, drop, table)
+
+    // duplicate store: same doc gets a fresh identity (main.go:330)
+    Graft.store(spark, s"$drop/a.json", table)
+    val alpha = ManifestStore.read(spark, table, Some("alpha"))
+    assert(alpha.count() == 4)
+    assert(alpha.select("doc_id").distinct().count() == 2)
 
     // /search: top hit + the Q3/Q4/Q6 response quirks, field-for-field
-    val top = Graft.search(spark, table, Array(1.0, 0.0), "alpha", 1,
-      backend).head
+    val top = Graft.search(spark, table, Array(1.0, 0.0), "alpha", 1).head
     assert(top.getAs[String]("text") == "alpha one")
     assert(top.getAs[Double]("similarity") == 1.0)
     assert(top.getAs[Int]("position") == 1) // 1-based chunk idx (Q6)
@@ -112,41 +115,36 @@ class ReferenceWorkflowSpec extends SparkSpecBase {
 
     // /multi_search: global top-k across the named collections
     val multi = Graft.multiSearch(spark, table, Array(0.0, 1.0),
-      Seq("alpha", "beta"), 2, backend).collect()
+      Seq("alpha", "beta"), 2).collect()
     assert(multi.head.getAs[String]("text") == "beta one")
     assert(multi.length == 2)
 
     // unknown collection: empty, never an error (Q7, made strict)
-    assert(Graft.search(spark, table, Array(1.0, 0.0), "nope", 5,
-      backend).count() == 0)
+    assert(Graft.search(spark, table, Array(1.0, 0.0), "nope", 5).count() == 0)
     assert(Graft.multiSearch(spark, table, Array(1.0, 0.0),
-      Seq("alpha", "nope"), 10, backend).count() == 2)
+      Seq("alpha", "nope"), 10).count() == 4)
 
     // /delete_collection
-    Graft.deleteCollection(spark, table, "alpha", backend)
-    assert(Graft.search(spark, table, Array(1.0, 0.0), "alpha", 5,
-      backend).count() == 0)
-    assert(Graft.search(spark, table, Array(0.0, 1.0), "beta", 5,
-      backend).count() == 1)
+    Graft.deleteCollection(spark, table, "alpha")
+    assert(Graft.search(spark, table, Array(1.0, 0.0), "alpha", 5).count() == 0)
+    assert(Graft.search(spark, table, Array(0.0, 1.0), "beta", 5).count() == 1)
 
     // deleting the LAST collection leaves a readable empty store:
     // searches return typed empties, never schema-inference errors (Q7)
-    Graft.deleteCollection(spark, table, "beta", backend)
-    assert(Graft.search(spark, table, Array(1.0, 0.0), "beta", 5,
-      backend).count() == 0)
+    Graft.deleteCollection(spark, table, "beta")
+    assert(Graft.search(spark, table, Array(1.0, 0.0), "beta", 5).count() == 0)
     assert(Graft.multiSearch(spark, table, Array(1.0, 0.0),
-      Seq("alpha", "beta"), 5, backend).count() == 0)
+      Seq("alpha", "beta"), 5).count() == 0)
     // and a never-written store path behaves the same
     val fresh = Files.createTempDirectory("graft_api_fresh").toString + "/none"
-    assert(Graft.search(spark, fresh, Array(1.0, 0.0), "x", 5,
-      backend).count() == 0)
+    assert(Graft.search(spark, fresh, Array(1.0, 0.0), "x", 5).count() == 0)
   }
 
   test("reference workflow end-to-end over the manifest-store backend") {
     // the same four-route lifecycle, backed by the object-store-safe
-    // ManifestStore: both backends read to the identical chunk-table
-    // schema, so the quirk-faithful search projection is shared
-    import graft.sources.ManifestStore
+    // ManifestStore, composed from its primitives: reads return the
+    // chunk-table schema, so the quirk-faithful search projection is
+    // shared with the facade
     val drop = Files.createTempDirectory("graft_man_drop").toString
     val table = Files.createTempDirectory("graft_man_store").toString + "/t"
     writeReq(drop, "a.json",
@@ -215,7 +213,7 @@ class ReferenceWorkflowSpec extends SparkSpecBase {
         |  {"text":"c two","embedding":{"vector":[0.0,1.0]},
         |   "metadata":{"source":"plain","name":"a2"},"semantic_score":0.1}]}]}"""
         .stripMargin.replace("\n", ""))
-    Graft.store(spark, drop, table) // default backend (manifest)
+    Graft.store(spark, drop, table)
     val rows = Graft.search(spark, table, Array(1.0, 0.0), "alpha", 2)
       .collect().sortBy(_.getAs[Int]("position"))
     // chunk-level source: a JSON number arrives as its text
