@@ -13,7 +13,7 @@ object DevPlanAudit {
   val Kernels: Seq[String] = Seq("word_stats(", "repetition_signals(",
     "shingle_hashes(", "shingle_strings(", "marker_count(",
     "char_class_stats(", "poly_hash(", "minhash_sig(", "band_hashes(",
-    "simhash(", "tokenize(", "count_replace(")
+    "simhash(", "tokenize(", "count_replace(", "char_ngram_counts(")
 
   /** AQE wrapping hides the initial plan — unwrap it. */
   def unwrap(plan: SparkPlan): SparkPlan = plan match {

@@ -855,6 +855,162 @@ object TokenizeExpr {
   }
 }
 
+/** Fused character n-gram profile counts: out[p] = the number of
+  * overlapping n-code-point windows of the text whose bytes equal an
+  * entry of profile p — the codegen'd form of
+  * `markerCount(shingleStrings(split(text, ""), n, ""), profiles(p))`
+  * for every p at once. That chain allocated one UTF8String per
+  * character and per gram and decoded every gram to a Java String once
+  * per profile; this kernel makes ONE walk over the UTF-8 bytes,
+  * keeps the last n code-point start offsets in a ring, and looks each
+  * window's byte range up in a shared open-addressing table — nothing
+  * is allocated per character or per gram.
+  *
+  * Code points are stepped with `UTF8String.numBytesForFirstByte`, the
+  * lead-byte length `split(text, "")` steps by, and the last code
+  * point runs to the end of the text (as split's last piece does), so
+  * invalid and truncated sequences cut into the same windows. Byte
+  * equality equals the chain's decoded-String equality only for
+  * markers that are valid UTF-8 without U+FFFD (an invalid gram
+  * decodes to U+FFFD and never matches such a marker), so
+  * [[CharNgramProfiles]] rejects every other entry at construction.
+  * The empty text is split's one empty piece: one empty window at
+  * n = 1. Null text returns null. PropertySpec pins kernel ≡ chain. */
+case class CharNgramCountsExpr(child: Expression, n: Int,
+    profiles: Seq[Seq[String]]) extends UnaryExpression {
+
+  require(n >= 1, s"char n-gram size must be >= 1, got $n")
+  // built (and validated) with the expression: a bad profile fails at
+  // the call site, not inside a task
+  private val table = new CharNgramProfiles(profiles)
+
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override def prettyName: String = "char_ngram_counts"
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case StringType => TypeCheckResult.TypeCheckSuccess
+    case t => TypeCheckResult.TypeCheckFailure(
+      s"$prettyName requires string, got ${t.sql}")
+  }
+
+  override def nullSafeEval(input: Any): Any = CharNgramCountsExpr.counts(
+    input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], n, table)
+
+  override protected def doGenCode(ctx: CodegenContext,
+      ev: ExprCode): ExprCode = {
+    val t = ctx.addReferenceObj("profiles", table,
+      classOf[CharNgramProfiles].getName)
+    nullSafeCodeGen(ctx, ev, a =>
+      s"${ev.value} = graft.functions.CharNgramCountsExpr.counts($a, $n, $t);")
+  }
+
+  override protected def withNewChildInternal(c: Expression): Expression =
+    copy(child = c)
+}
+
+object CharNgramCountsExpr {
+  /** Static so generated code can call it (TokenizeExpr's pattern). */
+  def counts(u: org.apache.spark.unsafe.types.UTF8String, n: Int,
+      t: CharNgramProfiles): ArrayData = {
+    val out = new Array[Long](t.size)
+    val m = u.numBytes()
+    if (m == 0) {
+      if (n == 1) t.add(out, t.lookup(u, 0, 0))
+    } else {
+      // ring of the last n code-point starts: after the advance,
+      // starts(slot) is the oldest, i.e. the current window's start
+      val starts = new Array[Int](n)
+      var slot = 0
+      var seen = 0
+      var i = 0
+      while (i < m) {
+        starts(slot) = i
+        slot = if (slot + 1 == n) 0 else slot + 1
+        seen += 1
+        i += org.apache.spark.unsafe.types.UTF8String
+          .numBytesForFirstByte(u.getByte(i))
+        if (seen >= n) t.add(out, t.lookup(u, starts(slot), math.min(i, m)))
+      }
+    }
+    ArrayData.toArrayData(out)
+  }
+}
+
+/** The byte-keyed marker table behind [[CharNgramCountsExpr]]: every
+  * distinct marker's UTF-8 bytes map to a bitmask of the profiles that
+  * hold it (so a marker shared by two profiles counts once in each,
+  * and a duplicate within one profile counts once, as the marker set
+  * does). Open addressing over a power-of-two slot array; read-only
+  * after construction, so one instance is shared by all tasks. */
+final class CharNgramProfiles(profiles: Seq[Seq[String]])
+    extends Serializable {
+  import org.apache.spark.unsafe.types.UTF8String
+
+  require(profiles.size <= 64,
+    s"at most 64 profiles fit the bitmask, got ${profiles.size}")
+  profiles.flatten.foreach { s =>
+    require(!s.contains('\uFFFD') && UTF8String.fromString(s).toString == s,
+      s"char n-gram marker '$s' is not valid UTF-8 without U+FFFD: byte " +
+        "equality would not match the decoded-string comparison")
+  }
+
+  val size: Int = profiles.size
+  private val (keys, masks) = {
+    val m = scala.collection.mutable.LinkedHashMap.empty[UTF8String, Long]
+    for ((prof, p) <- profiles.zipWithIndex; s <- prof) {
+      val k = UTF8String.fromString(s)
+      m(k) = m.getOrElse(k, 0L) | (1L << p)
+    }
+    (m.keys.toArray, m.values.toArray)
+  }
+  private val lens = keys.map(_.numBytes())
+  private val minLen = if (keys.isEmpty) 1 else lens.min
+  private val maxLen = if (keys.isEmpty) 0 else lens.max
+  private val slots: Array[Int] = {
+    var cap = 4
+    while (cap < 2 * keys.length) cap *= 2
+    val s = Array.fill(cap)(-1)
+    keys.indices.foreach { k =>
+      var j = hash(keys(k), 0, lens(k)) & (cap - 1)
+      while (s(j) >= 0) j = (j + 1) & (cap - 1)
+      s(j) = k
+    }
+    s
+  }
+
+  private def hash(u: UTF8String, from: Int, to: Int): Int = {
+    var h = 17
+    var i = from
+    while (i < to) { h = h * 31 + u.getByte(i); i += 1 }
+    h ^ (h >>> 16)
+  }
+
+  /** Profile bitmask of the text bytes [from, to); 0 when no marker. */
+  def lookup(u: UTF8String, from: Int, to: Int): Long = {
+    val len = to - from
+    if (len < minLen || len > maxLen) return 0L
+    var j = hash(u, from, to) & (slots.length - 1)
+    while (slots(j) >= 0) {
+      val k = slots(j)
+      if (lens(k) == len) {
+        var q = 0
+        while (q < len && keys(k).getByte(q) == u.getByte(from + q)) q += 1
+        if (q == len) return masks(k)
+      }
+      j = (j + 1) & (slots.length - 1)
+    }
+    0L
+  }
+
+  /** Add one to `out(p)` for every profile bit set in `mask`. */
+  def add(out: Array[Long], mask: Long): Unit = {
+    var r = mask
+    while (r != 0L) {
+      out(java.lang.Long.numberOfTrailingZeros(r)) += 1
+      r &= r - 1
+    }
+  }
+}
+
 /** Fused regex count + replace: ONE matcher walk over the text emits
   * the struct (n = match count, replaced = text with every match
   * replaced) — replacing the `regexp_count(text, p)` +
@@ -963,6 +1119,13 @@ object TextHashExpressions {
   /** codegen'd count of words in a fixed marker set. */
   def markerCount(words: Column, markers: Seq[String]): Column =
     ColumnShim.column(MarkerCountExpr(ColumnShim.expression(words), markers))
+
+  /** per-profile counts of the text's character n-grams, one byte walk
+    * (see [[CharNgramCountsExpr]]). */
+  def charNgramCounts(text: Column, n: Int,
+      profiles: Seq[Seq[String]]): Column =
+    ColumnShim.column(CharNgramCountsExpr(ColumnShim.expression(text), n,
+      profiles))
 
   /** codegen'd LSH band hashes over a minhash signature. */
   def bandHashes(sigs: Column, bands: Int, rowsPerBand: Int): Column =

@@ -54,12 +54,15 @@ object Relational {
     * grid-exactness the decimal formulation already leans on to keep
     * summed int-reps under 2^53 (see pricingSummary's scale-6 note).
     * Products of unscaled longs are exact at summed scales 4/6; the
-    * final rescale divides the exact long sum as a DECIMAL by the
-    * scale's power of ten (the division's result scale ≥ the true
-    * scale, so it is exact) and only then casts to double — bitwise
-    * the decimal formulation's value. ANSI long-overflow throws loud
-    * at ~9e18 unscaled, two orders past the 100 TB design point's
-    * worst-case sum at scale 6. */
+    * final rescale ([[unscaledDouble]]) casts the exact long sum to
+    * double and divides it, in double, by the scale's power of ten —
+    * bitwise the decimal formulation's value while |sum| < 2^53,
+    * where the cast is exact and the one division is correctly
+    * rounded. That is the real output bound: past 2^53 unscaled (about
+    * 9e11 currency units at scale 4, 9e9 at scale 6) the cast rounds
+    * and the value may differ from the decimal path's, long before
+    * ANSI long-overflow throws at ~9.2e18. The bound is stated here,
+    * not yet checked at run time. */
   // floor(x·100 + 0.5), not round(): Spark's Round on a double goes
   // through BigDecimal.valueOf per row; on a 2-decimal grid x·100 sits
   // within an ulp of its integer, so the pure-double floor recovers the
@@ -1229,9 +1232,9 @@ object Relational {
     * revenue equals the global maximum. Plan shape this adds: an
     * argmax against a GLOBAL aggregate of an aggregate — the 1-row max
     * broadcasts back over its own source relation and the hit test is
-    * DECIMAL equality (exact; a double-sum equality would be
-    * partition-order roulette). Supplier joins through the size gate;
-    * ties all surface (no arbitrary pick). */
+    * an exact equality of unscaled-long sums (a double-sum equality
+    * would be partition-order roulette). Supplier joins through the
+    * size gate; ties all surface (no arbitrary pick). */
   def topSupplier(s: SparkSession, dir: String): DataFrame = {
     val rev = Tables(s, dir, "lineitem")
       .where(col("l_shipdate") >= lit(TopSuppStart).cast("timestamp") &&
@@ -1240,7 +1243,7 @@ object Relational {
       .agg(sum(cents(col("l_extendedprice")) * rate1c(col("l_discount")))
         .as("total_rev_d"))
     rev.crossJoin(broadcast(rev.agg(max(col("total_rev_d")).as("max_rev"))))
-      .where(col("total_rev_d") === col("max_rev")) // exact decimal equality
+      .where(col("total_rev_d") === col("max_rev")) // exact long-sum equality
       .join(VectorSearch.broadcastIfSmall(Tables(s, dir, "supplier")),
         col("l_suppkey") === col("s_suppkey"))
       .select(col("s_suppkey"), col("s_name"),

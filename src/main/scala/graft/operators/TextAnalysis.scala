@@ -118,24 +118,21 @@ object TextAnalysis {
     * heuristic (vs [[languageId]]'s stopword markers): count each
     * language profile's trigrams among the document's overlapping char
     * trigrams, argmax with the same fixed en>de>es>fr tie priority.
-    * The trigram expansion captures only the scan attribute inside the
-    * lambda (O(1) slot read per element — not the re-evaluated-subtree
-    * HOF pitfall), and each profile count is the fused marker kernel. */
+    * All four counts come from ONE byte walk per row
+    * ([[graft.functions.CharNgramCountsExpr]]): no per-character or
+    * per-trigram strings, and each window is looked up once for every
+    * profile. It counts exactly what the split-into-characters /
+    * join-into-trigrams / per-profile marker-count chain counts
+    * (PropertySpec pins the two equal). */
   def languageIdNgram(documents: DataFrame): DataFrame = {
-    // fused kernel over the character array (sep="" joins chars back
-    // into substrings) — the interpreted substring-HOF formulation was
-    // ~5M lambda frames at sf0.1 (measured 4.2s; kernel is scan-speed)
-    val trigrams = graft.functions.TextHashExpressions
-      .shingleStrings(split(col("text"), ""), 3, "")
-    val scored = documents.select(
-      (col("doc_id") +: col("lang") +: TrigramProfiles.map { case (l, prof) =>
-        graft.functions.TextHashExpressions.markerCount(trigrams, prof)
-          .as(s"s_$l")
-      }): _*)
-    val Seq(en, de, es, fr) =
-      TrigramProfiles.map { case (l, _) => col(s"s_$l") }
-    scored
-      .withColumn("predicted", argmaxLang(en, de, es, fr))
+    val counts = graft.functions.TextHashExpressions
+      .charNgramCounts(col("text"), 3, TrigramProfiles.map(_._2))
+    val scored = documents.select(col("doc_id"), col("lang"),
+      counts.as("cnt"))
+    val Seq(en, de, es, fr) = TrigramProfiles.indices.map(col("cnt")(_))
+    scored.select(col("doc_id"), col("lang"),
+        en.as("s_en"), de.as("s_de"), es.as("s_es"), fr.as("s_fr"),
+        argmaxLang(en, de, es, fr).as("predicted"))
       .orderBy("doc_id")
   }
 
@@ -1812,26 +1809,31 @@ object TextAnalysis {
     * same monotone fluency signal as EXACT integer arithmetic (one
     * integer sum, one rational division — bit-reproducible).
     *
-    * Scale shape: one shuffle builds the bigram df relation
-    * (vocabulary-cardinality, Heaps-sublinear), which joins back
-    * through the size-gated broadcast; the per-doc aggregate
-    * partial-combines map-side. Single-word docs have no bigrams and
-    * no row (no evidence either way — gate on [[qualityScore]]'s
-    * signals for those). */
-  def bigramFluency(documents: DataFrame): DataFrame = {
-    val bg = documents.select(col("doc_id"), explode(
-      graft.functions.TextHashExpressions
+    * Scale shape: the exploded (doc, bigram) rows are hash-partitioned
+    * on the bigram once; on that partitioning one aggregate counts `c`
+    * per (bigram, doc) and a window over the bigram counts its
+    * documents (`df`) with no second exchange. The per-doc sums
+    * (`n_bigrams` = Σc, `sum_df` = Σ c·df) then take one shuffle on
+    * doc_id, partial-combined map-side, and the output sort a range
+    * exchange — two corpus-sized shuffles, no join, no broadcast of a
+    * vocabulary-sized relation. The window sorts each bigram
+    * partition, which spills like any sort. Single-word docs have no
+    * bigrams and no row (no evidence either way — gate on
+    * [[qualityScore]]'s signals for those). */
+  def bigramFluency(documents: DataFrame): DataFrame =
+    documents
+      .select(col("doc_id"), explode(graft.functions.TextHashExpressions
         .shingleHashes(words(col("text")), 2)).as("h"))
-    val dfRel = bg.select("doc_id", "h").distinct()
-      .groupBy("h").agg(count(lit(1)).as("df"))
-    bg.join(VectorSearch.broadcastIfSmall(dfRel), Seq("h"))
+      .repartition(col("h"))
+      .groupBy("h", "doc_id").agg(count(lit(1)).as("c"))
+      .withColumn("df", count(lit(1)).over(Window.partitionBy("h")))
       .groupBy("doc_id")
-      .agg(count(lit(1)).as("n_bigrams"), sum(col("df")).as("sum_df"))
+      .agg(coalesce(sum(col("c")), lit(0L)).as("n_bigrams"),
+        sum(col("c") * col("df")).as("sum_df"))
       .select(col("doc_id"), col("n_bigrams"), col("sum_df"),
         (col("sum_df").cast("double") / col("n_bigrams").cast("double"))
           .as("fluency"))
       .orderBy("doc_id")
-  }
 
   /** Collocation knobs: minimum pair support and report size. */
   val MinCollocCount = 5L

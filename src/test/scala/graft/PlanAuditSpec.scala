@@ -36,6 +36,12 @@ class PlanAuditSpec extends SparkSpecBase {
       .where(col("ws.n_words") > 2)
     assert(DevPlanAudit
       .filterKernelHits(barriered.queryExecution.executedPlan).isEmpty)
+    // the string-input kernel's marker matches its plan rendering too
+    val bareNgram = docs
+      .withColumn("cnt", charNgramCounts(col("text"), 3, Seq(Seq("the"))))
+      .where(col("cnt")(0) > 0)
+    assert(DevPlanAudit.filterKernelHits(
+      bareNgram.queryExecution.executedPlan) == Seq("char_ngram_counts( x1"))
   }
 
   test("every declared query plans with ZERO kernel calls inside " +

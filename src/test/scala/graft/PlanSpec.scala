@@ -122,6 +122,29 @@ class PlanSpec extends SparkSpecBase {
     assert(plan(df).contains("*(1)"), plan(df))
   }
 
+  test("bigram fluency: hash exchange on the bigram, hash exchange on " +
+      "doc_id, the output range sort; no join, no broadcast") {
+    import org.apache.spark.sql.catalyst.expressions.Attribute
+    import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning,
+      RangePartitioning}
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec,
+      ShuffleExchangeExec}
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    val df = TextAnalysis.bigramFluency(
+      spark.read.parquet(s"$sf/documents.parquet"))
+    val p = DevPlanAudit.unwrap(df.queryExecution.executedPlan)
+    val parts = p.collect { case e: ShuffleExchangeExec =>
+      e.outputPartitioning match {
+        case HashPartitioning(Seq(a: Attribute), _) => s"hash(${a.name})"
+        case _: RangePartitioning => "range"
+        case other => other.toString
+      }
+    }
+    assert(parts.sorted == Seq("hash(doc_id)", "hash(h)", "range"), p)
+    assert(p.collect { case j: BaseJoinExec => j }.isEmpty, p)
+    assert(p.collect { case b: BroadcastExchangeExec => b }.isEmpty, p)
+  }
+
   test("LSH search: bucket filter + top-k, zero shuffles") {
     assert(nShuffles(Ann.lshTopK(emb)) == 0)
   }

@@ -311,6 +311,95 @@ class PropertySpec extends SparkSpecBase {
     assert(nulls.forall(_.isNullAt(0)))
   }
 
+  test("char n-gram counts kernel == split/shingle/marker-count chain " +
+      "for n = 1..4 (ASCII, multi-byte, combining marks, invalid UTF-8)") {
+    import graft.functions.TextHashExpressions.{charNgramCounts, markerCount,
+      shingleStrings}
+    // valid text: ASCII, 2/3/4-byte code points, combining marks (a
+    // decomposed e-acute is two code points, so it straddles windows)
+    val genValid = Gen.listOf(Gen.frequency(
+      6 -> Gen.alphaLowerChar.map(_.toString), 2 -> Gen.const(" "),
+      2 -> Gen.oneOf("the", "th ", "en ", "que", " le"),
+      2 -> Gen.oneOf("\u00E9", "\u00DF", "\u3042", "\u20AC",
+        "\uD83C\uDF89", "e\u0301", "\u0301", "a\u0308")))
+      .map(_.mkString.getBytes("UTF-8").toSeq)
+    // invalid UTF-8: stray continuation bytes, lone and truncated lead
+    // bytes (E2 82 = the first two bytes of the euro sign), bytes no
+    // lead allows
+    val genInvalid = Gen.listOf(Gen.frequency(
+      4 -> Gen.alphaLowerChar.map(c => Seq(c.toByte)),
+      2 -> Gen.oneOf("\u20AC", "\uD83C\uDF89", "\u00E9")
+        .map(_.getBytes("UTF-8").toSeq),
+      2 -> Gen.oneOf(Seq(0x80), Seq(0xBF), Seq(0xC0, 0xAF), Seq(0xE2),
+        Seq(0xE2, 0x82), Seq(0xF0, 0x9F), Seq(0xF0, 0x9F, 0x8E), Seq(0xFF),
+        Seq(0xF8, 0x80, 0x80)).map(_.map(_.toByte)))).map(_.flatten)
+    val fixed = Seq("E282", "41E282", "E2", "FF", "C0AF", "F09F8E",
+      "61E28261", "", "61", "6162", "616263").map(h =>
+      h.grouped(2).map(Integer.parseInt(_, 16).toByte).toSeq)
+    val bytes = samples(genValid, 80) ++ samples(genInvalid, 80) ++ fixed
+    val df = spark.createDataFrame(
+      spark.sparkContext.parallelize(
+        bytes.zipWithIndex.map { case (b, i) => Row(i.toLong, b.toArray) } :+
+          Row(-1L, null)),
+      StructType(Seq(StructField("id", LongType),
+        StructField("b", BinaryType))))
+      .select(col("id"), col("b").cast("string").as("text"))
+    // profile entries of every byte length: empty, 1-4 code points,
+    // 1-4 bytes per code point, combining marks, a marker in two
+    // profiles ('th', 'que') and one listed twice in a profile
+    val mixed = Seq(
+      Seq("", "a", "th", "the", "\u00E9", "e\u0301", "\uD83C\uDF89",
+        "\u3042\u20AC", " ", "th"),
+      Seq("que", "th", "\u0301", "\u00DF", "\u20ACa", "e\u0301 ", "abcd"),
+      Seq("zzzz"))
+    val profileSets = Seq(
+      graft.operators.TextAnalysis.TrigramProfiles.map(_._2), mixed)
+    def check(): Unit = for (n <- 1 to 4; profs <- profileSets) {
+      val chars = split(col("text"), "")
+      val out = df.select(col("id"),
+          charNgramCounts(col("text"), n, profs).as("k"),
+          array(profs.map(p =>
+            markerCount(shingleStrings(chars, n, ""), p)): _*).as("ref"))
+        .collect()
+      assert(out.length == bytes.length + 1)
+      out.foreach { r =>
+        val id = r.getLong(0)
+        if (id < 0) assert(r.isNullAt(1), "null text must count null")
+        else assert(r.getSeq[Long](1) == r.getSeq[Long](2),
+          s"n=$n id $id bytes=${bytes(id.toInt).map(b => f"$b%02X").mkString}")
+      }
+    }
+    check() // whole-stage codegen
+    val conf = spark.conf
+    conf.set("spark.sql.codegen.wholeStage", "false")
+    conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
+    try check() // interpreted eval
+    finally {
+      conf.unset("spark.sql.codegen.wholeStage")
+      conf.unset("spark.sql.codegen.factoryMode")
+    }
+  }
+
+  test("char n-gram counts kernel rejects markers whose bytes would not " +
+      "match the chain's decoded-string comparison") {
+    import graft.functions.CharNgramCountsExpr
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import graft.functions.TextHashExpressions.{markerCount, shingleStrings}
+    // why: an invalid gram decodes to U+FFFD, so the chain counts it
+    // against a U+FFFD marker although the bytes differ (FF vs EF BF BD)
+    val chain = spark.sql("SELECT CAST(X'FF' AS STRING) AS text")
+      .select(markerCount(shingleStrings(split(col("text"), ""), 1, ""),
+        Seq("\uFFFD"))).head.getLong(0)
+    assert(chain == 1L)
+    Seq("\uFFFD", "a\uFFFD", "\uD800", "x\uDC00y").foreach { bad =>
+      val e = intercept[IllegalArgumentException](
+        CharNgramCountsExpr(Literal("x"), 3, Seq(Seq("the"), Seq(bad))))
+      assert(e.getMessage.contains("not valid UTF-8 without U+FFFD"), bad)
+    }
+    intercept[IllegalArgumentException](
+      CharNgramCountsExpr(Literal("x"), 0, Seq(Seq("a"))))
+  }
+
   test("fused word stats == reference formulation on random word lists") {
     val genWord = Gen.nonEmptyListOf(Gen.alphaLowerChar).map(_.mkString)
     val genDoc = Gen.listOfN(30, genWord).map(_.toSeq)

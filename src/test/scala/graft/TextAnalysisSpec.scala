@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions._
@@ -267,6 +268,49 @@ class TextAnalysisSpec extends SparkSpecBase {
     // counts at least its own document)
     assert(TextAnalysis.bigramFluency(docs).collect()
       .forall(_.getAs[Double]("fluency") >= 1.0))
+  }
+
+  /** The df-join formulation [[TextAnalysis.bigramFluency]] replaced
+    * (distinct (doc, bigram) pairs, a groupBy for df, a join back),
+    * kept as the reference the one-shuffle plan must reproduce. */
+  private def bigramFluencyJoinRef(documents: DataFrame): DataFrame = {
+    val bg = documents.select(col("doc_id"), explode(
+      graft.functions.TextHashExpressions
+        .shingleHashes(words(col("text")), 2)).as("h"))
+    val dfRel = bg.select("doc_id", "h").distinct()
+      .groupBy("h").agg(count(lit(1)).as("df"))
+    bg.join(dfRel, Seq("h"))
+      .groupBy("doc_id")
+      .agg(count(lit(1)).as("n_bigrams"), sum(col("df")).as("sum_df"))
+      .select(col("doc_id"), col("n_bigrams"), col("sum_df"),
+        (col("sum_df").cast("double") / col("n_bigrams").cast("double"))
+          .as("fluency"))
+      .orderBy("doc_id")
+  }
+
+  test("bigram fluency: the windowed-df plan == the df-join formulation " +
+      "(rows and schema)") {
+    import spark.implicits._
+    // duplicate doc_ids (one doc split over two rows), a bigram repeated
+    // inside one document, null text, empty and single-word docs
+    val edges = Seq(
+      (1L, "a b a b a b"), (1L, "a b c"), (2L, "a b"), (2L, "b c d"),
+      (3L, null.asInstanceOf[String]), (4L, "solo"), (5L, ""),
+      (6L, "b c b c"), (7L, "c d  e!")).toDF("doc_id", "text")
+    val corpus = docs.select("doc_id", "text")
+    Seq(edges, corpus, corpus.unionByName(edges)).foreach { d =>
+      val got = TextAnalysis.bigramFluency(d)
+      val ref = bigramFluencyJoinRef(d)
+      assert(got.schema == ref.schema,
+        s"${got.schema.treeString} vs ${ref.schema.treeString}")
+      assert(got.collect().toSeq == ref.collect().toSeq)
+    }
+    // the repeated bigram: doc 1 has 'a b' x4 (df 2: docs 1, 2), 'b a'
+    // x2 (df 1), 'b c' x1 (df 3: docs 1, 2, 6)
+    val one = TextAnalysis.bigramFluency(edges).where(col("doc_id") === 1L)
+      .head()
+    assert(one.getAs[Long]("n_bigrams") == 7L)
+    assert(one.getAs[Long]("sum_df") == 4L * 2 + 2L * 1 + 1L * 3)
   }
 
   test("KMV sample: sorted bottom-k, partition-invariant; overlap " +
