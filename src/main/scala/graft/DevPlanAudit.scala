@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.SparkPlan
 /** Flag declared queries whose physical Filter conditions re-evaluate
   * expensive text kernels (the substituted-gate pathology the
@@ -39,11 +38,7 @@ object DevPlanAudit {
 
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.01"
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = DevSession()
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, f) =>
       try {
         val hits = filterKernelHits(f(spark, sfDir).queryExecution.executedPlan)

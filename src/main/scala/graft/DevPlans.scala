@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: dump `.explain("formatted")` for a comma-separated list of
   * declared queries into an output directory (one `<name>_<tag>.txt`
   * per query) — the per-round plan-evidence capture
@@ -15,11 +13,7 @@ object DevPlans {
     val tag = if (args.length > 2) args(2) else "before"
     val dir = if (args.length > 3) args(3) else "/root/testdata/sf0.1"
     new java.io.File(outDir).mkdirs()
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = DevSession()
     val unknown = names.filterNot(SparkEntry.queries.contains)
     require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(",")}")
     for (name <- names) {

@@ -1,20 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev-only: run each declared query twice (cold/warm) to separate fixed
   * planning/codegen overhead from per-row compute. Not part of the driver
   * contract. */
 object DevProfile {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = DevSession()
     spark.range(1000).selectExpr("sum(id)").collect() // session warmup
     // optional args(1): comma-separated name prefixes to profile a subset
     val prefixes = if (args.length > 1) args(1).split(",").toSeq else Seq("")

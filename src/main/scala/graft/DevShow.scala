@@ -1,15 +1,10 @@
 package graft
-import org.apache.spark.sql.SparkSession
 /** Dev-only: print a named query's rows at a given SF dir. */
 object DevShow {
   def main(args: Array[String]): Unit = {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = DevSession()
     SparkEntry.queries(name)(spark, sfDir).show(100, false)
     Caches.releaseAll()
     spark.stop()

@@ -16,10 +16,14 @@ import org.apache.spark.unsafe.types.UTF8String
   * native vectorized parquet reader (whole-stage codegen, row-group
   * pushdown) does every byte of IO. This is the query-side face of
   * the same metadata the imperative API serves
-  * ([[ManifestStore.readRange]]/[[ManifestStore.readPointLong]]):
-  * a plain `df.where(col("ts_us").between(a, b))` — or the SQL a BI
-  * tool emits against a `USING graft` view — prunes segments by
-  * zone-map sidecars, equality probes additionally consult the bloom
+  * ([[ManifestStore.readRange]]/[[ManifestStore.readPointLong]] and
+  * their siblings), and BOTH faces skip through the one prover in the
+  * companion object ([[GraftFileIndex.excludes]]): the imperative
+  * readers hand it the Catalyst predicate their arguments describe,
+  * this index hands it the query's filters. A plain
+  * `df.where(col("ts_us").between(a, b))` — or the SQL a BI tool
+  * emits against a `USING graft` view — prunes segments by zone-map
+  * sidecars, equality probes additionally consult the bloom
   * sidecars, and the surviving files still carry the full residual
   * predicate (pruning is a strict optimization, never the filter).
   *
@@ -36,14 +40,17 @@ import org.apache.spark.unsafe.types.UTF8String
   * missing/torn sidecars, non-literal comparisons, casts, and
   * unrecognized shapes prove nothing and keep the segment. `And`
   * needs one excluding conjunct, `Or` needs both branches excluding.
-  * Kind discipline as in [[ManifestStore.readRange]]: 'l' bounds
-  * serve integral literals numerically, 's' bounds serve string
-  * literals in UTF-8 byte order ([[ManifestStore.utf8Cmp]]), and a
+  * Kind discipline: 'l' bounds serve integral literals numerically,
+  * 'd' bounds serve floating literals under Spark's float semantics,
+  * 's' bounds serve string literals in UTF-8 byte order
+  * ([[ManifestStore.utf8Cmp]]) — the orders disagree ("9" > "10" as
+  * strings), so a bound of another kind proves nothing — and a
   * recorded non-null count of ZERO excludes every null-rejecting
   * predicate on that column. At 100 TB the sidecars are one small
-  * object per segment, read driver-side and memoized per index
-  * instance — the same planning cost Delta/Iceberg pay for their
-  * stats, with no executor involvement. */
+  * object per segment, read driver-side once each
+  * ([[ManifestStore.readSidecar]]) and memoized per index instance —
+  * the same planning cost Delta/Iceberg pay for their stats, with no
+  * executor involvement. */
 final class GraftFileIndex(spark: SparkSession, tablePath: String,
     collection: String, asOfSeq: Long = Long.MaxValue) extends FileIndex {
 
@@ -70,32 +77,14 @@ final class GraftFileIndex(spark: SparkSession, tablePath: String,
 
   // sidecar + listing memos — per index instance, invalidated by
   // refresh()
-  private val statsMemo = new java.util.concurrent.ConcurrentHashMap[
-    Long, Map[String, (Char, String, String)]]()
-  private val bloomMemo = new java.util.concurrent.ConcurrentHashMap[
-    Long, Map[String, (Char, Int, Array[Byte])]]()
-  private val countMemo = new java.util.concurrent.ConcurrentHashMap[
-    (Long, String), Option[Long]]()
-  private val rowsMemo = new java.util.concurrent.ConcurrentHashMap[
-    Long, Option[Long]]()
+  private val sidecarMemo = new java.util.concurrent.ConcurrentHashMap[
+    Long, ManifestStore.Sidecar]()
   private val filesMemo = new java.util.concurrent.ConcurrentHashMap[
     Long, Seq[FileStatus]]()
 
-  private def statsOf(seg: Long): Map[String, (Char, String, String)] =
-    statsMemo.computeIfAbsent(seg,
-      s => ManifestStore.readSegStats(fs, tablePath, collection, s))
-
-  private def bloomsOf(seg: Long): Map[String, (Char, Int, Array[Byte])] =
-    bloomMemo.computeIfAbsent(seg,
-      s => ManifestStore.readSegBlooms(fs, tablePath, collection, s))
-
-  private def nonNullCount(seg: Long, column: String): Option[Long] =
-    countMemo.computeIfAbsent((seg, column), k =>
-      ManifestStore.readSegCount(fs, tablePath, collection, k._1, k._2))
-
-  private def rowsOf(seg: Long): Option[Long] =
-    rowsMemo.computeIfAbsent(seg,
-      s => ManifestStore.readSegRows(fs, tablePath, collection, s))
+  private def sidecarOf(seg: Long): ManifestStore.Sidecar =
+    sidecarMemo.computeIfAbsent(seg,
+      s => ManifestStore.readSidecar(fs, tablePath, collection, s))
 
   /** The snapshot's TOTAL row count served purely from `rows:` sidecar
     * tokens — Some only when EVERY pinned segment carries one (a single
@@ -103,7 +92,7 @@ final class GraftFileIndex(spark: SparkSession, tablePath: String,
     * [[graft.plans.MetadataAggRule]] answers a bare COUNT(*) from
     * without scheduling a task. */
   def metadataRowCount: Option[Long] = {
-    val counts = segs.map(rowsOf)
+    val counts = segs.map(sidecarOf(_).rows)
     if (counts.forall(_.isDefined)) Some(counts.flatten.sum) else None
   }
 
@@ -114,12 +103,13 @@ final class GraftFileIndex(spark: SparkSession, tablePath: String,
     * nulls); None = cannot prove (missing/wrong-kind entry without a
     * zero count), which disqualifies the whole rewrite. */
   private def segBounds(seg: Long, column: String,
-      kind: Char): Option[Option[(String, String)]] =
-    statsOf(seg).get(column) match {
+      kind: Char): Option[Option[(String, String)]] = {
+    val sc = sidecarOf(seg)
+    sc.bounds.get(column) match {
       case Some((k, lo, hi)) if k == kind => Some(Some((lo, hi)))
-      case _ =>
-        if (nonNullCount(seg, column).contains(0L)) Some(None) else None
+      case _ => if (sc.counts.get(column).contains(0L)) Some(None) else None
     }
+  }
 
   /** Snapshot-wide [min, max] of an INTEGRAL column from 'l'-kind
     * zone-map bounds (exact: recorded un-cast, numeric order).
@@ -212,7 +202,10 @@ final class GraftFileIndex(spark: SparkSession, tablePath: String,
 
   override def listFiles(partitionFilters: Seq[Expression],
       dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
-    val kept = segs.filterNot(s => dataFilters.exists(excludes(s, _)))
+    val kept = segs.filterNot { s =>
+      val sc = sidecarOf(s)
+      dataFilters.exists(GraftFileIndex.excludes(sc, _))
+    }
     Seq(PartitionDirectory(InternalRow.empty,
       kept.flatMap(segFiles).toArray))
   }
@@ -226,8 +219,7 @@ final class GraftFileIndex(spark: SparkSession, tablePath: String,
     // a version-pinned index re-resolves at the SAME ceiling: the pin
     // is part of the relation's identity, refresh only re-lists
     segs = resolveSegs()
-    statsMemo.clear(); bloomMemo.clear(); countMemo.clear()
-    rowsMemo.clear(); filesMemo.clear()
+    sidecarMemo.clear(); filesMemo.clear()
   }
 
   /** The segments' own merged schema, computed once at construction
@@ -243,8 +235,16 @@ final class GraftFileIndex(spark: SparkSession, tablePath: String,
         ManifestStore.segDir(tablePath, collection, s).toString): _*)
       .schema
   }
+}
 
-  // ---- proof-based exclusion ----------------------------------------
+/** The ONE segment-exclusion prover: a pure function of a segment's
+  * parsed sidecar ([[ManifestStore.Sidecar]]) and a Catalyst
+  * predicate. [[GraftFileIndex.listFiles]] applies it to the query's
+  * data filters, and every imperative reader of [[ManifestStore]]
+  * (range, point and range-count reads) applies it to the predicate
+  * it builds from its own arguments, so both faces skip exactly the
+  * same segments by the same proof. */
+object GraftFileIndex {
 
   private def litLong(l: Literal): Option[Long] = l.value match {
     case i: java.lang.Integer => Some(i.longValue)
@@ -265,8 +265,9 @@ final class GraftFileIndex(spark: SparkSession, tablePath: String,
     case _ => None
   }
 
-  private def dblBounds(seg: Long, name: String): Option[(Double, Double)] =
-    statsOf(seg).get(name) match {
+  private def dblBounds(sc: ManifestStore.Sidecar,
+      name: String): Option[(Double, Double)] =
+    sc.bounds.get(name) match {
       case Some(('d', lo, hi)) =>
         (lo.toDoubleOption, hi.toDoubleOption) match {
           case (Some(l), Some(h)) => Some((l, h))
@@ -275,8 +276,9 @@ final class GraftFileIndex(spark: SparkSession, tablePath: String,
       case _ => None
     }
 
-  private def longBounds(seg: Long, name: String): Option[(Long, Long)] =
-    statsOf(seg).get(name) match {
+  private def longBounds(sc: ManifestStore.Sidecar,
+      name: String): Option[(Long, Long)] =
+    sc.bounds.get(name) match {
       case Some(('l', lo, hi)) =>
         (lo.toLongOption, hi.toLongOption) match {
           case (Some(l), Some(h)) => Some((l, h))
@@ -285,23 +287,24 @@ final class GraftFileIndex(spark: SparkSession, tablePath: String,
       case _ => None
     }
 
-  private def strBounds(seg: Long, name: String): Option[(String, String)] =
-    statsOf(seg).get(name) match {
+  private def strBounds(sc: ManifestStore.Sidecar,
+      name: String): Option[(String, String)] =
+    sc.bounds.get(name) match {
       case Some(('s', lo, hi)) => Some((lo, hi))
       case _ => None
     }
 
   /** True iff the recorded non-null count proves a null-REJECTING
     * predicate on `name` matches nothing in this segment. */
-  private def allNull(seg: Long, name: String): Boolean =
-    nonNullCount(seg, name).contains(0L)
+  private def allNull(sc: ManifestStore.Sidecar, name: String): Boolean =
+    sc.counts.get(name).contains(0L)
 
   /** True iff the sidecar PROVES the segment holds no null in `name`:
     * total rows == the column's non-null count (both tokens present).
     * An `IS NULL` predicate then matches nothing here. Either token
     * missing proves nothing — keep the segment. */
-  private def noNulls(seg: Long, name: String): Boolean =
-    rowsOf(seg).exists(r => nonNullCount(seg, name).contains(r))
+  private def noNulls(sc: ManifestStore.Sidecar, name: String): Boolean =
+    sc.rows.exists(r => sc.counts.get(name).contains(r))
 
   private sealed trait Cmp
   private case object Eq extends Cmp
@@ -310,12 +313,12 @@ final class GraftFileIndex(spark: SparkSession, tablePath: String,
   private case object Lt extends Cmp
   private case object Le extends Cmp
 
-  /** Does `col <cmp> lit` provably match no row of `seg`? */
-  private def cmpExcludes(seg: Long, a: Attribute, cmp: Cmp,
-      l: Literal): Boolean = {
-    if (allNull(seg, a.name)) return true
+  /** Does `col <cmp> lit` provably match no row of the segment? */
+  private def cmpExcludes(sc: ManifestStore.Sidecar, a: Attribute,
+      cmp: Cmp, l: Literal): Boolean = {
+    if (allNull(sc, a.name)) return true
     litLong(l).map { v =>
-      val boundsExcl = longBounds(seg, a.name).exists { case (lo, hi) =>
+      val boundsExcl = longBounds(sc, a.name).exists { case (lo, hi) =>
         cmp match {
           case Eq => v < lo || v > hi
           case Gt => hi <= v
@@ -326,16 +329,15 @@ final class GraftFileIndex(spark: SparkSession, tablePath: String,
       }
       // bloom probes answer point absence INDEPENDENTLY of zone-map
       // coverage (a column configured with blooms but not zone-mapped
-      // — the event_id shape — still prunes equality), mirroring
-      // readPointLong's independent checks
-      def bloomExcl = cmp == Eq && (bloomsOf(seg).get(a.name) match {
+      // — the event_id shape — still prunes equality)
+      def bloomExcl = cmp == Eq && (sc.blooms.get(a.name) match {
         case Some(('l', m, bytes)) =>
           !ManifestStore.bloomMayContain(m, bytes, v)
         case _ => false // 's'-kind bits prove nothing for a long probe
       })
       boundsExcl || bloomExcl
     }.orElse(litUtf8(l).map { u =>
-      val boundsExcl = strBounds(seg, a.name).exists { case (lo, hi) =>
+      val boundsExcl = strBounds(sc, a.name).exists { case (lo, hi) =>
         val v = u.toString
         cmp match {
           case Eq => ManifestStore.utf8Cmp(v, lo) < 0 ||
@@ -348,8 +350,8 @@ final class GraftFileIndex(spark: SparkSession, tablePath: String,
       }
       // string-kind bloom probe — the uuid/doc-id point-lookup axis:
       // independent of zone-map coverage, same discipline as the long
-      // branch (and as readPointString's imperative face)
-      def bloomExcl = cmp == Eq && (bloomsOf(seg).get(a.name) match {
+      // branch
+      def bloomExcl = cmp == Eq && (sc.blooms.get(a.name) match {
         case Some(('s', m, bytes)) =>
           !ManifestStore.bloomMayContainStr(m, bytes, u)
         case _ => false // 'l'-kind bits prove nothing for a string probe
@@ -365,7 +367,7 @@ final class GraftFileIndex(spark: SparkSession, tablePath: String,
       // against a NaN bound ever proves exclusion — sound because in
       // Spark NaN = NaN, NaN > x, and NaN >= x are all TRUE. No bloom
       // arm: float point-probes are a modeling smell, bounds only.
-      dblBounds(seg, a.name).exists { case (lo, hi) =>
+      dblBounds(sc, a.name).exists { case (lo, hi) =>
         import ManifestStore.{dCmpPred => c}
         cmp match {
           case Eq => c(v, lo) < 0 || c(v, hi) > 0
@@ -383,49 +385,52 @@ final class GraftFileIndex(spark: SparkSession, tablePath: String,
     case Eq => Eq
   }
 
-  private def excludes(seg: Long, e: Expression): Boolean = e match {
-    case And(l, r) => excludes(seg, l) || excludes(seg, r)
-    case Or(l, r) => excludes(seg, l) && excludes(seg, r)
-    case EqualTo(a: Attribute, l: Literal) => cmpExcludes(seg, a, Eq, l)
-    case EqualTo(l: Literal, a: Attribute) => cmpExcludes(seg, a, Eq, l)
+  /** Does predicate `e` provably match no row of the segment whose
+    * sidecar is `sc`? Unrecognized shapes prove nothing (false). */
+  private[sources] def excludes(sc: ManifestStore.Sidecar,
+      e: Expression): Boolean = e match {
+    case And(l, r) => excludes(sc, l) || excludes(sc, r)
+    case Or(l, r) => excludes(sc, l) && excludes(sc, r)
+    case EqualTo(a: Attribute, l: Literal) => cmpExcludes(sc, a, Eq, l)
+    case EqualTo(l: Literal, a: Attribute) => cmpExcludes(sc, a, Eq, l)
     // null-safe equality against a non-null literal rejects nulls too
     case EqualNullSafe(a: Attribute, l: Literal) if l.value != null =>
-      cmpExcludes(seg, a, Eq, l)
+      cmpExcludes(sc, a, Eq, l)
     case EqualNullSafe(l: Literal, a: Attribute) if l.value != null =>
-      cmpExcludes(seg, a, Eq, l)
-    case GreaterThan(a: Attribute, l: Literal) => cmpExcludes(seg, a, Gt, l)
+      cmpExcludes(sc, a, Eq, l)
+    case GreaterThan(a: Attribute, l: Literal) => cmpExcludes(sc, a, Gt, l)
     case GreaterThan(l: Literal, a: Attribute) =>
-      cmpExcludes(seg, a, flip(Gt), l)
+      cmpExcludes(sc, a, flip(Gt), l)
     case GreaterThanOrEqual(a: Attribute, l: Literal) =>
-      cmpExcludes(seg, a, Ge, l)
+      cmpExcludes(sc, a, Ge, l)
     case GreaterThanOrEqual(l: Literal, a: Attribute) =>
-      cmpExcludes(seg, a, flip(Ge), l)
-    case LessThan(a: Attribute, l: Literal) => cmpExcludes(seg, a, Lt, l)
+      cmpExcludes(sc, a, flip(Ge), l)
+    case LessThan(a: Attribute, l: Literal) => cmpExcludes(sc, a, Lt, l)
     case LessThan(l: Literal, a: Attribute) =>
-      cmpExcludes(seg, a, flip(Lt), l)
+      cmpExcludes(sc, a, flip(Lt), l)
     case LessThanOrEqual(a: Attribute, l: Literal) =>
-      cmpExcludes(seg, a, Le, l)
+      cmpExcludes(sc, a, Le, l)
     case LessThanOrEqual(l: Literal, a: Attribute) =>
-      cmpExcludes(seg, a, flip(Le), l)
+      cmpExcludes(sc, a, flip(Le), l)
     case In(a: Attribute, vs) if vs.nonEmpty &&
         vs.forall(_.isInstanceOf[Literal]) =>
-      vs.forall(v => cmpExcludes(seg, a, Eq, v.asInstanceOf[Literal]))
-    case IsNotNull(a: Attribute) => allNull(seg, a.name)
+      vs.forall(v => cmpExcludes(sc, a, Eq, v.asInstanceOf[Literal]))
+    case IsNotNull(a: Attribute) => allNull(sc, a.name)
     // IS NULL excludes a segment the sidecar PROVES null-free
     // (rows == non-null count); `a <=> null` is the same predicate
-    case IsNull(a: Attribute) => noNulls(seg, a.name)
+    case IsNull(a: Attribute) => noNulls(sc, a.name)
     case EqualNullSafe(a: Attribute, l: Literal) if l.value == null =>
-      noNulls(seg, a.name)
+      noNulls(sc, a.name)
     case EqualNullSafe(l: Literal, a: Attribute) if l.value == null =>
-      noNulls(seg, a.name)
+      noNulls(sc, a.name)
     // prefix probe (the reference's key-prefix listing shape): every
     // string with prefix p sorts in [p, next-prefix); a segment is out
     // when its hi < p, or its lo > p WITHOUT carrying the prefix — a
     // p-prefixed string shares p's bytes, so it sorts below any
     // greater string that first diverges inside the prefix
     case StartsWith(a: Attribute, l: Literal) =>
-      allNull(seg, a.name) || litUtf8(l).exists { u =>
-        strBounds(seg, a.name).exists { case (lo, hi) =>
+      allNull(sc, a.name) || litUtf8(l).exists { u =>
+        strBounds(sc, a.name).exists { case (lo, hi) =>
           val p = u.toString
           ManifestStore.utf8Cmp(hi, p) < 0 ||
             (ManifestStore.utf8Cmp(lo, p) > 0 && !lo.startsWith(p))

@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.{coalesce, col, collect_set, count, lit, max, min, shiftright, spark_partition_id, when, xxhash64}
+import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual, Literal}
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** Object-store-safe document store: immutable SEGMENT directories
@@ -284,10 +285,10 @@ object ManifestStore {
           // the discriminator for overlapping post-append key ranges
           // zone maps cannot separate. Advisory: no sidecar → no
           // refinement; false positives only cost an extra rewrite.
-          def bloomHits(seg: Long, sLo: String, sHi: String): Boolean =
+          def bloomHits(sc: Sidecar, sLo: String, sHi: String): Boolean =
             (keySet, keyKind) match {
               case (Some(ks), 'l') =>
-                readSegBlooms(fs, tablePath, c, seg).get(key) match {
+                sc.blooms.get(key) match {
                   case Some(('l', m, bytes)) =>
                     (sLo.toLongOption, sHi.toLongOption) match {
                       case (Some(l), Some(h)) =>
@@ -299,7 +300,7 @@ object ManifestStore {
                   case _ => true
                 }
               case (Some(ks), 's') =>
-                readSegBlooms(fs, tablePath, c, seg).get(key) match {
+                sc.blooms.get(key) match {
                   case Some(('s', m, bytes)) =>
                     ks.iterator.map(_.asInstanceOf[String])
                       .filter(k0 =>
@@ -313,18 +314,20 @@ object ManifestStore {
             }
           if (b.isNullAt(0)) Seq.empty // only NULL keys: match nothing
           else live.filter { seg =>
-            readSegStats(fs, tablePath, c, seg).get(key) match {
+            // one sidecar read per candidate: bounds and blooms alike
+            val sc = readSidecar(fs, tablePath, c, seg)
+            sc.bounds.get(key) match {
               case Some((k, sLo, sHi)) if k == keyKind && keyKind == 'l' =>
                 (sLo.toLongOption, sHi.toLongOption) match {
                   case (Some(l), Some(h)) =>
                     !(h < b.getLong(0) || l > b.getLong(1)) &&
-                      setHits(sLo, sHi) && bloomHits(seg, sLo, sHi)
+                      setHits(sLo, sHi) && bloomHits(sc, sLo, sHi)
                   case _ => true
                 }
               case Some((k, sLo, sHi)) if k == keyKind =>
                 !(utf8Cmp(sHi, b.getString(0)) < 0 ||
                   utf8Cmp(sLo, b.getString(1)) > 0) &&
-                  setHits(sLo, sHi) && bloomHits(seg, sLo, sHi)
+                  setHits(sLo, sHi) && bloomHits(sc, sLo, sHi)
               case _ => true // no stats / wrong kind: rewrite
             }
           }
@@ -1227,17 +1230,11 @@ object ManifestStore {
     readAsOfInferred(spark, tablePath, c,
       versionAtTime(spark, tablePath, c, tsMs))
 
-  /** [[readSince]] addressed by wall-clock timestamp (Delta's
+  /** [[readSinceInferred]] addressed by wall-clock timestamp (Delta's
     * `startingTimestamp` analogue): the change feed from the snapshot
     * the instant addresses — rows live now that were not live at
     * [[versionAtTime]]'s resolved commit. Same resolution contract,
     * same compaction/tombstone caveats as [[readSince]]. */
-  def readSinceTime(spark: SparkSession, tablePath: String, c: String,
-      tsMs: Long): DataFrame =
-    readSince(spark, tablePath, c, versionAtTime(spark, tablePath, c, tsMs))
-
-  /** [[readSinceInferred]] addressed by wall-clock timestamp — the
-    * generalized-table twin of [[readSinceTime]]. */
   def readSinceTimeInferred(spark: SparkSession, tablePath: String,
       c: String, tsMs: Long): DataFrame =
     readSinceInferred(spark, tablePath, c,
@@ -1361,7 +1358,8 @@ object ManifestStore {
     * collection had at `tsMs` — [[versionAtTime]]'s resolution
     * (ceiling beyond latest, fail-loud below the horizon), then the
     * ordinary restore commit. Completes the timestamp surface: read
-    * ([[readAsOfTime]]), change feed ([[readSinceTime]]), restore. */
+    * ([[readAsOfTime]]), change feed ([[readSinceTimeInferred]]),
+    * restore. */
   def restoreToTime(spark: SparkSession, tablePath: String, c: String,
       tsMs: Long): Long =
     restoreVersion(spark, tablePath, c,
@@ -1436,11 +1434,14 @@ object ManifestStore {
     * compactor agrees. Applies to segments written AFTER the call
     * (stats are advisory: older segments simply never prune). Each
     * column's stat is typed by its KIND — integral columns record
-    * numeric bounds served by [[readRangeLong]], everything else
-    * records string bounds served by [[readRange]] — and a range read
-    * only ever prunes on a stat of its own kind, because the two
-    * orders disagree ("9" > "10" as strings) and a cross-kind prune
-    * would silently drop matching segments. */
+    * numeric bounds served by [[readRangeLong]], floating columns
+    * double bounds served by [[readRangeDouble]], everything else
+    * string bounds served by [[readRange]] — and every read, on the
+    * imperative and the connector face alike, prunes through the one
+    * prover ([[GraftFileIndex.excludes]]), which only ever uses a stat
+    * of the probe's own kind: the orders disagree ("9" > "10" as
+    * strings) and a cross-kind prune would silently drop matching
+    * segments. */
   def setZoneMapColumns(spark: SparkSession, tablePath: String,
       cols: Seq[String]): Unit = {
     require(cols.nonEmpty, "zone-map column set must be non-empty")
@@ -1607,36 +1608,6 @@ object ManifestStore {
       java.util.Base64.getUrlEncoder.withoutPadding.encodeToString(bytes)
   }
 
-  /** The segment's bloom bitsets by column: (kind, bits, bitset) —
-    * kind 'l' bitsets were built from the long hash, 's' from the
-    * UTF-8 byte hash; a probe must match the kind or prove nothing.
-    * Missing / torn sidecars parse to empty ("no bloom — read
-    * conservatively"), the zone-map discipline. */
-  private[graft] def readSegBlooms(fs: FileSystem, tablePath: String,
-      c: String, seg: Long): Map[String, (Char, Int, Array[Byte])] =
-    readPtr(fs, statsPath(tablePath, c, seg)) match {
-      case Some(s) if s.startsWith(ZmPrefix) && s.endsWith(SegsSuffix) =>
-        s.stripPrefix(ZmPrefix).stripSuffix(SegsSuffix)
-          .split(';').toSeq
-          .filter(e => e.startsWith("bf:") || e.startsWith("bfs:"))
-          .flatMap { e =>
-            e.split(':') match {
-              case Array(pfx, n, bits, b64) =>
-                (bits.toIntOption, scala.util.Try(
-                  java.util.Base64.getUrlDecoder.decode(b64)).toOption) match {
-                  case (Some(m), Some(bytes))
-                      if m > 0 && (m & (m - 1)) == 0 &&
-                        bytes.length == m / 8 =>
-                    val kind = if (pfx == "bfs") 's' else 'l'
-                    Some(zmDec(n) -> (kind, m, bytes))
-                  case _ => None
-                }
-              case _ => None
-            }
-          }.toMap
-      case _ => Map.empty
-    }
-
   /** May this bitset contain long value `v`? False only when at least
     * one probe position is unset — definitive absence. */
   private[graft] def bloomMayContain(bits: Int, bytes: Array[Byte],
@@ -1660,31 +1631,15 @@ object ManifestStore {
     * "definitely absent" are never listed or planned — on an
     * interleaved-key table (post-append, pre-compaction) the blooms
     * are what keeps a needle lookup from scanning every
-    * range-overlapping segment. Residual `column = v` still applies
-    * (pruning is an optimization, never the filter), so it also pushes
-    * into the surviving parquet scans' row-group stats. */
+    * range-overlapping segment. The proof is the connector's own
+    * ([[GraftFileIndex.excludes]] over `column = v`). Residual
+    * `column = v` still applies (pruning is an optimization, never the
+    * filter), so it also pushes into the surviving parquet scans'
+    * row-group stats. */
   def readPointLong(spark: SparkSession, tablePath: String, c: String,
-      v: Long, column: String = ZoneMapColumn): DataFrame = {
-    val fs = fsOf(spark, tablePath)
-    val segs = resolve(fs, tablePath, c).liveSegs.toSeq.flatten
-    val kept = segs.filter { s =>
-      val inRange = readSegStats(fs, tablePath, c, s).get(column) match {
-        case Some(('l', sLo, sHi)) =>
-          (sLo.toLongOption, sHi.toLongOption) match {
-            case (Some(l), Some(h)) => l <= v && v <= h
-            case _ => true
-          }
-        case _ => true
-      }
-      inRange && (readSegBlooms(fs, tablePath, c, s).get(column) match {
-        case Some(('l', m, bytes)) => bloomMayContain(m, bytes, v)
-        case _ => true // 's'-kind or absent: prove nothing
-      })
-    }
-    rangeResidual(
-      readSegsInferred(spark, tablePath, c, kept, segs), column,
-      col(column) === lit(v))
-  }
+      v: Long, column: String = ZoneMapColumn): DataFrame =
+    prunedRead(spark, tablePath, c, column,
+      EqualTo(attr(column, v), Literal(v)), col(column) === lit(v))
 
   /** [[readPointLong]] for a STRING key — the reference's native row
     * identity (a uuid string, main.go:330; key `{collection}/{uuid}`,
@@ -1695,25 +1650,9 @@ object ManifestStore {
     * the key space) the blooms are the only discriminator — an absent
     * uuid reads NOTHING. Residual `column = v` still applies. */
   def readPointString(spark: SparkSession, tablePath: String, c: String,
-      v: String, column: String): DataFrame = {
-    val fs = fsOf(spark, tablePath)
-    val u = org.apache.spark.unsafe.types.UTF8String.fromString(v)
-    val segs = resolve(fs, tablePath, c).liveSegs.toSeq.flatten
-    val kept = segs.filter { s =>
-      val inRange = readSegStats(fs, tablePath, c, s).get(column) match {
-        case Some(('s', sLo, sHi)) =>
-          utf8Cmp(sLo, v) <= 0 && utf8Cmp(v, sHi) <= 0
-        case _ => true
-      }
-      inRange && (readSegBlooms(fs, tablePath, c, s).get(column) match {
-        case Some(('s', m, bytes)) => bloomMayContainStr(m, bytes, u)
-        case _ => true // 'l'-kind or absent: prove nothing
-      })
-    }
-    rangeResidual(
-      readSegsInferred(spark, tablePath, c, kept, segs), column,
-      col(column) === lit(v))
-  }
+      v: String, column: String): DataFrame =
+    prunedRead(spark, tablePath, c, column,
+      EqualTo(attr(column, v), Literal(v)), col(column) === lit(v))
 
   /** Stat kind for a column type: 'l' = integral (numeric-ordered
     * bounds), 'd' = floating (double bounds under Spark's float total
@@ -1831,7 +1770,9 @@ object ManifestStore {
       // '='-less tokens (`cnt:<encName>:<n>`) — the zone-map parser
       // skips them, so pre-count readers stay compatible; a
       // fully-range-covered segment's COUNT can then be served from
-      // metadata alone ([[countRangeLongPlanned]])
+      // metadata alone ([[countRangeLongPlanned]]), and a zero count
+      // lets the prover ([[GraftFileIndex.excludes]]) skip the segment
+      // for every null-rejecting predicate on the column
       val cntToks = zmCols.zipWithIndex.flatMap { case ((n, _), i) =>
         m.get(s"zm_n_$i").collect { case v: Long => s"cnt:${zmEnc(n)}:$v" }
       }
@@ -1993,54 +1934,76 @@ object ManifestStore {
     parts.map(segFor)
   }
 
-  /** The segment's recorded zone map: column → (kind, min, max), empty
-    * when the sidecar is missing, torn, or unparseable (= "cannot
-    * prune"). Entries without a kind marker (pre-generalization
-    * sidecars) are string-kind — that is what they recorded. */
-  private[sources] def readSegStats(fs: FileSystem, tablePath: String,
-      c: String, seg: Long): Map[String, (Char, String, String)] =
+  /** One segment's sidecar, parsed once: zone-map `bounds` by column
+    * (kind, min, max), NON-NULL `counts` by column (`cnt:` tokens),
+    * the TOTAL row count (`rows:`), and `blooms` by column (kind,
+    * bits, bitset — 'l' bitsets hash the widened long, 's' the UTF-8
+    * bytes; a probe must match the kind or prove nothing). Every
+    * sidecar consumer reads its fields: the exclusion prover
+    * ([[GraftFileIndex.excludes]]), the metadata counts, the segment
+    * inventory and the merge prune. */
+  private[graft] final case class Sidecar(
+      bounds: Map[String, (Char, String, String)],
+      counts: Map[String, Long],
+      rows: Option[Long],
+      blooms: Map[String, (Char, Int, Array[Byte])])
+
+  /** Read and parse segment `seg`'s sidecar. A missing, torn (no
+    * terminator) or unparseable one is all-empty, and a sidecar
+    * written before a token existed lacks that field: both prove
+    * nothing, so every reader keeps (or scans) the segment. Each token
+    * is matched against every field's grammar independently. Bound
+    * entries without a kind marker (pre-generalization sidecars) are
+    * string-kind — that is what they recorded. */
+  private[graft] def readSidecar(fs: FileSystem, tablePath: String,
+      c: String, seg: Long): Sidecar =
     readPtr(fs, statsPath(tablePath, c, seg)) match {
       case Some(s) if s.startsWith(ZmPrefix) && s.endsWith(SegsSuffix) =>
-        s.stripPrefix(ZmPrefix).stripSuffix(SegsSuffix)
-          .split(';').toSeq.filter(_.nonEmpty)
-          .flatMap { entry =>
-            entry.split('=') match {
-              case Array(name, range) => range.split(',') match {
-                case Array(lo, hi) =>
-                  // name is URL-encoded, so a raw ':' can only be the
-                  // kind marker
-                  val (n, kind) = name.split(':') match {
-                    case Array(n0, k) if k.length == 1 => (n0, k.head)
-                    case _ => (name, 's')
-                  }
-                  Some(zmDec(n) -> (kind, zmDec(lo), zmDec(hi)))
-                case _ => None
-              }
+        val toks = s.stripPrefix(ZmPrefix).stripSuffix(SegsSuffix)
+          .split(';').toSeq
+        val bounds = toks.flatMap { entry =>
+          entry.split('=') match {
+            case Array(name, range) => range.split(',') match {
+              case Array(lo, hi) =>
+                // name is URL-encoded, so a raw ':' can only be the
+                // kind marker
+                val (n, kind) = name.split(':') match {
+                  case Array(n0, k) if k.length == 1 => (n0, k.head)
+                  case _ => (name, 's')
+                }
+                Some(zmDec(n) -> (kind, zmDec(lo), zmDec(hi)))
+              case _ => None
+            }
+            case _ => None
+          }
+        }.toMap
+        // the FIRST `cnt:` token per column decides (an unparseable
+        // count proves nothing)
+        val counts = toks.filter(_.startsWith("cnt:")).map(_.split(':'))
+          .collect { case Array(_, n, v) => zmDec(n) -> v.toLongOption }
+          .distinctBy(_._1).collect { case (n, Some(v)) => n -> v }.toMap
+        val rows = toks.collectFirst { case e if e.startsWith("rows:") =>
+          e.stripPrefix("rows:").toLongOption
+        }.flatten
+        val blooms = toks
+          .filter(e => e.startsWith("bf:") || e.startsWith("bfs:"))
+          .flatMap { e =>
+            e.split(':') match {
+              case Array(pfx, n, bits, b64) =>
+                (bits.toIntOption, scala.util.Try(
+                  java.util.Base64.getUrlDecoder.decode(b64)).toOption) match {
+                  case (Some(m), Some(bytes))
+                      if m > 0 && (m & (m - 1)) == 0 &&
+                        bytes.length == m / 8 =>
+                    val kind = if (pfx == "bfs") 's' else 'l'
+                    Some(zmDec(n) -> (kind, m, bytes))
+                  case _ => None
+                }
               case _ => None
             }
           }.toMap
-      case _ => Map.empty
-    }
-
-  /** The segment's recorded NON-NULL count for `column` (the
-    * sidecar's `cnt:<encName>:<n>` token), if the sidecar exists,
-    * parses, and carries one — pre-count sidecars yield None
-    * ("must scan"). */
-  private[sources] def readSegCount(fs: FileSystem, tablePath: String,
-      c: String, seg: Long, column: String): Option[Long] =
-    readPtr(fs, statsPath(tablePath, c, seg)) match {
-      case Some(s) if s.startsWith(ZmPrefix) && s.endsWith(SegsSuffix) =>
-        s.stripPrefix(ZmPrefix).stripSuffix(SegsSuffix)
-          .split(';').toSeq
-          .collectFirst {
-            case e if e.startsWith("cnt:") &&
-                (e.split(':') match {
-                  case Array(_, n, _) => zmDec(n) == column
-                  case _ => false
-                }) =>
-              e.split(':')(2).toLongOption
-          }.flatten
-      case _ => None
+        Sidecar(bounds, counts, rows, blooms)
+      case _ => Sidecar(Map.empty, Map.empty, None, Map.empty)
     }
 
   /** Sidecar-served row counts for a set of segments, each read ONCE —
@@ -2053,23 +2016,8 @@ object ManifestStore {
   def segRowCounts(spark: SparkSession, tablePath: String, c: String,
       segs: Seq[Long]): Map[Long, Option[Long]] = {
     val fs = fsOf(spark, tablePath)
-    segs.distinct.map(s => s -> readSegRows(fs, tablePath, c, s)).toMap
+    segs.distinct.map(s => s -> readSidecar(fs, tablePath, c, s).rows).toMap
   }
-
-  /** The segment's recorded TOTAL row count (the sidecar's `rows:<n>`
-    * token), if the sidecar exists, parses, and carries one —
-    * pre-rows sidecars yield None ("must scan"). */
-  private[sources] def readSegRows(fs: FileSystem, tablePath: String,
-      c: String, seg: Long): Option[Long] =
-    readPtr(fs, statsPath(tablePath, c, seg)) match {
-      case Some(s) if s.startsWith(ZmPrefix) && s.endsWith(SegsSuffix) =>
-        s.stripPrefix(ZmPrefix).stripSuffix(SegsSuffix)
-          .split(';').toSeq
-          .collectFirst { case e if e.startsWith("rows:") =>
-            e.stripPrefix("rows:").toLongOption
-          }.flatten
-      case _ => None
-    }
 
   /** Bare COUNT(*) served from METADATA wherever possible: every
     * segment carrying a `rows:` token contributes it without being
@@ -2086,7 +2034,7 @@ object ManifestStore {
     var nMeta = 0
     val toScan = Seq.newBuilder[Long]
     segs.foreach { seg =>
-      readSegRows(fs, tablePath, c, seg) match {
+      readSidecar(fs, tablePath, c, seg).rows match {
         case Some(n) => meta += n; nMeta += 1
         case None => toScan += seg
       }
@@ -2098,92 +2046,53 @@ object ManifestStore {
     (meta + scanned, nMeta, scanSegs.size)
   }
 
-  /** [[countRowsPlanned]] without the observability tuple. */
-  def countRows(spark: SparkSession, tablePath: String, c: String): Long =
-    countRowsPlanned(spark, tablePath, c)._1
-
   /** COUNT over a numeric range served from METADATA wherever
-    * possible: a segment whose recorded [min,max] for `column` lies
-    * fully inside [lo,hi] contributes its sidecar row count without
-    * being listed, planned, or read (at 100 TB a dashboard's "events
-    * this week" touches two boundary segments instead of the week);
-    * non-intersecting segments contribute zero; only boundary
-    * segments — plus any lacking stats or a count — are scanned, in
-    * ONE batched residual-filtered read. NULLs never count: the
-    * metadata path serves the sidecar's NON-NULL count for the
-    * column, matching the residual predicate's null exclusion
-    * exactly. Returns
-    * (total, metaServedSegs, scannedSegs, prunedSegs) so the serving
-    * split is observable and spec-pinned. */
+    * possible: a segment the prover shows holds no `column` value
+    * outside [lo,hi] (neither `column < lo` nor `column > hi` can
+    * match) contributes its sidecar row count without being listed,
+    * planned, or read (at 100 TB a dashboard's "events this week"
+    * touches two boundary segments instead of the week); segments the
+    * prover excludes from `lo <= column <= hi` contribute zero; only
+    * boundary segments — plus any lacking stats or a count — are
+    * scanned, in ONE batched residual-filtered read. NULLs never
+    * count: the metadata path serves the sidecar's NON-NULL count for
+    * the column, matching the residual predicate's null exclusion
+    * exactly. Returns (total, metaServedSegs, scannedSegs, prunedSegs)
+    * so the serving split is observable and spec-pinned. */
   def countRangeLongPlanned(spark: SparkSession, tablePath: String,
-      c: String, lo: Long, hi: Long, column: String): (Long, Int, Int, Int) = {
-    val fs = fsOf(spark, tablePath)
-    val segs = resolve(fs, tablePath, c).liveSegs.toSeq.flatten
-    var meta = 0L
-    var nMeta = 0
-    var nPruned = 0
-    val toScan = Seq.newBuilder[Long]
-    segs.foreach { seg =>
-      val stats = readSegStats(fs, tablePath, c, seg)
-      stats.get(column) match {
-        case Some(('l', sLo, sHi)) =>
-          (sLo.toLongOption, sHi.toLongOption) match {
-            case (Some(l), Some(h)) if h < lo || l > hi => nPruned += 1
-            case (Some(l), Some(h)) if l >= lo && h <= hi =>
-              readSegCount(fs, tablePath, c, seg, column) match {
-                case Some(n) => meta += n; nMeta += 1
-                case None => toScan += seg
-              }
-            case _ => toScan += seg
-          }
-        case _ => toScan += seg
-      }
-    }
-    val scanSegs = toScan.result()
-    val scanned =
-      if (scanSegs.isEmpty) 0L
-      else readSegsInferred(spark, tablePath, c, scanSegs, scanSegs)
-        .where(col(column) >= lo && col(column) <= hi).count()
-    (meta + scanned, nMeta, scanSegs.size, nPruned)
-  }
+      c: String, lo: Long, hi: Long, column: String): (Long, Int, Int, Int) =
+    countRangePlanned(spark, tablePath, c, lo, hi, column)
 
-  /** [[countRangeLongPlanned]] without the observability tuple. */
-  def countRangeLong(spark: SparkSession, tablePath: String, c: String,
-      lo: Long, hi: Long, column: String): Long =
-    countRangeLongPlanned(spark, tablePath, c, lo, hi, column)._1
-
-  /** [[countRangeLongPlanned]] for FLOATING columns: segments fully
-    * inside [lo, hi] under [[dCmpPred]] serve their sidecar non-null
-    * counts without a read; partial overlaps scan with the residual.
-    * NaN discipline makes the metadata serve SOUND: a segment holding
-    * any NaN records hi = NaN (Spark's max order), which is never
-    * proven ≤ a finite probe hi — such segments always scan, so a
-    * finite-range count can never serve NaN rows from metadata (they
-    * would not match the residual either). */
+  /** [[countRangeLongPlanned]] for FLOATING columns, proven under
+    * [[dCmpPred]]. NaN discipline makes the metadata serve SOUND: a
+    * segment holding any NaN records hi = NaN (Spark's max order),
+    * which never proves `column > hi` empty for a finite hi — such
+    * segments always scan, so a finite-range count can never serve
+    * NaN rows from metadata (they would not match the residual
+    * either). */
   def countRangeDoublePlanned(spark: SparkSession, tablePath: String,
       c: String, lo: Double, hi: Double,
-      column: String): (Long, Int, Int, Int) = {
+      column: String): (Long, Int, Int, Int) =
+    countRangePlanned(spark, tablePath, c, lo, hi, column)
+
+  private def countRangePlanned(spark: SparkSession, tablePath: String,
+      c: String, lo: Any, hi: Any, column: String): (Long, Int, Int, Int) = {
     val fs = fsOf(spark, tablePath)
     val segs = resolve(fs, tablePath, c).liveSegs.toSeq.flatten
+    val a = attr(column, lo)
+    val (l, h) = (Literal(lo), Literal(hi))
     var meta = 0L
     var nMeta = 0
     var nPruned = 0
     val toScan = Seq.newBuilder[Long]
     segs.foreach { seg =>
-      readSegStats(fs, tablePath, c, seg).get(column) match {
-        case Some(('d', sLo, sHi)) =>
-          (sLo.toDoubleOption, sHi.toDoubleOption) match {
-            case (Some(l), Some(h))
-                if dCmpPred(h, lo) < 0 || dCmpPred(l, hi) > 0 =>
-              nPruned += 1
-            case (Some(l), Some(h))
-                if dCmpPred(l, lo) >= 0 && dCmpPred(h, hi) <= 0 =>
-              readSegCount(fs, tablePath, c, seg, column) match {
-                case Some(n) => meta += n; nMeta += 1
-                case None => toScan += seg
-              }
-            case _ => toScan += seg
-          }
+      val sc = readSidecar(fs, tablePath, c, seg)
+      def excl(e: Expression) = GraftFileIndex.excludes(sc, e)
+      if (excl(And(GreaterThanOrEqual(a, l), LessThanOrEqual(a, h))))
+        nPruned += 1
+      else sc.counts.get(column) match {
+        case Some(n) if excl(LessThan(a, l)) && excl(GreaterThan(a, h)) =>
+          meta += n; nMeta += 1
         case _ => toScan += seg
       }
     }
@@ -2191,131 +2100,77 @@ object ManifestStore {
     val scanned =
       if (scanSegs.isEmpty) 0L
       else readSegsInferred(spark, tablePath, c, scanSegs, scanSegs)
-        .where(col(column) >= lo && col(column) <= hi).count()
+        .where(col(column) >= lit(lo) && col(column) <= lit(hi)).count()
     (meta + scanned, nMeta, scanSegs.size, nPruned)
   }
-
-  /** [[countRangeDoublePlanned]] without the observability tuple. */
-  def countRangeDouble(spark: SparkSession, tablePath: String, c: String,
-      lo: Double, hi: Double, column: String): Long =
-    countRangeDoublePlanned(spark, tablePath, c, lo, hi, column)._1
 
   /** ZONE-MAP-PRUNED range read: rows of `c` with `column` in
     * [lo, hi] (inclusive, string comparison — the column is cast to
-    * string in both the stats and the residual predicate, and the
-    * driver-side prune compares UTF-8 BYTES, because that is the
-    * ordering Spark's min/max collected the stats under
-    * (`UTF8String.compareTo` is unsigned byte order; Java's
+    * string in both the stats and the residual predicate). The prune
+    * is [[GraftFileIndex.excludes]] over `lo <= column <= hi` with
+    * STRING literals, so only 's'-kind bounds serve it — compared in
+    * UTF-8 BYTE order, the ordering Spark's min/max collected them
+    * under (`UTF8String.compareTo` is unsigned byte order; Java's
     * `String.compareTo` is UTF-16 code units, which disagrees for
-    * supplementary-plane text and would mis-prune).
-    * Segments whose recorded range cannot intersect are skipped
-    * WITHOUT being listed or planned; segments lacking stats are read
-    * conservatively. The residual predicate still applies — pruning is
-    * a strict optimization, never the filter itself — and pushes into
-    * the parquet scan of the surviving segments, so row-group skipping
+    * supplementary-plane text and would mis-prune) — while numeric
+    * bounds, ordered differently ("9" > "10"), prove nothing.
+    * Segments the proof excludes are skipped WITHOUT being listed or
+    * planned; segments lacking stats are read conservatively. The
+    * residual predicate still applies — pruning is a strict
+    * optimization, never the filter itself — and pushes into the
+    * parquet scan of the surviving segments, so row-group skipping
     * still happens inside them. */
   def readRange(spark: SparkSession, tablePath: String, c: String,
       lo: String, hi: String,
-      column: String = ZoneMapColumn): DataFrame = {
-    val fs = fsOf(spark, tablePath)
-    val segs = resolve(fs, tablePath, c).liveSegs.toSeq.flatten
-    val kept = segs.filter { s =>
-      readSegStats(fs, tablePath, c, s).get(column) match {
-        // KIND discipline: only string-kind stats serve a string-order
-        // prune — numeric-kind bounds are ordered differently ("9" >
-        // "10") and would silently drop matching segments
-        case Some(('s', mn, mx)) =>
-          utf8Cmp(mn, hi) <= 0 && utf8Cmp(mx, lo) >= 0
-        case _ => true
-      }
-    }
-    rangeResidual(
-      readSegsInferred(spark, tablePath, c, kept, segs), column,
+      column: String = ZoneMapColumn): DataFrame =
+    prunedRead(spark, tablePath, c, column, between(column, lo, hi),
       col(column).cast("string").between(lit(lo), lit(hi)))
-  }
 
   /** [[readRange]] for INTEGRAL columns — the time-series axis
     * (`events.ts`-style epoch-longs) that dominates pruning at 100 TB.
-    * The prune compares numeric bounds (only 'l'-kind stats are
-    * consulted, see [[readRange]] on kind discipline) and the residual
+    * The proof compares numeric 'l'-kind bounds, and the residual
     * predicate is the NATIVE long comparison — no cast wrapper, so it
     * pushes all the way into the surviving segments' parquet footers
     * and row-group skipping works inside them too. */
   def readRangeLong(spark: SparkSession, tablePath: String, c: String,
-      lo: Long, hi: Long, column: String): DataFrame = {
-    val fs = fsOf(spark, tablePath)
-    val segs = resolve(fs, tablePath, c).liveSegs.toSeq.flatten
-    val kept = segs.filter(keepLong(fs, tablePath, c, _, lo, hi, column))
-    rangeResidual(
-      readSegsInferred(spark, tablePath, c, kept, segs), column,
+      lo: Long, hi: Long, column: String): DataFrame =
+    prunedRead(spark, tablePath, c, column, between(column, lo, hi),
       col(column).between(lit(lo), lit(hi)))
-  }
-
-  /** The [[readRangeLong]] prune predicate: keep the segment unless its
-    * recorded numeric bounds PROVE it cannot intersect [lo, hi]. */
-  private def keepLong(fs: FileSystem, tablePath: String, c: String,
-      seg: Long, lo: Long, hi: Long, column: String): Boolean =
-    readSegStats(fs, tablePath, c, seg).get(column) match {
-      case Some(('l', mn, mx)) =>
-        (mn.toLongOption, mx.toLongOption) match {
-          case (Some(a), Some(b)) => a <= hi && b >= lo
-          case _ => true // unparseable bounds: cannot prune
-        }
-      case _ => true
-    }
-
-  /** (kept, total) live-segment counts a [[readRangeLong]] with these
-    * bounds would plan — the observability hook that lets callers (and
-    * the pruning spec) assert segment skipping actually engaged,
-    * without coupling to manifest internals. */
-  def rangeLongPlanned(spark: SparkSession, tablePath: String, c: String,
-      lo: Long, hi: Long, column: String): (Int, Int) = {
-    val fs = fsOf(spark, tablePath)
-    val segs = resolve(fs, tablePath, c).liveSegs.toSeq.flatten
-    (segs.count(keepLong(fs, tablePath, c, _, lo, hi, column)), segs.size)
-  }
 
   /** [[readRangeLong]] for FLOATING columns — the metric axis
-    * (`events.value`-style measurements): the prune consults only
+    * (`events.value`-style measurements): the proof consults only
     * 'd'-kind stats under [[dCmpPred]] (zeros canonicalized, NaN
     * greatest — exactly Spark's predicate semantics, so the proof can
-    * never drop a matching segment; a NaN recorded in a bound simply
-    * never proves exclusion), and the residual is the native double
-    * `between`, pushed into the surviving parquet footers. Sidecars
-    * that recorded the column pre-'d' (as 's' strings) are wrong-kind
-    * and prune nothing. */
+    * never drop a matching segment), and the residual is the native
+    * double `between`, pushed into the surviving parquet footers.
+    * Sidecars that recorded the column pre-'d' (as 's' strings) are
+    * wrong-kind and prune nothing. */
   def readRangeDouble(spark: SparkSession, tablePath: String, c: String,
-      lo: Double, hi: Double, column: String): DataFrame = {
-    val fs = fsOf(spark, tablePath)
-    val segs = resolve(fs, tablePath, c).liveSegs.toSeq.flatten
-    val kept = segs.filter(keepDouble(fs, tablePath, c, _, lo, hi, column))
-    rangeResidual(
-      readSegsInferred(spark, tablePath, c, kept, segs), column,
+      lo: Double, hi: Double, column: String): DataFrame =
+    prunedRead(spark, tablePath, c, column, between(column, lo, hi),
       col(column).between(lit(lo), lit(hi)))
+
+  /** `column` as a Catalyst attribute typed like the probe value `v`:
+    * the prover reads only its name, and the literal's type selects
+    * the bound kind that may serve the proof. */
+  private def attr(column: String, v: Any): AttributeReference =
+    AttributeReference(column, Literal(v).dataType)()
+
+  private def between(column: String, lo: Any, hi: Any): Expression = {
+    val a = attr(column, lo)
+    And(GreaterThanOrEqual(a, Literal(lo)), LessThanOrEqual(a, Literal(hi)))
   }
 
-  /** The [[readRangeDouble]] prune predicate: keep the segment unless
-    * its recorded 'd' bounds PROVE it cannot intersect [lo, hi] under
-    * Spark's float comparison semantics. */
-  private def keepDouble(fs: FileSystem, tablePath: String, c: String,
-      seg: Long, lo: Double, hi: Double, column: String): Boolean =
-    readSegStats(fs, tablePath, c, seg).get(column) match {
-      case Some(('d', mn, mx)) =>
-        (mn.toDoubleOption, mx.toDoubleOption) match {
-          case (Some(a), Some(b)) =>
-            dCmpPred(a, hi) <= 0 && dCmpPred(b, lo) >= 0
-          case _ => true // unparseable bounds: cannot prune
-        }
-      case _ => true
-    }
-
-  /** (kept, total) counts for a [[readRangeDouble]] plan — the
-    * observability twin of [[rangeLongPlanned]]. */
-  def rangeDoublePlanned(spark: SparkSession, tablePath: String,
-      c: String, lo: Double, hi: Double, column: String): (Int, Int) = {
+  /** The imperative readers' one shape: read the live segments the
+    * prover cannot exclude under `pred`, then apply `residual`. */
+  private def prunedRead(spark: SparkSession, tablePath: String, c: String,
+      column: String, pred: Expression, residual: Column): DataFrame = {
     val fs = fsOf(spark, tablePath)
     val segs = resolve(fs, tablePath, c).liveSegs.toSeq.flatten
-    (segs.count(keepDouble(fs, tablePath, c, _, lo, hi, column)), segs.size)
+    val kept = segs.filterNot(s =>
+      GraftFileIndex.excludes(readSidecar(fs, tablePath, c, s), pred))
+    rangeResidual(readSegsInferred(spark, tablePath, c, kept, segs),
+      column, residual)
   }
 
   /** Residual-predicate application shared by the range reads: an
@@ -2324,7 +2179,7 @@ object ManifestStore {
     * silently returning every row unfiltered (or none) would be a
     * wrong answer wearing a plausible shape. */
   private def rangeResidual(df: DataFrame, column: String,
-      pred: org.apache.spark.sql.Column): DataFrame =
+      pred: Column): DataFrame =
     if (df.columns.contains(column)) df.where(pred)
     else if (df.isEmpty) df
     else throw new IllegalArgumentException(
@@ -2799,7 +2654,7 @@ object ManifestStore {
               !st.getPath.getName.startsWith("."))
           (sts.map(_.getLen).sum, sts.length)
         } catch { case _: java.io.IOException => (0L, 0) }
-      val bounds = readSegStats(fs, tablePath, c, seg).get(column)
+      val bounds = readSidecar(fs, tablePath, c, seg).bounds.get(column)
       SegmentInfo(seg, bytes, files,
         bounds.map(_._2), bounds.map(_._3))
     }
@@ -3072,7 +2927,8 @@ object ManifestStore {
       .persist()
     try {
       // only the non-empty range partitions become segments (an empty
-      // segment has no stats, so keepLong could never prune it)
+      // segment records no bounds, so the prover could never exclude
+      // it on a range)
       val newSegs = writeClusteredSegments(laid, fs, tablePath, c, r.nextSeg)
       if (newSegs.isEmpty) return Seq.empty
       val inputSet = inputSegs.toSet

@@ -387,7 +387,7 @@ class DocumentStoreSpec extends SparkSpecBase {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     // both segments carry a bloom for the key
     Seq(1L, 2L).foreach { s =>
-      assert(ManifestStore.readSegBlooms(fs, table, "m", s)
+      assert(ManifestStore.readSidecar(fs, table, "m", s).blooms
         .contains("doc_id"), s"segment $s missing bloom")
     }
     // a key only in seg1: the lookup reads seg1 alone (bloom prunes
@@ -415,7 +415,7 @@ class DocumentStoreSpec extends SparkSpecBase {
       .head.getString(0) == "NEW")
     // rewritten segments carry fresh blooms (the clustered-write path)
     val newSeg = live.filterNot(Seq(1L, 2L).contains).head
-    assert(ManifestStore.readSegBlooms(fs, table, "m", newSeg)
+    assert(ManifestStore.readSidecar(fs, table, "m", newSeg).blooms
       .contains("doc_id"))
   }
 
@@ -436,7 +436,7 @@ class DocumentStoreSpec extends SparkSpecBase {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     // both segments carry an 's'-kind bloom for the key
     Seq(1L, 2L).foreach { s =>
-      assert(ManifestStore.readSegBlooms(fs, table, "m", s)
+      assert(ManifestStore.readSidecar(fs, table, "m", s).blooms
         .get("doc_key").exists(_._1 == 's'), s"segment $s missing bloom")
     }
     def key(n: Long) = f"doc-$n%010d"
@@ -473,7 +473,7 @@ class DocumentStoreSpec extends SparkSpecBase {
       .head.getString(0) == "NEW")
     // rewritten segments carry fresh 's'-kind blooms
     val newSeg = live.filterNot(Seq(1L, 2L).contains).head
-    assert(ManifestStore.readSegBlooms(fs, table, "m", newSeg)
+    assert(ManifestStore.readSidecar(fs, table, "m", newSeg).blooms
       .get("doc_key").exists(_._1 == 's'))
   }
 
@@ -493,7 +493,8 @@ class DocumentStoreSpec extends SparkSpecBase {
         rnd.nextLong() >> rnd.nextInt(40))
       ManifestStore.store(ks.toDF("doc_id"), table, "p")
       val (kind, m, bits) =
-        ManifestStore.readSegBlooms(fs, table, "p", segi.toLong)("doc_id")
+        ManifestStore.readSidecar(fs, table, "p", segi.toLong)
+          .blooms("doc_id")
       assert(kind == 'l')
       ks.foreach { k =>
         assert(ManifestStore.bloomMayContain(m, bits, k),
@@ -523,7 +524,8 @@ class DocumentStoreSpec extends SparkSpecBase {
       val ks = Seq.fill(30 + rnd.nextInt(150))(key()).distinct
       ManifestStore.store(ks.toDF("k"), table, "p")
       val (kind, m, bits) =
-        ManifestStore.readSegBlooms(fs, table, "p", segi.toLong)("k")
+        ManifestStore.readSidecar(fs, table, "p", segi.toLong)
+          .blooms("k")
       assert(kind == 's')
       ks.foreach { k =>
         assert(ManifestStore.bloomMayContainStr(m, bits,
@@ -688,8 +690,10 @@ class DocumentStoreSpec extends SparkSpecBase {
       ManifestStore.store(rows.where(col("x") >= s * 512L &&
         col("x") < (s + 1) * 512L), table, "ev")
     }
-    def kept(cn: String, lo: Long, hi: Long): (Int, Int) =
-      ManifestStore.rangeLongPlanned(spark, table, "ev", lo, hi, cn)
+    def kept(cn: String, lo: Long, hi: Long): (Int, Int) = (
+      segsRead(ManifestStore.readRangeLong(spark, table, "ev", lo, hi, cn))
+        .size,
+      ManifestStore.currentSegments(spark, table, "ev").get.size)
     // before: x (the ingest axis) prunes hard, y keeps everything
     assert(kept("x", 100L, 200L) == ((1, 8)))
     assert(kept("y", 100L, 200L)._1 == 8)
@@ -909,6 +913,124 @@ class DocumentStoreSpec extends SparkSpecBase {
       lit(1).as("chunk_idx"), lit("t").as("text"),
       array(lit(1.0)).as("embedding"), lit("ms").as("meta_source"),
       lit("mn").as("meta_name"), lit(0.5).as("semantic_score"))
+  }
+
+  test("one sidecar parse == the four per-field readers it replaced, " +
+      "on written, torn, pre-kind, token-less and kind-rewritten bodies") {
+    import spark.implicits._
+    val table = tmp() + "/sidecar"
+    ManifestStore.setZoneMapColumns(spark, table, Seq("doc_id", "x", "name"))
+    ManifestStore.setBloomColumns(spark, table, Seq("doc_id", "name"), 1024)
+    // a NaN and a -0.0 in the 'd' column, framing characters in the
+    // 's' bounds, a null in 'name' (its non-null count is 2 of 3 rows)
+    ManifestStore.store(Seq((1L, 0.5, Some("a b")), (7L, Double.NaN,
+      Some("z;=,")), (3L, -0.0, Option.empty[String]))
+      .toDF("doc_id", "x", "name").repartition(1), table, "m")
+    val fs = new org.apache.hadoop.fs.Path(table)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val path = new org.apache.hadoop.fs.Path(s"$table/_manifest/m/stats-000001")
+    def slurp(): String = {
+      val in = fs.open(path)
+      try new String(in.readAllBytes(), "UTF-8") finally in.close()
+    }
+    val written = slurp()
+    // spec-local reference: the per-field readers the one parse
+    // replaced, over the body their shared pointer read returned
+    // (trimmed; empty = absent)
+    def body(raw: Option[String]): Option[String] =
+      raw.map(_.trim).filter(_.nonEmpty)
+      .filter(b => b.startsWith("zm:") && b.endsWith(";end"))
+      .map(_.stripPrefix("zm:").stripSuffix(";end"))
+    def dec(x: String) = java.net.URLDecoder.decode(x, "UTF-8")
+    def refStats(b: Option[String]): Map[String, (Char, String, String)] =
+      b.toSeq.flatMap(_.split(';').toSeq.filter(_.nonEmpty).flatMap { e =>
+        e.split('=') match {
+          case Array(name, range) => range.split(',') match {
+            case Array(lo, hi) =>
+              val (n, kind) = name.split(':') match {
+                case Array(n0, k) if k.length == 1 => (n0, k.head)
+                case _ => (name, 's')
+              }
+              Some(dec(n) -> (kind, dec(lo), dec(hi)))
+            case _ => None
+          }
+          case _ => None
+        }
+      }).toMap
+    def refCount(b: Option[String], column: String): Option[Long] =
+      b.flatMap(_.split(';').toSeq.collectFirst {
+        case e if e.startsWith("cnt:") && (e.split(':') match {
+            case Array(_, n, _) => dec(n) == column
+            case _ => false
+          }) => e.split(':')(2).toLongOption
+      }.flatten)
+    def refRows(b: Option[String]): Option[Long] =
+      b.flatMap(_.split(';').toSeq.collectFirst {
+        case e if e.startsWith("rows:") => e.stripPrefix("rows:").toLongOption
+      }.flatten)
+    def refBlooms(b: Option[String]): Map[String, (Char, Int, Seq[Byte])] =
+      b.toSeq.flatMap(_.split(';').toSeq
+        .filter(e => e.startsWith("bf:") || e.startsWith("bfs:"))
+        .flatMap { e =>
+          e.split(':') match {
+            case Array(pfx, n, bits, b64) =>
+              (bits.toIntOption, scala.util.Try(
+                java.util.Base64.getUrlDecoder.decode(b64)).toOption) match {
+                case (Some(m), Some(bytes))
+                    if m > 0 && (m & (m - 1)) == 0 && bytes.length == m / 8 =>
+                  Some(dec(n) -> ((if (pfx == "bfs") 's' else 'l', m,
+                    bytes.toSeq)))
+                case _ => None
+              }
+            case _ => None
+          }
+        }).toMap
+    def parse(raw: Option[String]): ManifestStore.Sidecar = {
+      fs.delete(path, false)
+      raw.foreach { t =>
+        val out = fs.create(path, true)
+        try out.write(t.getBytes("UTF-8")) finally out.close()
+      }
+      val sc = ManifestStore.readSidecar(fs, table, "m", 1L)
+      val b = body(raw)
+      assert(sc.bounds == refStats(b), raw)
+      Seq("doc_id", "x", "name", "absent").foreach { n =>
+        assert(sc.counts.get(n) == refCount(b, n), s"$n in $raw")
+      }
+      assert(sc.rows == refRows(b), raw)
+      assert(sc.blooms.map { case (n, (k, m, bs)) => n -> ((k, m, bs.toSeq)) }
+        == refBlooms(b), raw)
+      sc
+    }
+    def without(pfx: String): String =
+      "zm:" + written.stripPrefix("zm:").stripSuffix(";end").split(';')
+        .filterNot(_.startsWith(pfx)).mkString(";") + ";end"
+    // the written body parses every field
+    val full = parse(Some(written))
+    assert(full.rows.contains(3L))
+    assert(full.counts == Map("doc_id" -> 3L, "x" -> 3L, "name" -> 2L))
+    assert(full.bounds("doc_id") == (('l', "1", "7")))
+    assert(full.bounds("x")._1 == 'd' && full.bounds("x")._3 == "NaN")
+    assert(full.bounds("name") == (('s', "a b", "z;=,")))
+    assert(full.blooms("doc_id")._1 == 'l' && full.blooms("name")._1 == 's')
+    // torn (no terminator), empty and missing: all-empty, proves nothing
+    Seq(Some(written.dropRight(3)), Some("zm:doc_id=0100"), Some(""), None)
+      .foreach { raw =>
+        val sc = parse(raw)
+        assert(sc.bounds.isEmpty && sc.counts.isEmpty && sc.rows.isEmpty &&
+          sc.blooms.isEmpty, raw)
+      }
+    // pre-kind body (`name=lo,hi`): string-kind bounds, nothing else
+    assert(parse(Some("zm:doc_id=1,7;end")).bounds ==
+      Map("doc_id" -> (('s', "1", "7"))))
+    // bodies written before a token existed lack only that field
+    assert(parse(Some(without("cnt:"))).counts.isEmpty)
+    assert(parse(Some(without("rows:"))).rows.isEmpty)
+    val noBf = parse(Some(without("bf")))
+    assert(noBf.blooms.isEmpty && noBf.bounds == full.bounds)
+    // the pre-'d' forward-compat rewrite: the float column's bounds
+    // read as string-kind (wrong kind for a double probe)
+    assert(parse(Some(written.replace(":d=", ":s="))).bounds("x")._1 == 's')
   }
 
   test("manifest zone maps: range reads skip segments; sidecars are " +

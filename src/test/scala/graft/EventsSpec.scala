@@ -29,8 +29,10 @@ class EventsSpec extends SparkSpecBase {
       "raw filter") {
     val (path, lo, hi) = Events.manifestEventsTable(spark, sf)
     val w = (hi - lo) / Events.RangeSegs
-    val (kept, total) = graft.sources.ManifestStore.rangeLongPlanned(
-      spark, path, "events", lo + 3 * w, lo + 5 * w, "ts_us")
+    val kept = segsRead(graft.sources.ManifestStore.readRangeLong(
+      spark, path, "events", lo + 3 * w, lo + 5 * w, "ts_us")).size
+    val total = graft.sources.ManifestStore
+      .currentSegments(spark, path, "events").get.size
     assert(total == Events.RangeSegs)
     // time-contiguous segments 3..4 intersect the range fully and 5
     // touches its upper bound; 0-2 and 6-7 must be SKIPPED
@@ -462,9 +464,11 @@ class EventsSpec extends SparkSpecBase {
       "segments and the connector face equals the imperative read") {
     val (path, lo, hi) = Events.valueEventsTable(spark, sf)
     val w = (hi - lo) / Events.ValueSegs
-    val (kept, total) = graft.sources.ManifestStore
-      .rangeDoublePlanned(spark, path, "events",
-        lo + w * 2, lo + w * 4, "value")
+    val kept = segsRead(graft.sources.ManifestStore
+      .readRangeDouble(spark, path, "events",
+        lo + w * 2, lo + w * 4, "value")).size
+    val total = graft.sources.ManifestStore
+      .currentSegments(spark, path, "events").get.size
     // both middle bands survive (they hold the matches); the inclusive
     // probe may also touch band 4's exact floor — never more
     assert(kept >= 2 && kept <= 3 && kept < total, s"$kept/$total")

@@ -507,8 +507,8 @@ class GraftSourceSpec extends SparkSpecBase {
       spark, table, "m", 100.0, 110.0, "x").drop("collection")
     assert(rr.orderBy("id").collect().toSeq ==
       band.orderBy("id").collect().toSeq)
-    assert(ManifestStore.rangeDoublePlanned(
-      spark, table, "m", 100.0, 110.0, "x") == ((2, 3)))
+    assert(segsRead(rr).size == 2)
+    assert(ManifestStore.currentSegments(spark, table, "m").get.size == 3)
     // metadata min/max serve from the 'd' bounds without a scan: the
     // min is a zero (sign order-dependent in Spark itself — the two
     // compare equal), the max is the NaN
@@ -541,8 +541,106 @@ class GraftSourceSpec extends SparkSpecBase {
     } finally walked.close()
     assert(scannedFiles(
       src.where(col("x") >= 100.0 && col("x") <= 110.0)) == 3L)
-    assert(ManifestStore.rangeDoublePlanned(
-      spark, table, "m", 100.0, 110.0, "x") == ((3, 3)))
+    assert(segsRead(ManifestStore.readRangeDouble(
+      spark, table, "m", 100.0, 110.0, "x")).size == 3)
+    assert(ManifestStore.currentSegments(spark, table, "m").get.size == 3)
+  }
+
+  test("one prover: the imperative range, point and count readers " +
+      "plan exactly the connector's segments and return its rows " +
+      "('l', 'd' with NaN/-0.0, bloomed 's', an all-null 'l' segment)") {
+    import spark.implicits._
+    val table = tmp() + "/t"
+    ManifestStore.setZoneMapColumns(spark, table, Seq("l", "d", "s"))
+    ManifestStore.setBloomColumns(spark, table, Seq("l", "s"))
+    def put(rows: Seq[(Long, Option[Long], Double, String)]): Unit =
+      ManifestStore.store(rows.toDF("id", "l", "d", "s").repartition(1),
+        table, "m")
+    // seg 1 and 2: disjoint bands on every column
+    put((0 until 10).map(i =>
+      (i.toLong, Some(i.toLong), i + 0.5, f"k$i%03d")))
+    put((0 until 10).map(i =>
+      (100L + i, Some(100L + i), 100.25 + i, f"k${100 + i}%03d")))
+    // seg 3: ranges spanning both bands (only blooms separate point
+    // probes), both zeros, a NaN, an infinity, a null 'l'
+    put(Seq((900L, Some(-5L), -0.0, "a"), (901L, Some(20L), 0.0, "z"),
+      (902L, None, Double.NaN, "m"),
+      (903L, Some(7L), Double.PositiveInfinity, "k005")))
+    // seg 4: 'l' entirely null — its sidecar records a zero count
+    put((0 until 5).map(i => (1000L + i, None, 50.0 + i, s"n$i")))
+    def src = readSrc(table)
+    /** The connector's planned segments: the index's own listing for
+      * the scan's data filters (its file count cross-checks numFiles). */
+    def planned(df: DataFrame): Seq[String] = {
+      val n = scannedFiles(df)
+      val scan = df.queryExecution.executedPlan.collect {
+        case s: FileSourceScanExec => s
+      }.head
+      val files = scan.relation.location
+        .listFiles(scan.partitionFilters, scan.dataFilters)
+        .flatMap(_.files.map(_.getPath.toString))
+      assert(files.size.toLong == n)
+      segsOf(files)
+    }
+    def same(label: String, imperative: DataFrame, connector: DataFrame,
+        expectSegs: Option[Seq[String]] = None): Seq[String] = {
+      val segs = planned(connector)
+      assert(segsRead(imperative) == segs, label)
+      expectSegs.foreach(e => assert(segs == e, label))
+      val cols = connector.columns.map(col).toSeq
+      assert(imperative.select(cols: _*).orderBy("id").collect().toSeq ==
+        connector.orderBy("id").collect().toSeq, label)
+      segs
+    }
+    val nullSeg = "seg=000004"
+    // 'l' ranges: the all-null segment is planned by neither face, and
+    // the metadata-served count equals the scan count
+    Seq((0L, 9L), (5L, 105L), (10L, 99L), (-10L, -1L), (101L, 101L),
+      (Long.MinValue, Long.MaxValue)).foreach { case (lo, hi) =>
+      val segs = same(s"l in [$lo, $hi]",
+        ManifestStore.readRangeLong(spark, table, "m", lo, hi, "l"),
+        src.where(col("l").between(lo, hi)))
+      assert(!segs.contains(nullSeg), s"l in [$lo, $hi]: $segs")
+      assert(ManifestStore.countRangeLongPlanned(spark, table, "m", lo, hi,
+        "l")._1 == src.where(col("l").between(lo, hi)).count())
+    }
+    // 'l' point probes: ranges and the 'l' blooms
+    Seq(5L, 7L, 8L, 50L, 105L, -5L).foreach { v =>
+      val segs = same(s"l = $v",
+        ManifestStore.readPointLong(spark, table, "m", v, "l"),
+        src.where(col("l") === v))
+      assert(!segs.contains(nullSeg), s"l = $v: $segs")
+    }
+    // 'd' ranges, incl. point-width probes on both zeros and NaN
+    Seq((100.0, 110.0), (0.0, 0.0), (-0.0, -0.0), (9.5, 100.25),
+      (Double.NaN, Double.NaN), (200.0, Double.PositiveInfinity),
+      (-1.0, 0.25), (50.0, 52.0)).foreach { case (lo, hi) =>
+      same(s"d in [$lo, $hi]",
+        ManifestStore.readRangeDouble(spark, table, "m", lo, hi, "d"),
+        src.where(col("d").between(lo, hi)))
+      assert(ManifestStore.countRangeDoublePlanned(spark, table, "m", lo,
+        hi, "d")._1 == src.where(col("d").between(lo, hi)).count())
+    }
+    // 's' ranges (UTF-8 order) and bloomed point probes
+    Seq(("k000", "k009"), ("k100", "k105"), ("a", "b"), ("l", "zz"),
+      ("n", "n9")).foreach { case (lo, hi) =>
+      same(s"s in [$lo, $hi]",
+        ManifestStore.readRange(spark, table, "m", lo, hi, "s"),
+        src.where(col("s").between(lo, hi)))
+    }
+    Seq("k005", "k050", "k105", "z", "m", "n0").foreach { v =>
+      same(s"s = $v",
+        ManifestStore.readPointString(spark, table, "m", v, "s"),
+        src.where(col("s") === v))
+    }
+    // the pruning engaged on every column (not a vacuous parity)
+    assert(segsRead(ManifestStore.readRangeLong(
+      spark, table, "m", 0L, 9L, "l")) == Seq("seg=000001", "seg=000003"))
+    assert(segsRead(ManifestStore.readRangeDouble(
+      spark, table, "m", 100.0, 110.0, "d")) ==
+      Seq("seg=000002", "seg=000003"))
+    assert(segsRead(ManifestStore.readPointString(
+      spark, table, "m", "k050", "s")).isEmpty)
   }
 
   test("segment listings are memoized per index instance: repeated " +

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for all suites (one JVM-wide session via
@@ -12,6 +12,14 @@ trait SparkSpecBase extends AnyFunSuite {
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
     .getOrCreate()
+
+  /** Distinct `seg=` directories of manifest file paths, sorted. */
+  def segsOf(paths: Seq[String]): Seq[String] =
+    paths.flatMap(_.split('/').find(_.startsWith("seg="))).distinct.sorted
+
+  /** The `seg=` directories a frame reads: for an imperative manifest
+    * read, the live segments its pruning kept. */
+  def segsRead(df: DataFrame): Seq[String] = segsOf(df.inputFiles.toSeq)
 
   /** Smallest fixture scale — unit tests assert semantics, not perf. */
   val sf: String = "/root/testdata/sf0.001"
