@@ -241,18 +241,12 @@ object Ann {
     * in the train set) → delta commit assigned by the STORED codebook →
     * clustered compaction — the full lifecycle, queried through the
     * connector against the same from-scratch oracle as [[ivfTopK]]. */
-  private val manifestIvfIndexes = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), String]()
+  private val manifestIvfIndexes =
+    new FixtureTables[String]("graft-ivf-mindex-")(identity)
 
   private[graft] def manifestIvfIndexFor(s: SparkSession,
-      dir: String): String = {
-    val key = (s, dir)
-    Option(manifestIvfIndexes.get(key)).getOrElse {
-      val path = java.nio.file.Files
-        .createTempDirectory("graft-ivf-mindex-").toString
-      Runtime.getRuntime.addShutdownHook(new Thread(() =>
-        org.apache.commons.io.FileUtils
-          .deleteQuietly(new java.io.File(path)): Unit))
+      dir: String): String =
+    manifestIvfIndexes(s, dir) { path =>
       val emb = Tables(s, dir, "embeddings")
       val batchPred = col("vec_id") % 10 === 1 &&
         !col("vec_id").isin(CentroidIds: _*)
@@ -260,41 +254,27 @@ object Ann {
       refreshManifestIvfIndex(emb.where(!batchPred), path, "base")
       refreshManifestIvfIndex(emb.where(batchPred), path, "delta-1")
       compactManifestIvfIndex(s, path)
-      Option(manifestIvfIndexes.putIfAbsent(key, path)).map { prev =>
-        org.apache.commons.io.FileUtils
-          .deleteQuietly(new java.io.File(path)); prev // racing builder
-      }.getOrElse(path)
+      path
     }
-  }
 
   /** Memoized REFRESHED IVF store behind `ann_ivf_refresh`: base build
     * over everything but the held-out batch slice (centroids always in
     * the base — the train set), then [[refreshIvfIndex]] appends the
     * batch. Searches must answer bitwise like the full-corpus store —
     * the driver's oracle recomputes assignment from scratch. */
-  private val ivfRefreshed = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), String]()
+  private val ivfRefreshed =
+    new FixtureTables[String]("graft-ivf-refresh-")(identity)
 
   private[graft] def refreshedIvfStoreFor(s: SparkSession,
-      dir: String): String = {
-    val key = (s, dir)
-    Option(ivfRefreshed.get(key)).getOrElse {
-      val path = java.nio.file.Files
-        .createTempDirectory("graft-ivf-refresh-").toString
-      Runtime.getRuntime.addShutdownHook(new Thread(() =>
-        org.apache.commons.io.FileUtils
-          .deleteQuietly(new java.io.File(path)): Unit))
+      dir: String): String =
+    ivfRefreshed(s, dir) { path =>
       val emb = Tables(s, dir, "embeddings")
       val batchPred = col("vec_id") % 10 === 1 &&
         !col("vec_id").isin(CentroidIds: _*)
       buildIvfIndex(emb.where(!batchPred), path)
       refreshIvfIndex(emb.where(batchPred), path)
-      Option(ivfRefreshed.putIfAbsent(key, path)).map { prev =>
-        org.apache.commons.io.FileUtils
-          .deleteQuietly(new java.io.File(path)); prev // racing builder
-      }.getOrElse(path)
+      path
     }
-  }
 
   /** Memoized materialized IVF store for a fixture dir — the implicit
     * index behind the `ann_ivf_stored` declared query (built once per
@@ -302,37 +282,25 @@ object Ann {
     * .manifestEventsTable]] lifecycle; torn down by
     * [[releaseCaches]], with a shutdown hook covering lifecycle-
     * skipping drivers). */
-  private val ivfStores = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), String]()
+  private val ivfStores =
+    new FixtureTables[String]("graft-ivf-store-")(identity)
 
-  private[graft] def ivfStoreFor(s: SparkSession, dir: String): String = {
-    val key = (s, dir)
-    Option(ivfStores.get(key)).getOrElse {
-      val path = java.nio.file.Files
-        .createTempDirectory("graft-ivf-store-").toString
-      Runtime.getRuntime.addShutdownHook(new Thread(() =>
-        org.apache.commons.io.FileUtils
-          .deleteQuietly(new java.io.File(path)): Unit))
+  private[graft] def ivfStoreFor(s: SparkSession, dir: String): String =
+    ivfStores(s, dir) { path =>
       buildIvfIndex(Tables(s, dir, "embeddings"), path)
-      Option(ivfStores.putIfAbsent(key, path)).map { prev =>
-        org.apache.commons.io.FileUtils
-          .deleteQuietly(new java.io.File(path)); prev // racing builder
-      }.getOrElse(path)
+      path
     }
-  }
 
   /** Drop every memoized materialized IVF store (the explicit release
     * half of the implicit index; every main calls this on shutdown). */
   def releaseCaches(): Unit = {
-    Seq(ivfStores, ivfRefreshed, manifestIvfIndexes, binaryIndexes,
-      binaryRefreshed, manifestBinaryIndexes,
-      manifestPqIndexes).foreach { m =>
-      val it = m.values().iterator()
-      while (it.hasNext)
-        org.apache.commons.io.FileUtils
-          .deleteQuietly(new java.io.File(it.next()))
-      m.clear()
-    }
+    ivfStores.release()
+    ivfRefreshed.release()
+    manifestIvfIndexes.release()
+    binaryIndexes.release()
+    binaryRefreshed.release()
+    manifestBinaryIndexes.release()
+    manifestPqIndexes.release()
   }
 
   /** Bucket occupancy histogram — the "index statistics" view. */
@@ -1227,52 +1195,32 @@ object Ann {
 
   /** Memoized signature store behind `ann_binary_stored` — lifecycle
     * mirrors [[ivfStoreFor]] (released by [[releaseCaches]]). */
-  private val binaryIndexes = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), String]()
+  private val binaryIndexes =
+    new FixtureTables[String]("graft-binary-index-")(identity)
 
-  private[graft] def binaryIndexFor(s: SparkSession, dir: String): String = {
-    val key = (s, dir)
-    Option(binaryIndexes.get(key)).getOrElse {
-      val path = java.nio.file.Files
-        .createTempDirectory("graft-binary-index-").toString
-      Runtime.getRuntime.addShutdownHook(new Thread(() =>
-        org.apache.commons.io.FileUtils
-          .deleteQuietly(new java.io.File(path)): Unit))
+  private[graft] def binaryIndexFor(s: SparkSession, dir: String): String =
+    binaryIndexes(s, dir) { path =>
       buildBinaryIndex(Tables(s, dir, "embeddings"), path)
-      Option(binaryIndexes.putIfAbsent(key, path)).map { prev =>
-        org.apache.commons.io.FileUtils
-          .deleteQuietly(new java.io.File(path)); prev // racing builder
-      }.getOrElse(path)
+      path
     }
-  }
 
   /** Memoized REFRESHED signature store behind `ann_binary_refresh`:
     * base build over everything but the held-out batch slice, then
     * [[refreshBinaryIndex]] appends the batch's signatures. Searches
     * must answer bitwise like the full-corpus store — same oracle as
     * `ann_binary_stored` ([[refreshedIvfStoreFor]]'s discipline). */
-  private val binaryRefreshed = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), String]()
+  private val binaryRefreshed =
+    new FixtureTables[String]("graft-binary-refresh-")(identity)
 
   private[graft] def refreshedBinaryIndexFor(s: SparkSession,
-      dir: String): String = {
-    val key = (s, dir)
-    Option(binaryRefreshed.get(key)).getOrElse {
-      val path = java.nio.file.Files
-        .createTempDirectory("graft-binary-refresh-").toString
-      Runtime.getRuntime.addShutdownHook(new Thread(() =>
-        org.apache.commons.io.FileUtils
-          .deleteQuietly(new java.io.File(path)): Unit))
+      dir: String): String =
+    binaryRefreshed(s, dir) { path =>
       val emb = Tables(s, dir, "embeddings")
       val batchPred = col("vec_id") % 10 === 1
       buildBinaryIndex(emb.where(!batchPred), path)
       refreshBinaryIndex(emb.where(batchPred), path)
-      Option(binaryRefreshed.putIfAbsent(key, path)).map { prev =>
-        org.apache.commons.io.FileUtils
-          .deleteQuietly(new java.io.File(path)); prev // racing builder
-      }.getOrElse(path)
+      path
     }
-  }
 
   /** Memoized VERSIONED (manifest) signature index behind
     * `ann_binary_manifest`: init → two tagged commits (base + delta,
@@ -1280,29 +1228,18 @@ object Ann {
     * minus training; queried through the connector against the same
     * from-scratch oracle as [[binaryTopK]]. */
   private val manifestBinaryIndexes =
-    new java.util.concurrent.ConcurrentHashMap[
-      (SparkSession, String), String]()
+    new FixtureTables[String]("graft-binary-mindex-")(identity)
 
   private[graft] def manifestBinaryIndexFor(s: SparkSession,
-      dir: String): String = {
-    val key = (s, dir)
-    Option(manifestBinaryIndexes.get(key)).getOrElse {
-      val path = java.nio.file.Files
-        .createTempDirectory("graft-binary-mindex-").toString
-      Runtime.getRuntime.addShutdownHook(new Thread(() =>
-        org.apache.commons.io.FileUtils
-          .deleteQuietly(new java.io.File(path)): Unit))
+      dir: String): String =
+    manifestBinaryIndexes(s, dir) { path =>
       val emb = Tables(s, dir, "embeddings")
       val batchPred = col("vec_id") % 10 === 1
       initManifestBinaryIndex(s, path)
       refreshManifestBinaryIndex(emb.where(!batchPred), path, "base")
       refreshManifestBinaryIndex(emb.where(batchPred), path, "delta-1")
-      Option(manifestBinaryIndexes.putIfAbsent(key, path)).map { prev =>
-        org.apache.commons.io.FileUtils
-          .deleteQuietly(new java.io.File(path)); prev // racing builder
-      }.getOrElse(path)
+      path
     }
-  }
 
   // ----------------------------------------------------------------
   // manifest-backed PQ index — versioned, exactly-once maintenance
@@ -1435,30 +1372,19 @@ object Ann {
     * STORED codebook — [[manifestIvfIndexFor]]'s lifecycle for the
     * compressed tier; queried through the connector against the same
     * from-scratch oracle as [[pqTopK]]. */
-  private val manifestPqIndexes = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), String]()
+  private val manifestPqIndexes =
+    new FixtureTables[String]("graft-pq-mindex-")(identity)
 
-  private[graft] def manifestPqIndexFor(s: SparkSession,
-      dir: String): String = {
-    val key = (s, dir)
-    Option(manifestPqIndexes.get(key)).getOrElse {
-      val path = java.nio.file.Files
-        .createTempDirectory("graft-pq-mindex-").toString
-      Runtime.getRuntime.addShutdownHook(new Thread(() =>
-        org.apache.commons.io.FileUtils
-          .deleteQuietly(new java.io.File(path)): Unit))
+  private[graft] def manifestPqIndexFor(s: SparkSession, dir: String): String =
+    manifestPqIndexes(s, dir) { path =>
       val emb = Tables(s, dir, "embeddings")
       val batchPred = col("vec_id") % 10 === 1 &&
         !col("vec_id").isin(PqCentroidIds: _*)
       initManifestPqIndex(s, path)
       refreshManifestPqIndex(emb.where(!batchPred), path, "base")
       refreshManifestPqIndex(emb.where(batchPred), path, "delta-1")
-      Option(manifestPqIndexes.putIfAbsent(key, path)).map { prev =>
-        org.apache.commons.io.FileUtils
-          .deleteQuietly(new java.io.File(path)); prev // racing builder
-      }.getOrElse(path)
+      path
     }
-  }
 
   /** Per-query Hamming shortlist width for [[binaryKnnJoin]]. */
   val BinaryJoinShortlist = 30

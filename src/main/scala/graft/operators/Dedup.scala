@@ -235,15 +235,8 @@ object Dedup {
     slimShingleCache.release()
     var df = retainedCaches.poll()
     while (df != null) { df.unpersist(); df = retainedCaches.poll() }
-    val bit = refreshBaseCache.values().iterator()
-    while (bit.hasNext) { bit.next().unpersist(); }
-    refreshBaseCache.clear()
-    val mit = docsManifestCache.values().iterator()
-    while (mit.hasNext) {
-      org.apache.commons.io.FileUtils
-        .deleteQuietly(new java.io.File(mit.next()._1))
-    }
-    docsManifestCache.clear()
+    refreshBaseCache.release()
+    docsManifestTables.release()
   }
 
   /** Candidate pairs + true jaccard over a prepared [[shingled]] frame. */
@@ -779,8 +772,8 @@ object Dedup {
   def docKeySql(e: String): String =
     s"'doc-' || lpad(CAST($e AS VARCHAR), $DocKeyWidth, '0')"
 
-  private val docsManifestCache = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, String), (String, Long)]()
+  private val docsManifestTables =
+    new FixtureTables[(String, Long)]("graft-docs-manifest-")(_._1)
 
   /** Memoized manifest-layout documents table backing the refresh
     * path: the corpus slice (doc_id % 10 != 1, [[incrementalNearDups]]'
@@ -789,11 +782,9 @@ object Dedup {
     * corpus, `readSinceInferred(anchor)` exactly the new batch (the
     * [[Events.incrementalAgg]] table discipline applied to documents).
     * Returns (tablePath, anchorPtrSeq). */
-
   private[operators] def manifestDocsTable(s: org.apache.spark.sql.SparkSession,
-      dir: String): (String, Long) = {
-    val key = (s, dir)
-    Option(docsManifestCache.get(key)).getOrElse {
+      dir: String): (String, Long) =
+    docsManifestTables(s, dir) { path =>
       // doc_key is the reference's uuid-string identity axis
       // (main.go:330): a deterministic uuid-like string key whose
       // point lookups are served by STRING bloom sidecars — the %10
@@ -802,14 +793,6 @@ object Dedup {
       val docs = Tables(s, dir, "documents")
         .select(col("doc_id"), docKeyCol(col("doc_id")).as("doc_key"),
           col("text"), col("lang"))
-      val path = java.nio.file.Files
-        .createTempDirectory("graft-docs-manifest-").toString
-      // releaseCaches() is the documented teardown; the hook covers a
-      // crashed or lifecycle-skipping driver (deleteQuietly no-ops
-      // when already released)
-      Runtime.getRuntime.addShutdownHook(new Thread(() =>
-        org.apache.commons.io.FileUtils
-          .deleteQuietly(new java.io.File(path)): Unit))
       graft.sources.ManifestStore.setZoneMapColumns(s, path, Seq("doc_id"))
       graft.sources.ManifestStore.setBloomColumns(s, path, Seq("doc_key"))
       graft.sources.ManifestStore.store(
@@ -818,13 +801,8 @@ object Dedup {
         graft.sources.ManifestStore.currentPtrSeq(s, path, "docs")
       graft.sources.ManifestStore.store(
         docs.where(col("doc_id") % 10 === 1), path, "docs")
-      val built = (path, anchor)
-      Option(docsManifestCache.putIfAbsent(key, built)).map { prev =>
-        org.apache.commons.io.FileUtils
-          .deleteQuietly(new java.io.File(path)); prev
-      }.getOrElse(built)
+      (path, anchor)
     }
-  }
 
   /** Mergeable per-language corpus partials: doc count + exact integer
     * word total (count/sum recombine associatively — the
@@ -842,17 +820,17 @@ object Dedup {
     * persists between refreshes, so the refresh never re-aggregates
     * the old corpus (built once here, per session, from the anchored
     * snapshot). */
-  private val refreshBaseCache = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, String), DataFrame]()
+  private val refreshBaseCache =
+    Memo.ofFrames[(org.apache.spark.sql.SparkSession, String)]
 
   private def refreshBase(s: org.apache.spark.sql.SparkSession,
       dir: String): DataFrame =
-    refreshBaseCache.computeIfAbsent((s, dir), _ => {
+    refreshBaseCache((s, dir)) {
       val (path, anchor) = manifestDocsTable(s, dir)
       refreshPartial(graft.sources.ManifestStore
         .readAsOfInferred(s, path, "docs", anchor)
         .select("doc_id", "text", "lang")).persist()
-    })
+    }
 
   /** INCREMENTAL CORPUS REFRESH — the production nightly composed
     * end-to-end from the change-feed pieces: the manifest change feed

@@ -2,28 +2,26 @@ package graft.operators
 
 import org.apache.spark.sql.SparkSession
 
-/** ONE implementation of the repo's memoized TEMP-TABLE fixture
-  * lifecycle (the manifest-backed tables the declared faces build from
-  * the parquet fixtures): an entry per (session, data dir), built once
-  * into a fresh temp directory, a racing builder's losing copy deleted,
-  * a JVM shutdown hook as the crash backstop, and [[release]] as the
-  * documented teardown every module's `releaseCaches()` calls — the
-  * [[PlanMemo]] discipline applied to on-disk tables instead of
-  * persisted frames. `T` is the builder's handle (path + whatever
-  * bounds/versions the queries need); its PATH must be `pathOf(t)` so
-  * release and the loser-delete can find the directory. */
+/** The repo's memoized TEMP-TABLE lifecycle (the manifest-backed
+  * tables and on-disk indexes the declared faces build from the
+  * parquet fixtures): an entry per (session, data dir), built once
+  * into a fresh temp directory, a JVM shutdown hook as the crash
+  * backstop, and [[release]] as the documented teardown every module's
+  * `releaseCaches()` calls. The race and drain policy is [[Memo]]'s; a
+  * value is freed by deleting its directory through the session's
+  * Hadoop FS — a racing builder's losing copy too. `T` is the
+  * builder's handle (path + whatever bounds/versions the queries
+  * need); its PATH must be `pathOf(t)` so the delete can find the
+  * directory. */
 private[operators] final class FixtureTables[T](prefix: String)(
     pathOf: T => String) {
-  private val m = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), T]()
+  private val m = new Memo[(SparkSession, String), T](
+    (k, t, _) => delete(k._1, pathOf(t)))
 
   /** Memoized fixture for (session, dir); `build` receives the fresh
-    * temp directory path. Runs OUTSIDE the map (the PlanMemo
-    * compute-then-putIfAbsent rule): two concurrent first callers both
-    * build, the loser deletes its copy and returns the winner's. */
-  def apply(s: SparkSession, dir: String)(build: String => T): T = {
-    val key = (s, dir)
-    Option(m.get(key)).getOrElse {
+    * temp directory path and runs outside the map. */
+  def apply(s: SparkSession, dir: String)(build: String => T): T =
+    m((s, dir)) {
       val path = java.nio.file.Files.createTempDirectory(prefix).toString
       // releaseCaches() is the documented teardown; the hook covers a
       // crashed or lifecycle-skipping driver so temp tables never leak
@@ -31,12 +29,8 @@ private[operators] final class FixtureTables[T](prefix: String)(
       Runtime.getRuntime.addShutdownHook(new Thread(() =>
         org.apache.commons.io.FileUtils
           .deleteQuietly(new java.io.File(path)): Unit))
-      val built = build(path)
-      Option(m.putIfAbsent(key, built)).map { prev =>
-        delete(s, pathOf(built)); prev // racing builder lost: drop dup
-      }.getOrElse(built)
+      build(path)
     }
-  }
 
   private def delete(s: SparkSession, path: String): Unit = {
     val p = new org.apache.hadoop.fs.Path(path)
@@ -45,18 +39,9 @@ private[operators] final class FixtureTables[T](prefix: String)(
     catch { case _: java.io.IOException => () }
   }
 
-  /** Drop every fixture directory and forget it (drain by key — the
-    * [[PlanMemo.release]] rule: whichever side removes the mapping
-    * owns the delete). Like PlanMemo, release is a DRAIN, not a
-    * close: a build racing the shutdown release can re-insert a live
-    * entry (freed by the next release, backstopped by the shutdown
-    * hook) — never forgotten-but-undeleted. */
-  def release(): Unit = {
-    val keys = m.keySet().iterator()
-    while (keys.hasNext) {
-      val k = keys.next()
-      val v = m.remove(k)
-      if (v != null) delete(k._1, pathOf(v))
-    }
-  }
+  /** Drop every fixture directory and forget it ([[Memo.release]]: a
+    * drain by key, not a close — a build racing it re-inserts a live
+    * entry, freed by the next release and backstopped by the shutdown
+    * hook). */
+  def release(): Unit = m.release()
 }

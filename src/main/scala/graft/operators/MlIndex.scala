@@ -171,24 +171,19 @@ object MlIndex {
     // projection (measured 61s -> 7s at sf0.1) — and un-memoized, every
     // CALL re-runs the shingle scan and the MinHash fit (the round-5
     // 0.62 → 1.17 s bench regression). Same two-tier-free discipline as
-    // [[brpIndex]]: keyed by session + canonicalized input plan, races
-    // settle by loser-unpersist, released via [[releaseCaches]].
-    val (feats, model) = {
-      val key = (s, docs.queryExecution.analyzed.canonicalized)
-      Option(mhCache.get(key)).getOrElse {
-        val tf = new HashingTF().setInputCol("sh").setOutputCol("features")
-          .setNumFeatures(1 << 16).setBinary(true)
-        val slim = tf.transform(docs).select(col("doc_id"), col("features"))
-        val m = new MinHashLSH().setInputCol("features")
-          .setOutputCol("hashes").setNumHashTables(2).setSeed(Seed)
-          .fit(slim)
-        // cache WITH the signatures: approxSimilarityJoin only
-        // transforms a side whose outputCol is absent, so pre-hashed
-        // cached sides skip the per-call signature pass entirely
-        val built = m.transform(slim).persist()
-        val prev = mhCache.putIfAbsent(key, (built, m))
-        if (prev != null) { built.unpersist(); prev } else (built, m)
-      }
+    // [[brpIndex]]: keyed by session + canonicalized input plan,
+    // released via [[releaseCaches]].
+    val (feats, model) = mhCache(PlanMemo.key(Seq(docs))) {
+      val tf = new HashingTF().setInputCol("sh").setOutputCol("features")
+        .setNumFeatures(1 << 16).setBinary(true)
+      val slim = tf.transform(docs).select(col("doc_id"), col("features"))
+      val m = new MinHashLSH().setInputCol("features")
+        .setOutputCol("hashes").setNumHashTables(2).setSeed(Seed)
+        .fit(slim)
+      // cache WITH the signatures: approxSimilarityJoin only
+      // transforms a side whose outputCol is absent, so pre-hashed
+      // cached sides skip the per-call signature pass entirely
+      (m.transform(slim).persist(), m)
     }
     model.approxSimilarityJoin(feats, feats, threshold, "dist")
       .select(col("datasetA.doc_id").as("doc_id_1"),
@@ -269,17 +264,13 @@ object MlIndex {
   private def brpBuckets(emb: DataFrame, bucketLength: Double,
       numTables: Int): DataFrame = {
     import org.apache.spark.ml.functions.vector_to_array
-    val key = (emb.sparkSession, emb.queryExecution.analyzed.canonicalized,
-      bucketLength, numTables)
-    Option(bucketsCache.get(key)).getOrElse {
+    bucketsCache(Seq(emb), extra = (bucketLength, numTables)) {
       val (feats, model) = brpIndex(emb, bucketLength, numTables)
-      val built = model.transform(feats)
+      model.transform(feats)
         .select(col("vec_id"), posexplode(col("hashes")).as(Seq("tbl", "hv")))
         .select(col("vec_id"), col("tbl"),
           vector_to_array(col("hv")).getItem(0).as("bucket"))
         .persist()
-      val prev = bucketsCache.putIfAbsent(key, built)
-      if (prev != null) { built.unpersist(); prev } else built
     }
   }
 
@@ -303,9 +294,8 @@ object MlIndex {
     // entirely. The hot-path variant is persisted (slim longs, n·T
     // rows); the cold-path variant is the already-persisted buckets
     // plus a literal column, nothing new to persist.
-    val key = (emb.sparkSession, emb.queryExecution.analyzed.canonicalized,
-      bucketLength, numTables, maxOccupancy)
-    val keyed = Option(keyedCache.get(key)).getOrElse {
+    val keyed = keyedCache(Seq(emb),
+        extra = (bucketLength, numTables, maxOccupancy)) {
       val buckets = brpBuckets(emb, bucketLength, numTables)
       val hot = buckets.groupBy(col("tbl"), col("bucket"))
         .agg(count(lit(1)).as("occ"))
@@ -325,21 +315,17 @@ object MlIndex {
       // merely MERGES two cells: extra candidates that the exact
       // distance scores away — recall can only gain, and the expected
       // extra mass at 64-bit collision rates is nil.
-      val hotRows = hot.limit(1).count() > 0
-      val built =
-        if (!hotRows) buckets.select(col("vec_id"),
+      if (hot.limit(1).count() == 0) buckets.select(col("vec_id"),
           xxhash64(col("tbl"), col("bucket")).as("cell"))
-        else buckets
-          .join(VectorSearch.broadcastIfSmall(hot), Seq("tbl", "bucket"),
-            "left")
-          .select(col("vec_id"),
-            xxhash64(col("tbl"), col("bucket"),
-              when(col("nsplit").isNull, lit(0L))
-                .otherwise(pmod(xxhash64(col("vec_id"), col("tbl")),
-                  col("nsplit")))).as("cell"))
-          .persist()
-      val prev = keyedCache.putIfAbsent(key, built)
-      if (prev != null) { if (hotRows) built.unpersist(); prev } else built
+      else buckets
+        .join(VectorSearch.broadcastIfSmall(hot), Seq("tbl", "bucket"),
+          "left")
+        .select(col("vec_id"),
+          xxhash64(col("tbl"), col("bucket"),
+            when(col("nsplit").isNull, lit(0L))
+              .otherwise(pmod(xxhash64(col("vec_id"), col("tbl")),
+                col("nsplit")))).as("cell"))
+        .persist()
     }
     keyed.as("a").join(keyed.as("b"),
         col("a.cell") === col("b.cell") &&
@@ -451,9 +437,8 @@ object MlIndex {
     * Scale posture: each fit is a few passes over one Dim/PqM-wide
     * slice; training typically runs on a SAMPLE at 100 TB (faiss trains
     * on ~1M vectors), which here is the fixture itself. */
-  def pqKmeansCodebook(emb: DataFrame): Seq[Array[Double]] = {
-    val key = (emb.sparkSession, emb.queryExecution.analyzed.canonicalized)
-    Option(pqCbCache.get(key)).getOrElse {
+  def pqKmeansCodebook(emb: DataFrame): Seq[Array[Double]] =
+    pqCbCache(PlanMemo.key(Seq(emb))) {
       val sliced = emb.select(
         (0 until Ann.PqM).map(m => array_to_vector(
           slice(toDouble(col("embedding")), m * Ann.PqSub + 1, Ann.PqSub))
@@ -461,7 +446,7 @@ object MlIndex {
         .persist()
       // empty table: nothing to train on — a defined empty codebook
       // (pqTopKWith's empty-cb branch), not an MLlib fit error
-      val cb = if (sliced.isEmpty) {
+      if (sliced.isEmpty) {
         sliced.unpersist()
         Seq.empty[Array[Double]]
       } else {
@@ -482,9 +467,7 @@ object MlIndex {
           full
         }
       }
-      Option(pqCbCache.putIfAbsent(key, cb)).getOrElse(cb)
     }
-  }
 
   /** Two-stage PQ search over the TRAINED codebook — same encode + ADC
     * shortlist + exact re-rank pipeline as `ann_pq_topk`, different
@@ -513,11 +496,10 @@ object MlIndex {
     * every faiss deployment). Memoized by session + canonicalized input
     * plan, seeds offset from the flat-PQ fit so the two trainings stay
     * independent. */
-  def ivfPqKmeansCodebook(emb: DataFrame): Seq[Array[Double]] = {
-    val key = (emb.sparkSession, emb.queryExecution.analyzed.canonicalized)
-    Option(ivfPqCbCache.get(key)).getOrElse {
+  def ivfPqKmeansCodebook(emb: DataFrame): Seq[Array[Double]] =
+    ivfPqCbCache(PlanMemo.key(Seq(emb))) {
       val cb = Ann.codebook(emb)
-      val trained = if (cb.isEmpty) Seq.empty[Array[Double]] else {
+      if (cb.isEmpty) Seq.empty[Array[Double]] else {
         val cellVec = cb.tail.foldLeft(
           when(col("cent_id") === cb.head._1, vecLit(cb.head._2))) {
           case (acc, (id, cv)) => acc.when(col("cent_id") === id, vecLit(cv))
@@ -544,9 +526,7 @@ object MlIndex {
           }
         }
       }
-      Option(ivfPqCbCache.putIfAbsent(key, trained)).getOrElse(trained)
     }
-  }
 
   /** IVF-PQ search over the TRAINED residual codebook — same coarse
     * probe + residual encode + ADC shortlist + exact re-rank pipeline
@@ -564,22 +544,17 @@ object MlIndex {
     Ann.recallAtK(ivfPqKmeansTopK(s, dir, k), emb, k)
   }
 
-  private val ivfPqCbCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, org.apache.spark.sql.catalyst.plans.logical.LogicalPlan),
-    Seq[Array[Double]]]()
-
-  private val pqCbCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, org.apache.spark.sql.catalyst.plans.logical.LogicalPlan),
-    Seq[Array[Double]]]()
+  /** The trained codebooks — driver-side arrays, no storage to free. */
+  private val ivfPqCbCache = Memo.ofValues[PlanMemo.Key, Seq[Array[Double]]]
+  private val pqCbCache = Memo.ofValues[PlanMemo.Key, Seq[Array[Double]]]
 
   /** The MinHash demo's (features, fitted model) pair, memoized by
     * session + canonicalized input plan — one shingle scan + one fit
     * per distinct input, shared across Bench reps and repeat calls
     * (the round-5 regression was exactly this fit re-running per
-    * call). Same race discipline as [[brpIndex]]. */
-  private val mhCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, org.apache.spark.sql.catalyst.plans.logical.LogicalPlan),
-    (DataFrame, org.apache.spark.ml.feature.MinHashLSHModel)]()
+    * call). */
+  private val mhCache = Memo.ofFramesWith[PlanMemo.Key,
+    org.apache.spark.ml.feature.MinHashLSHModel]
 
   /** The BRP index, memoized at the same discipline as Dedup's shingle
     * cache so repeated `ml_brp_knn_join`/`ml_brp_knn_recall` calls
@@ -588,34 +563,24 @@ object MlIndex {
     * they depend on different keys: the normalized FEATURES frame is
     * knob-independent (keyed by session + canonicalized input plan —
     * a tuning sweep holds one persisted copy, not one per knob), while
-    * the fitted hash MODEL adds (bucketLength, numTables). Races use
-    * get/putIfAbsent with loser-unpersist rather than computeIfAbsent,
-    * so no Spark job (the fit) ever runs under a map bin lock, and
-    * [[releaseCaches]] removes entries atomically before unpersisting
-    * (an entry can't slip between a sweep and a clear). Snapshot
+    * the fitted hash MODEL adds (bucketLength, numTables) — as do the
+    * bucket and salted-cell tiers built on them. Every fit and
+    * materialization runs outside the memo's map ([[Memo]]). Snapshot
     * semantics: the index reflects the input as of first use; writers
     * call [[releaseCaches]] after mutating the corpus. */
-  private val featsCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, org.apache.spark.sql.catalyst.plans.logical.LogicalPlan),
-    DataFrame]()
-  private val modelCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-      Double, Int), BucketedRandomProjectionLSHModel]()
-  private val bucketsCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-      Double, Int), DataFrame]()
-  private val keyedCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-      Double, Int, Int), DataFrame]()
+  private val featsCache = new PlanMemo
+  private val modelCache =
+    Memo.ofValues[PlanMemo.Key, BucketedRandomProjectionLSHModel]
+  private val bucketsCache = new PlanMemo
+  private val keyedCache = new PlanMemo
 
   private def brpIndex(emb: DataFrame, bucketLength: Double,
       numTables: Int): (DataFrame, BucketedRandomProjectionLSHModel) = {
-    val planKey = (emb.sparkSession, emb.queryExecution.analyzed.canonicalized)
-    val feats = Option(featsCache.get(planKey)).getOrElse {
+    val feats = featsCache(Seq(emb)) {
       // unit-normalized twice-shaped: array for the codegen distance
       // kernel, vector for the MLlib hasher; persist: feeds fit, the
       // bucket projection, and both sides of the candidate re-join
-      val built = emb
+      emb
         .select(col("vec_id"), toDouble(col("embedding")).as("ve"))
         .withColumn("nrm", graft.functions.VectorFunctions.norm2(col("ve")))
         .where(col("nrm") > 0.0)
@@ -623,45 +588,25 @@ object MlIndex {
           transform(col("ve"), x => x / col("nrm")).as("uv"))
         .withColumn("features", array_to_vector(col("uv")))
         .persist()
-      val prev = featsCache.putIfAbsent(planKey, built)
-      if (prev != null) { built.unpersist(); prev } else built
     }
-    val mKey = (planKey._1, planKey._2, bucketLength, numTables)
-    val model = Option(modelCache.get(mKey)).getOrElse {
-      val m = new BucketedRandomProjectionLSH()
+    val model = modelCache(PlanMemo.key(Seq(emb), (bucketLength, numTables))) {
+      new BucketedRandomProjectionLSH()
         .setInputCol("features").setOutputCol("hashes")
         .setBucketLength(bucketLength).setNumHashTables(numTables)
         .setSeed(Seed)
         .fit(feats)
-      Option(modelCache.putIfAbsent(mKey, m)).getOrElse(m)
     }
     (feats, model)
   }
 
   def releaseCaches(): Unit = {
-    val keys = featsCache.keySet().iterator()
-    while (keys.hasNext) {
-      val v = featsCache.remove(keys.next())
-      if (v != null) v.unpersist()
-    }
-    modelCache.clear()
-    pqCbCache.clear() // driver-side arrays, no persisted frames
-    ivfPqCbCache.clear() // ditto
-    val bKeys = bucketsCache.keySet().iterator()
-    while (bKeys.hasNext) {
-      val v = bucketsCache.remove(bKeys.next())
-      if (v != null) v.unpersist()
-    }
-    val kKeys = keyedCache.keySet().iterator()
-    while (kKeys.hasNext) {
-      val v = keyedCache.remove(kKeys.next())
-      if (v != null) v.unpersist() // no-op for the unpersisted cold path
-    }
-    val mhKeys = mhCache.keySet().iterator()
-    while (mhKeys.hasNext) {
-      val v = mhCache.remove(mhKeys.next())
-      if (v != null) v._1.unpersist()
-    }
+    featsCache.release()
+    modelCache.release()
+    pqCbCache.release()
+    ivfPqCbCache.release()
+    bucketsCache.release()
+    keyedCache.release()
+    mhCache.release()
   }
 
   val defs: Seq[QueryDef] = Seq(

@@ -223,19 +223,14 @@ object Multimodal {
     * decode per branch — at 100 TB that is four corpus decodes for one
     * query. Released via [[releaseCaches]]; snapshot semantics like
     * every built index. */
-  private val sigCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Int), DataFrame]()
+  private val sigCache = Memo.ofFrames[(SparkSession, String, Int)]
 
   /** Unpersist and forget the memoized signature relations (the
     * explicit release half of the implicit index, mirroring
     * [[Dedup.releaseCaches]]). */
   def releaseCaches(): Unit = {
-    val it = sigCache.values().iterator()
-    while (it.hasNext) it.next().unpersist()
-    sigCache.clear()
-    val ait = audioSigCache.values().iterator()
-    while (ait.hasNext) ait.next().unpersist()
-    audioSigCache.clear()
+    sigCache.release()
+    audioSigCache.release()
   }
 
   /** Per-doc pHash signature side: features f0..f7 plus the 4 banded
@@ -244,8 +239,7 @@ object Multimodal {
     * empty payloads are dropped (no features to compare). */
   private def phashSig(s: SparkSession, dir: String,
       levels: Int): DataFrame =
-    sigCache.computeIfAbsent((s, dir, levels), _ =>
-      phashSigPlan(s, dir, levels).persist())
+    sigCache((s, dir, levels))(phashSigPlan(s, dir, levels).persist())
 
   private def phashSigPlan(s: SparkSession, dir: String,
       levels: Int): DataFrame = {
@@ -421,12 +415,10 @@ object Multimodal {
     * [[sigCache]] discipline for the audio modality (feeds the band
     * self-join's both sides plus both verify fetches). Released via
     * [[releaseCaches]]. */
-  private val audioSigCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]()
+  private val audioSigCache = Memo.ofFrames[(SparkSession, String)]
 
   private def audioSig(s: SparkSession, dir: String): DataFrame =
-    audioSigCache.computeIfAbsent((s, dir), _ =>
-      audioSigPlan(s, dir).persist())
+    audioSigCache((s, dir))(audioSigPlan(s, dir).persist())
 
   /** Fingerprint + band columns for every decodable AUDIO payload —
     * the modality filter is relational (scan-side; at 100 TB it is the

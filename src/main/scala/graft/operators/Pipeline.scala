@@ -1397,22 +1397,20 @@ object Pipeline {
     * (a narrow distribution) simply leave middle phases empty, in both
     * engines. */
   def curriculumPhases(s: SparkSession, dir: String): DataFrame = {
-    // tokenized counts cached across the protocol's rounds AND the
-    // final per-phase aggregate; released once the thresholds (a
-    // 3-row local relation) are in hand — the final aggregate then
-    // re-tokenizes once, which is the floor for any formulation
+    // the protocol caches its own input for its rounds
+    // ([[Events.exactQuantilesOn]]), so the counts tokenize once there
+    // and once more for the final per-phase aggregate — the floor for
+    // any formulation; no caller-side persist on top.
     // optBarrier: the n_words > 0 gate otherwise re-tokenizes every
     // document inside the substituted Filter (2 tokenize evals/row on
-    // the persist's first materialization and on the post-release pass)
+    // each pass)
     val v = Tables(s, dir, "documents")
       .select(col("doc_id"), graft.functions.TextHashExpressions
         .optBarrier(size(words(col("text"))).cast("long")).as("n_words"))
-      .where(col("n_words") > 0).persist()
-    val thresholds =
-      try Events.exactQuantilesOn(v.select(col("n_words")),
-          "n_words", pcts = CurriculumPcts)
-        .collect().map(_.getAs[Long]("n_words")).sorted
-      finally { v.unpersist(); () }
+      .where(col("n_words") > 0)
+    val thresholds = Events.exactQuantilesOn(v.select(col("n_words")),
+        "n_words", pcts = CurriculumPcts)
+      .collect().map(_.getAs[Long]("n_words")).sorted
     val phase = thresholds.foldLeft(lit(1)) { (acc, t) =>
       acc + when(col("n_words") > t, 1).otherwise(0) }
     v.select(col("doc_id"), col("n_words"), phase.cast("int").as("phase"))

@@ -3,18 +3,23 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
-/** ONE implementation of the repo's memoize-by-canonicalized-plan
-  * discipline (the CLAUDE.md invariant behind the Dedup shingle cache,
-  * the Pipeline quota/histogram/gate caches, and the WAND hits
+/** The repo's memoize-by-canonicalized-plan discipline (the CLAUDE.md
+  * invariant behind the Dedup shingle cache, the Pipeline quota/
+  * histogram/gate caches, the MlIndex BRP tiers and the WAND hits
   * materialization): a materialized DataFrame keyed by (session,
-  * canonicalized input plans [, extra]), living until [[release]].
+  * canonicalized input plans [, extra]), living until [[release]]. The
+  * race and drain policy is [[Memo]]'s; this class only computes the
+  * key ([[PlanMemo.key]]), which the driver-value memos keyed the same
+  * way reuse.
   *
   * The caller's `build` owns HOW to materialize — `.persist()` for
   * cached relations, repartition + `localCheckpoint()` for lineage
-  * cuts — and [[release]] frees EITHER storage kind eagerly: cache-
-  * manager entries unpersist, a localCheckpoint's blocks are dropped
-  * through its captured RDD (the cache manager never tracked them, and
-  * waiting on GC + the context cleaner is not a release policy).
+  * cuts — and [[release]] frees EITHER storage kind eagerly: a
+  * cache-manager entry unpersists, a localCheckpoint's blocks are
+  * dropped through its captured RDD. A losing racer never unpersists
+  * a cache-manager entry whose canonicalized plan equals the winner's
+  * (the cache manager dedups by plan, so it IS the winner's entry);
+  * its localCheckpoint RDD is always dropped ([[Memo.ofFrames]]).
   *
   * SNAPSHOT semantics, by design and shared by every user: an entry
   * reflects its inputs AS OF first use — rewriting the underlying
@@ -24,78 +29,28 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
   * previously returned frames are DEAD (storage dropped; a
   * checkpointed frame has no lineage to recompute from). */
 private[operators] final class PlanMemo {
-  private val m = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, Seq[LogicalPlan], Any), DataFrame]()
+  private val m = Memo.ofFrames[PlanMemo.Key]
 
   /** Memoized `build` result for these input frames (plus an optional
-    * non-plan key component, e.g. a quantization level).
-    *
-    * The build runs OUTSIDE the map (compute-then-putIfAbsent, not
-    * computeIfAbsent): a Spark job must never execute under a CHM bin
-    * lock — a recursive memo use would deadlock there, and two distinct
-    * keys hashing to one bin would serialize their materializations.
-    * The cost is that two concurrent first callers of the SAME key both
-    * materialize; the losing racer frees its copy and returns the
-    * winner's. */
+    * non-plan key component, e.g. a quantization level). The build runs
+    * outside the map; two concurrent first callers of one key both
+    * build, and the loser frees its copy and returns the winner's. */
   def apply(inputs: Seq[DataFrame], extra: Any = ())(
-      build: => DataFrame): DataFrame = {
+      build: => DataFrame): DataFrame =
+    m(PlanMemo.key(inputs, extra))(build)
+
+  /** Eagerly free every entry's storage and forget it ([[Memo.release]]:
+    * a drain by key, not a close). */
+  def release(): Unit = m.release()
+}
+
+private[operators] object PlanMemo {
+  type Key = (SparkSession, Seq[LogicalPlan], Any)
+
+  /** (session, canonicalized input plans, extra). */
+  def key(inputs: Seq[DataFrame], extra: Any = ()): Key = {
     require(inputs.nonEmpty, "PlanMemo needs at least one input frame")
-    val key = (inputs.head.sparkSession,
+    (inputs.head.sparkSession,
       inputs.map(_.queryExecution.analyzed.canonicalized), extra)
-    val hit = m.get(key)
-    if (hit != null) hit
-    else {
-      val built = build
-      val raced = m.putIfAbsent(key, built)
-      if (raced == null) built
-      else {
-        // Free the loser's materialization — EXCEPT a cache-manager
-        // entry whose canonicalized plan matches the winner's: the
-        // cache manager dedups by plan, so that "copy" IS the winner's
-        // entry and unpersisting it would strip the winner's storage.
-        // A localCheckpoint's LogicalRDD is always a distinct RDD and
-        // always safe to drop.
-        built.queryExecution.logical match {
-          case l: org.apache.spark.sql.execution.LogicalRDD =>
-            l.rdd.unpersist(false): Unit
-          case p if p.canonicalized !=
-              raced.queryExecution.logical.canonicalized =>
-            built.unpersist(): Unit
-          case _ => ()
-        }
-        raced
-      }
-    }
-  }
-
-  private def free(df: DataFrame): Unit =
-    df.queryExecution.logical match {
-      case l: org.apache.spark.sql.execution.LogicalRDD =>
-        l.rdd.unpersist(false): Unit
-      case _ => df.unpersist(): Unit
-    }
-
-  /** Eagerly free every entry's storage and forget it. Drains by key
-    * (remove-then-free) so an `apply` racing with release cannot slip
-    * an entry in behind a values() snapshot and have clear() forget it
-    * unfreed — whichever side removes the mapping owns the free.
-    *
-    * Release is a DRAIN, not a close: an insert whose putIfAbsent
-    * lands after this loop's final isEmpty check stays a LIVE memo
-    * entry (visible to later apply() hits, freed by the next
-    * release) — it is never forgotten-but-unfreed, but a caller who
-    * races the engine's shutdown release can re-populate the memo.
-    * Benign under the repo's lifecycle (release runs at shutdown /
-    * after input mutation, when no concurrent apply is in flight by
-    * contract); a memo that must stay empty after release would need
-    * a closed flag making post-release inserts free their own build. */
-  def release(): Unit = {
-    while (!m.isEmpty) {
-      val keys = m.keySet().iterator()
-      while (keys.hasNext) {
-        val df = m.remove(keys.next())
-        if (df != null) free(df)
-      }
-    }
   }
 }

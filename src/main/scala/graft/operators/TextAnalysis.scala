@@ -1595,18 +1595,12 @@ object TextAnalysis {
     * the batch slice, then the clustered rewrite — the full lifecycle
     * (init → refresh → compact) the streaming face drives, queried
     * through the connector against the from-scratch oracle. */
-  private val manifestIndexes = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), String]()
+  private val manifestIndexes =
+    new FixtureTables[String]("graft-text-mindex-")(identity)
 
   private[graft] def manifestTextIndexFor(s: SparkSession,
-      dir: String): String = {
-    val key = (s, dir)
-    Option(manifestIndexes.get(key)).getOrElse {
-      val path = java.nio.file.Files
-        .createTempDirectory("graft-text-mindex-").toString
-      Runtime.getRuntime.addShutdownHook(new Thread(() =>
-        org.apache.commons.io.FileUtils
-          .deleteQuietly(new java.io.File(path)): Unit))
+      dir: String): String =
+    manifestIndexes(s, dir) { path =>
       val docs = Tables(s, dir, "documents").select("doc_id", "text")
       initManifestTextIndex(s, path)
       refreshManifestTextIndex(
@@ -1614,12 +1608,8 @@ object TextAnalysis {
       refreshManifestTextIndex(
         docs.where(col("doc_id") % 10 === 1), path, "delta-1")
       compactManifestTextIndex(s, path)
-      Option(manifestIndexes.putIfAbsent(key, path)).map { prev =>
-        org.apache.commons.io.FileUtils
-          .deleteQuietly(new java.io.File(path)); prev // racing builder
-      }.getOrElse(path)
+      path
     }
-  }
 
   /** Memoized REFRESHED index behind `text_index_refresh`: base build
     * from the anchored manifest snapshot (the stored nightly state),
@@ -1628,31 +1618,21 @@ object TextAnalysis {
     * refreshed index must answer queries bitwise like an index built
     * from the full corpus — the driver's oracle recomputes from
     * scratch, which is the mergeability proof. */
-  private val refreshedIndexes = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), String]()
+  private val refreshedIndexes =
+    new FixtureTables[String]("graft-text-refresh-")(identity)
 
   private[graft] def refreshedTextIndexFor(s: SparkSession,
-      dir: String): String = {
-    val key = (s, dir)
-    Option(refreshedIndexes.get(key)).getOrElse {
+      dir: String): String =
+    refreshedIndexes(s, dir) { path =>
       val (table, anchor) = Dedup.manifestDocsTable(s, dir)
-      val path = java.nio.file.Files
-        .createTempDirectory("graft-text-refresh-").toString
-      Runtime.getRuntime.addShutdownHook(new Thread(() =>
-        org.apache.commons.io.FileUtils
-          .deleteQuietly(new java.io.File(path)): Unit))
       buildTextIndex(graft.sources.ManifestStore
         .readAsOfInferred(s, table, "docs", anchor)
         .select("doc_id", "text"), path)
       refreshTextIndex(graft.sources.ManifestStore
         .readSinceInferred(s, table, "docs", anchor)
         .select("doc_id", "text"), path)
-      Option(refreshedIndexes.putIfAbsent(key, path)).map { prev =>
-        org.apache.commons.io.FileUtils
-          .deleteQuietly(new java.io.File(path)); prev // racing builder
-      }.getOrElse(path)
+      path
     }
-  }
 
   /** Index OBSERVABILITY — per-bucket occupancy of the materialized
     * postings store ([[Ann.lshBuckets]]'s discipline applied to text):
@@ -1675,42 +1655,25 @@ object TextAnalysis {
     * the implicit index behind the `text_index_search` declared query;
     * lifecycle mirrors [[Ann.ivfStoreFor]] (torn down by
     * [[releaseCaches]], shutdown hook for lifecycle-skipping drivers). */
-  private val textIndexes = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), String]()
+  private val textIndexes =
+    new FixtureTables[String]("graft-text-index-")(identity)
 
-  private[graft] def textIndexFor(s: SparkSession, dir: String): String = {
-    val key = (s, dir)
-    Option(textIndexes.get(key)).getOrElse {
-      val path = java.nio.file.Files
-        .createTempDirectory("graft-text-index-").toString
-      Runtime.getRuntime.addShutdownHook(new Thread(() =>
-        org.apache.commons.io.FileUtils
-          .deleteQuietly(new java.io.File(path)): Unit))
+  private[graft] def textIndexFor(s: SparkSession, dir: String): String =
+    textIndexes(s, dir) { path =>
       buildTextIndex(Tables(s, dir, "documents"), path)
-      Option(textIndexes.putIfAbsent(key, path)).map { prev =>
-        org.apache.commons.io.FileUtils
-          .deleteQuietly(new java.io.File(path)); prev // racing builder
-      }.getOrElse(path)
+      path
     }
-  }
 
   /** Memoized DF-CAPPED index behind `text_index_capped`: the same
     * corpus, built with the [[TextIndexDfCapPct]] cap resolved against
     * its own size — stopword-class posting lists never stored,
     * surviving terms' answers bitwise the uncapped index's (the oracle
     * mirrors the floored cap arithmetic in SQL). */
-  private val cappedTextIndexes = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), String]()
+  private val cappedTextIndexes =
+    new FixtureTables[String]("graft-text-capped-")(identity)
 
-  private[graft] def cappedTextIndexFor(s: SparkSession,
-      dir: String): String = {
-    val key = (s, dir)
-    Option(cappedTextIndexes.get(key)).getOrElse {
-      val path = java.nio.file.Files
-        .createTempDirectory("graft-text-capped-").toString
-      Runtime.getRuntime.addShutdownHook(new Thread(() =>
-        org.apache.commons.io.FileUtils
-          .deleteQuietly(new java.io.File(path)): Unit))
+  private[graft] def cappedTextIndexFor(s: SparkSession, dir: String): String =
+    cappedTextIndexes(s, dir) { path =>
       val docs = Tables(s, dir, "documents")
       // project-then-filter (not a bare where) keeps the tokenize out
       // of the FilterExec — one eval per row, and the plan-audit's
@@ -1720,24 +1683,16 @@ object TextAnalysis {
           .optBarrier(size(words(col("text")))).as("nw"))
         .where(col("nw") > 0).count()
       buildTextIndex(docs, path, dfCap = nDocs * TextIndexDfCapPct / 100L)
-      Option(cappedTextIndexes.putIfAbsent(key, path)).map { prev =>
-        org.apache.commons.io.FileUtils
-          .deleteQuietly(new java.io.File(path)); prev // racing builder
-      }.getOrElse(path)
+      path
     }
-  }
 
   /** Drop every memoized materialized text index (every main calls
     * this on shutdown). */
   def releaseCaches(): Unit = {
-    Seq(textIndexes, cappedTextIndexes, refreshedIndexes,
-        manifestIndexes).foreach { m =>
-      val it = m.values().iterator()
-      while (it.hasNext)
-        org.apache.commons.io.FileUtils
-          .deleteQuietly(new java.io.File(it.next()))
-      m.clear()
-    }
+    textIndexes.release()
+    cappedTextIndexes.release()
+    refreshedIndexes.release()
+    manifestIndexes.release()
     wandHitsCache.release() // eagerly drops the checkpoint blocks
   }
 

@@ -46,19 +46,31 @@ class PlanAuditSpec extends SparkSpecBase {
 
   test("every declared query plans with ZERO kernel calls inside " +
       "FilterExec") {
+    // what planning every query leaves behind must be exactly what the
+    // one teardown list frees: no persisted RDD and no graft-* temp
+    // directory may outlive Caches.releaseAll()
+    def persisted: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    def graftTempDirs: Set[String] =
+      Option(new java.io.File(System.getProperty("java.io.tmpdir"))
+          .listFiles()).toSeq.flatten
+        .filter(f => f.isDirectory && f.getName.startsWith("graft-"))
+        .map(_.getName).toSet
+    val (rddsBefore, dirsBefore) = (persisted, graftTempDirs)
     val dirty = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
       case (name, f) =>
         val hits = DevPlanAudit
           .filterKernelHits(f(spark, sf).queryExecution.executedPlan)
         if (hits.isEmpty) None else Some(s"$name: ${hits.mkString(", ")}")
     }
+    Caches.releaseAll()
     assert(dirty.isEmpty,
       s"kernel re-evals inside Filter:\n${dirty.mkString("\n")}")
-    graft.operators.Dedup.releaseCaches()
-    graft.operators.Pipeline.releaseCaches()
-    graft.operators.MlIndex.releaseCaches()
-    graft.operators.Events.releaseCaches()
-    graft.operators.Multimodal.releaseCaches()
-    graft.operators.Ann.releaseCaches()
+    val leakedRdds = persisted -- rddsBefore
+    assert(leakedRdds.isEmpty, "persisted RDDs survive releaseAll: " +
+      leakedRdds.toSeq.sorted.map(spark.sparkContext.getPersistentRDDs(_))
+        .mkString(", "))
+    val leakedDirs = graftTempDirs -- dirsBefore
+    assert(leakedDirs.isEmpty, "temp directories survive releaseAll: " +
+      leakedDirs.toSeq.sorted.mkString(", "))
   }
 }
