@@ -205,7 +205,7 @@ object Bench {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // JVM/codegen session warmup so the first query's number measures the
-    // query, not executor + codegen init (same as DevProfile).
+    // query, not executor + codegen init (same as `Dev profile`).
     spark.range(1000).selectExpr("sum(id)").collect()
     // CALIBRATION ANCHOR — a pinned, data-independent probe (in-memory
     // range → shuffle agg → sort) measured with the same

@@ -2,8 +2,8 @@ package graft
 import org.apache.spark.sql.execution.SparkPlan
 /** Flag declared queries whose physical Filter conditions re-evaluate
   * expensive text kernels (the substituted-gate pathology the
-  * `optBarrier` discipline exists to prevent), plus a dev main for
-  * ad-hoc runs. The scan itself is pure and CI-pinned
+  * `optBarrier` discipline exists to prevent); `graft.Dev audit` runs
+  * it over every declared query. The scan itself is pure and CI-pinned
   * (`PlanAuditSpec` keeps the suite-wide hit count at zero). */
 object DevPlanAudit {
   /** Kernel CALL markers — name + paren, so attributes named after a
@@ -34,21 +34,5 @@ object DevPlanAudit {
       case _ =>
     }
     hits
-  }
-
-  def main(args: Array[String]): Unit = {
-    val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.01"
-    val spark = DevSession()
-    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, f) =>
-      try {
-        val hits = filterKernelHits(f(spark, sfDir).queryExecution.executedPlan)
-        if (hits.nonEmpty)
-          println(s"AUDIT $name: filter re-evaluates ${hits.mkString(", ")}")
-      } catch { case e: Throwable =>
-        println(s"AUDIT $name: ERROR ${e.getClass.getSimpleName}")
-      }
-    }
-    Caches.releaseAll()
-    spark.stop()
   }
 }

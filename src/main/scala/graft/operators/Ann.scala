@@ -19,9 +19,8 @@ import graft.functions.{VectorExpressions => V}
   *   - '''Sign-hyperplane LSH''' (random-projection hashing for cosine):
   *     each vector hashes to an int bucket from the sign pattern of
   *     `NPlanes` fixed hyperplane dot products; a query probes its own
-  *     bucket plus all Hamming-distance-1 buckets. At 100 TB the bucket id
-  *     becomes a partition/cluster column — the probe is then partition
-  *     pruning, reading 9/256ths of the data instead of all of it.
+  *     bucket plus all Hamming-distance-1 buckets — 9 of 256 buckets,
+  *     a cell filter over the scan.
   *
   *   - '''IVF-flat''' (inverted file): vectors are assigned to their
   *     nearest of `NList` centroids; a query scans only the `NProbe`
@@ -29,6 +28,13 @@ import graft.functions.{VectorExpressions => V}
   *     the data (so the DuckDB oracle can re-derive the identical index);
   *     at scale they'd come from distributed k-means (MLlib `KMeans`), and
   *     cell assignment is exactly this same broadcast-argmin job.
+  *
+  * Every STORED index (IVF, binary-sign, PQ) persists through one
+  * layer: tagged `ManifestStore.storeBatch` commits (atomic,
+  * replay-idempotent) plus `zorderCompact`. A stored probe prunes
+  * whole segments through the zone-map sidecars `GraftFileIndex`
+  * proves against — for IVF, the `cent_id IN (…)` probe after
+  * clustered compaction ([[compactManifestIvfIndex]]).
   *
   * Both indexes are built with one broadcast join + windowed argmin — no
   * shuffle of the vector table — and both searches stay
@@ -88,40 +94,6 @@ object Ann {
       .orderBy(col("similarity").desc, col("vec_id"))
       .limit(k)
 
-  /** Materialize the LSH index as a bucket-partitioned parquet store:
-    * probes against the result are directory-level partition pruning
-    * (AnnPartitionSpec proves the PartitionFilters + identical results).
-    * This is the "build index" batch job of the 100 TB layout. */
-  def buildLshIndex(emb: DataFrame, path: String): Unit =
-    emb.withColumn("bucket", bucketCol(col("embedding")))
-      .write.mode("overwrite").partitionBy("bucket").parquet(path)
-
-  /** Materialize the IVF index as a cell-partitioned parquet store. */
-  def buildIvfIndex(emb: DataFrame, path: String): Unit =
-    ivfAssign(emb)
-      .write.mode("overwrite").partitionBy("cent_id").parquet(path)
-
-  /** INCREMENTAL index maintenance — faiss's train-then-add applied to
-    * the materialized layout: new vectors are assigned with the
-    * STORE'S OWN codebook (the centroid rows it already holds — fixed
-    * at build time, exactly like a trained faiss index) and appended
-    * into their cells' existing `cent_id=` directories. Refresh cost
-    * scales with the batch (one scan-side assignment projection + an
-    * append write), never the store; probes over the refreshed store
-    * are bitwise a full rebuild's because assignment arithmetic and
-    * codebook are identical. The codebook rows themselves must be part
-    * of the initial build — they ARE the trained index. */
-  def refreshIvfIndex(batch: DataFrame, path: String): Unit = {
-    val s = batch.sparkSession
-    val cb = s.read.parquet(path)
-      .where(col("vec_id").isin(CentroidIds: _*))
-      .select(col("vec_id"), col("v")).collect()
-      .map(r => r.getLong(0) -> r.getSeq[Double](1).toArray)
-      .sortBy(_._1).toSeq
-    ivfAssign(batch, cb)
-      .write.mode("append").partitionBy("cent_id").parquet(path)
-  }
-
   // ----------------------------------------------------------------
   // manifest-backed IVF index — versioned, exactly-once maintenance
   // ----------------------------------------------------------------
@@ -160,13 +132,18 @@ object Ann {
     graft.sources.ManifestStore.setZoneMapColumns(s, tablePath,
       Seq("cent_id"))
 
+  /** Every row of the versioned IVF index, both kinds, through the
+    * declarative connector. */
+  private def ivfIndexRows(s: SparkSession, tablePath: String): DataFrame =
+    s.read.format("graft").option("path", tablePath)
+      .option("collection", IvfIndexCollection).load()
+
   /** The versioned index's codebook read back from its `'c'` rows —
     * fails LOUD on an index without one (predates versioning /
     * different store) or with conflicting codebook commits. */
   def manifestCodebook(s: SparkSession,
       tablePath: String): Seq[(Long, Array[Double])] = {
-    val rows = s.read.format("graft").option("path", tablePath)
-      .option("collection", IvfIndexCollection).load()
+    val rows = ivfIndexRows(s, tablePath)
       .where(col("kind") === "c").select(col("cent_id"), col("v"))
       .collect()
       .map(r => r.getLong(0) -> r.getSeq[Double](1).toArray)
@@ -223,8 +200,7 @@ object Ann {
     val probeIds = cb
       .map { case (id, cv) => (l2Scalar(Query, cv), id) }
       .sorted.take(NProbe).map(_._2)
-    s.read.format("graft").option("path", tablePath)
-      .option("collection", IvfIndexCollection).load()
+    ivfIndexRows(s, tablePath)
       .where(col("kind") === "v" && col("cent_id").isin(probeIds: _*))
       // label narrows back to the embeddings table's int — the output
       // schema (and the driver's type-sensitive hash) must match the
@@ -236,7 +212,8 @@ object Ann {
       .limit(k)
   }
 
-  /** Memoized manifest IVF index behind `ann_ivf_manifest`: init →
+  /** Memoized manifest IVF index behind `ann_ivf_manifest`,
+    * `ann_ivf_stored`, `ann_ivf_refresh` and `ann_ivf_stats`: init →
     * training commit (everything but the batch slice, centroids always
     * in the train set) → delta commit assigned by the STORED codebook →
     * clustered compaction — the full lifecycle, queried through the
@@ -257,48 +234,10 @@ object Ann {
       path
     }
 
-  /** Memoized REFRESHED IVF store behind `ann_ivf_refresh`: base build
-    * over everything but the held-out batch slice (centroids always in
-    * the base — the train set), then [[refreshIvfIndex]] appends the
-    * batch. Searches must answer bitwise like the full-corpus store —
-    * the driver's oracle recomputes assignment from scratch. */
-  private val ivfRefreshed =
-    new FixtureTables[String]("graft-ivf-refresh-")(identity)
-
-  private[graft] def refreshedIvfStoreFor(s: SparkSession,
-      dir: String): String =
-    ivfRefreshed(s, dir) { path =>
-      val emb = Tables(s, dir, "embeddings")
-      val batchPred = col("vec_id") % 10 === 1 &&
-        !col("vec_id").isin(CentroidIds: _*)
-      buildIvfIndex(emb.where(!batchPred), path)
-      refreshIvfIndex(emb.where(batchPred), path)
-      path
-    }
-
-  /** Memoized materialized IVF store for a fixture dir — the implicit
-    * index behind the `ann_ivf_stored` declared query (built once per
-    * (session, dir) into a temp path, the [[graft.operators.Events
-    * .manifestEventsTable]] lifecycle; torn down by
-    * [[releaseCaches]], with a shutdown hook covering lifecycle-
-    * skipping drivers). */
-  private val ivfStores =
-    new FixtureTables[String]("graft-ivf-store-")(identity)
-
-  private[graft] def ivfStoreFor(s: SparkSession, dir: String): String =
-    ivfStores(s, dir) { path =>
-      buildIvfIndex(Tables(s, dir, "embeddings"), path)
-      path
-    }
-
-  /** Drop every memoized materialized IVF store (the explicit release
-    * half of the implicit index; every main calls this on shutdown). */
+  /** Drop every memoized manifest index (the explicit release half of
+    * the implicit indexes; every main calls this on shutdown). */
   def releaseCaches(): Unit = {
-    ivfStores.release()
-    ivfRefreshed.release()
     manifestIvfIndexes.release()
-    binaryIndexes.release()
-    binaryRefreshed.release()
     manifestBinaryIndexes.release()
     manifestPqIndexes.release()
   }
@@ -360,8 +299,8 @@ object Ann {
     * Probe cells are chosen driver-side from the codebook (same
     * arithmetic as the scan side); the whole query is then
     * scan → assign(projection) → cell filter → score → TakeOrdered —
-    * zero shuffles, and with the assignment precomputed as a partition
-    * column the filter becomes partition pruning. */
+    * zero shuffles. With the assignment stored in the manifest index
+    * ([[ivfManifestTopK]]) the filter becomes segment pruning. */
   def ivfTopK(emb: DataFrame, k: Int = K): DataFrame = {
     val cb = codebook(emb)
     val probeIds = cb
@@ -375,45 +314,19 @@ object Ann {
       .limit(k)
   }
 
-  /** [[ivfTopK]] over a MATERIALIZED cell-partitioned store — the
-    * 100 TB layout this module's scaladoc promises: [[buildIvfIndex]]
-    * wrote `cent_id` as the parquet partition column, so the probe's
-    * cell filter is DIRECTORY-level partition pruning (the scan lists
-    * and reads only the NProbe probed `cent_id=` directories; every
-    * other cell costs nothing, not even a footer read). The codebook
-    * is re-read from the store's own centroid rows (nlist rows — index
-    * metadata, the [[codebook]] collect against the stored relation);
-    * scoring then runs on the stored pre-decoded `v`. Results are
-    * bitwise the compute-on-scan [[ivfTopK]]'s (AnnPartitionSpec pins
-    * both the equality and the PartitionFilters). */
-  def ivfTopKStored(store: DataFrame, k: Int = K): DataFrame = {
-    val cb = store.where(col("vec_id").isin(CentroidIds: _*))
-      .select(col("vec_id"), col("v"))
-      .collect()
-      .map(r => r.getLong(0) -> r.getSeq[Double](1).toArray)
-      .sortBy(_._1).toSeq
-    val probeIds = cb
-      .map { case (id, cv) => (l2Scalar(Query, cv), id) }
-      .sorted.take(NProbe).map(_._2)
-    store.where(col("cent_id").isin(probeIds: _*))
-      .select(col("vec_id"), col("label"),
-        col("cent_id").cast("long").as("cent_id"),
-        V.dot(vecLit(QueryNorm), col("v")).as("similarity"))
-      .orderBy(col("similarity").desc, col("vec_id"))
-      .limit(k)
-  }
-
-  /** Per-cell occupancy audit of the MATERIALIZED IVF store — the
+  /** Per-cell occupancy audit of the STORED IVF index — the
     * `text_index_stats` discipline applied to the one index family
     * that had spec coverage but no standing declared integrity face:
     * each stored cell's vector count, its share of the corpus, and
     * the hottest cell's share (the `nlist` tuning signal SemDeDup's
     * largest-cell join bound depends on — a hot_share near 1 means
-    * the index has degenerated to brute force). Reads the STORE
-    * (cent_id-only column-pruned scan — bytes per vector, no
-    * payload); the oracle recomputes every assignment from the raw
-    * embeddings, so stored ≡ recompute IS the integrity claim, the
-    * same from-scratch discipline as the probe oracles. */
+    * the index has degenerated to brute force). Reads the manifest
+    * index's `'v'` rows (a `kind`+`cent_id` column-pruned scan — bytes
+    * per vector, never the `v` payload; the `'c'` codebook rows carry
+    * a `cent_id` too, so the caller filters them out); the oracle
+    * recomputes every assignment from the raw embeddings, so stored ≡
+    * recompute IS the integrity claim, the same from-scratch
+    * discipline as the probe oracles. */
   def ivfStats(store: DataFrame): DataFrame = {
     val w = Window.partitionBy(lit(1))
     store
@@ -675,8 +588,9 @@ object Ann {
     * declarative plan.
     *
     * Plan: scan → cell assign (fused argmin projection) → probe filter
-    * (NProbe of NList cells — with `cent_id` as a partition column this
-    * is partition pruning, reading 1/4 of the data) → residual
+    * (NProbe of NList cells — with `cent_id` stored and clustered, as in
+    * the manifest IVF index, this is zone-map segment pruning, reading
+    * 1/4 of the data) → residual
     * `v − c_cell` (`zip_with`, the cell centroid a when-chain literal
     * over the NProbe probed ids) → [[PqM]] residual argmin kernels →
     * ADC score `dot(q, c_cell) + Σ_m lut[m][code_m]` (inner product
@@ -1099,30 +1013,8 @@ object Ann {
   def binaryRecallAtK(emb: DataFrame, k: Int = K): DataFrame =
     recallAtK(binaryTopK(emb, k), emb, k)
 
-  /** Materialize the binary-sign index: ONE 8-byte signature per
-    * vector ([[packedSig]]), stored next to nothing else — the
-    * resident tier a RAM-constrained deployment keeps hot (64× under
-    * the raw doubles; 100 TB of fp64 vectors sign-pack to ~1.5 TB).
-    * The full-precision vectors stay in the source table and are read
-    * only for the shortlist rerank. */
-  def buildBinaryIndex(emb: DataFrame, path: String): Unit =
-    emb.select(col("vec_id"),
-        packedSig(toDouble(col("embedding"))).as("sig"))
-      .write.mode("overwrite").parquet(path)
-
-  /** Binary-sign search over the MATERIALIZED signature store: the
-    * Hamming pass scans ONLY the 8-byte-per-vector index (the corpus's
-    * doubles are untouched), the [[BinaryShortlist]] survivors join
-    * back to the vector table for the exact-cosine rerank — bitwise
-    * [[binaryTopK]]'s answers (same pack, same tie order), same
-    * oracle. */
-  def binaryStoredTopK(s: SparkSession, path: String, emb: DataFrame,
-      k: Int = K): DataFrame =
-    binaryRerank(sigShortlist(s.read.parquet(path)), emb, k)
-
-  /** Hamming shortlist over a (vec_id, sig) relation — shared by the
-    * parquet, refreshed, and manifest faces (one pack, one tie
-    * order). */
+  /** Hamming shortlist over a (vec_id, sig) relation — the stored
+    * faces' one pack and one tie order. */
   private def sigShortlist(sigs: DataFrame): DataFrame = {
     val qSig = packedSigLocal(Query)
     sigs
@@ -1180,50 +1072,9 @@ object Ann {
         .option("collection", BinaryIndexCollection).load()
         .select("vec_id", "sig")), emb, k)
 
-  /** INCREMENTAL signature maintenance — [[refreshIvfIndex]]'s
-    * discipline at its simplest: signatures are per-row and
-    * position-independent (no codebook, no layout keys), so applying
-    * an appended vector batch is a PURE APPEND of the batch's own
-    * 8-byte signatures — base files untouched, refresh cost scales
-    * with the batch, never the store, and probes over the refreshed
-    * store are bitwise a full rebuild's because the pack arithmetic
-    * is stateless. */
-  def refreshBinaryIndex(batch: DataFrame, path: String): Unit =
-    batch.select(col("vec_id"),
-        packedSig(toDouble(col("embedding"))).as("sig"))
-      .write.mode("append").parquet(path)
-
-  /** Memoized signature store behind `ann_binary_stored` — lifecycle
-    * mirrors [[ivfStoreFor]] (released by [[releaseCaches]]). */
-  private val binaryIndexes =
-    new FixtureTables[String]("graft-binary-index-")(identity)
-
-  private[graft] def binaryIndexFor(s: SparkSession, dir: String): String =
-    binaryIndexes(s, dir) { path =>
-      buildBinaryIndex(Tables(s, dir, "embeddings"), path)
-      path
-    }
-
-  /** Memoized REFRESHED signature store behind `ann_binary_refresh`:
-    * base build over everything but the held-out batch slice, then
-    * [[refreshBinaryIndex]] appends the batch's signatures. Searches
-    * must answer bitwise like the full-corpus store — same oracle as
-    * `ann_binary_stored` ([[refreshedIvfStoreFor]]'s discipline). */
-  private val binaryRefreshed =
-    new FixtureTables[String]("graft-binary-refresh-")(identity)
-
-  private[graft] def refreshedBinaryIndexFor(s: SparkSession,
-      dir: String): String =
-    binaryRefreshed(s, dir) { path =>
-      val emb = Tables(s, dir, "embeddings")
-      val batchPred = col("vec_id") % 10 === 1
-      buildBinaryIndex(emb.where(!batchPred), path)
-      refreshBinaryIndex(emb.where(batchPred), path)
-      path
-    }
-
   /** Memoized VERSIONED (manifest) signature index behind
-    * `ann_binary_manifest`: init → two tagged commits (base + delta,
+    * `ann_binary_manifest`, `ann_binary_stored` and
+    * `ann_binary_refresh`: init → two tagged commits (base + delta,
     * both pure appends) — the lifecycle [[manifestIvfIndexFor]] runs,
     * minus training; queried through the connector against the same
     * from-scratch oracle as [[binaryTopK]]. */
@@ -1474,7 +1325,7 @@ object Ann {
        |  FROM s)""".stripMargin
 
   /** Shared oracle for [[binaryTopK]] and its stored-signature twin
-    * ([[binaryStoredTopK]]) — one SQL verifies both faces. */
+    * ([[binaryManifestTopK]]) — one SQL verifies both faces. */
   private lazy val binaryTopKOracleSql: String = {
     val qSig = packedSigLocal(Query)
     s"""WITH q AS (SELECT $qNormSql AS v),
@@ -1603,20 +1454,20 @@ object Ann {
       (s, dir) => binaryTopK(Tables(s, dir, "embeddings"))
     },
 
-    // the MATERIALIZED signature store: the Hamming pass reads 8 bytes
-    // per vector, the corpus's doubles only join in for the shortlist
+    // the STORED signature index: the Hamming pass reads 8 bytes per
+    // vector, the corpus's doubles only join in for the shortlist
     // rerank — bitwise the scan face, same oracle
     QueryDef.sql("ann_binary_stored", binaryTopKOracleSql) {
-      (s, dir) => binaryStoredTopK(s, binaryIndexFor(s, dir),
+      (s, dir) => binaryManifestTopK(s, manifestBinaryIndexFor(s, dir),
         Tables(s, dir, "embeddings"))
     },
 
-    // INCREMENTALLY REFRESHED signature store: base build minus a
-    // held-out slice, then a pure signature append applies the batch
-    // (base files untouched, AnnSpec-pinned) — searches answer bitwise
-    // like the full-corpus store, same oracle
+    // the INCREMENTALLY REFRESHED signature index: a base commit minus
+    // a held-out slice, then a pure-append delta commit applies the
+    // batch (base segments untouched, AnnSpec-pinned) — searches
+    // answer bitwise like a one-commit full index, same oracle
     QueryDef.sql("ann_binary_refresh", binaryTopKOracleSql) {
-      (s, dir) => binaryStoredTopK(s, refreshedBinaryIndexFor(s, dir),
+      (s, dir) => binaryManifestTopK(s, manifestBinaryIndexFor(s, dir),
         Tables(s, dir, "embeddings"))
     },
 
@@ -1769,16 +1620,14 @@ object Ann {
       (s, dir) => ivfTopK(Tables(s, dir, "embeddings"))
     },
 
-    // the SAME oracle verifies the search over the MATERIALIZED
-    // cell-partitioned layout: compute-on-scan and stored-probe faces
-    // must be bitwise interchangeable, and the driver's gate now pins
-    // the partition-pruning path too (AnnPartitionSpec pins the
-    // PartitionFilters plan shape)
+    // the SAME oracle verifies the search over the STORED index:
+    // compute-on-scan and stored-probe faces must be bitwise
+    // interchangeable, and the gate pins the segment-pruning path too
     QueryDef.sql("ann_ivf_stored", ivfTopKOracleSql) {
-      (s, dir) => ivfTopKStored(s.read.parquet(ivfStoreFor(s, dir)))
+      (s, dir) => ivfManifestTopK(s, manifestIvfIndexFor(s, dir))
     },
 
-    // the stored layout's cell-occupancy audit: the oracle recomputes
+    // the stored index's cell-occupancy audit: the oracle recomputes
     // every assignment from the raw embeddings — stored ≡ recompute is
     // the integrity claim, and hot_share is the nlist tuning signal
     QueryDef.sql("ann_ivf_stats",
@@ -1802,15 +1651,15 @@ object Ann {
          |SELECT cent_id, n_vectors, share,
          |  MAX(share) OVER () AS hot_share
          |FROM sh ORDER BY cent_id""".stripMargin) {
-      (s, dir) => ivfStats(s.read.parquet(ivfStoreFor(s, dir)))
+      (s, dir) => ivfStats(ivfIndexRows(s, manifestIvfIndexFor(s, dir))
+        .where(col("kind") === "v"))
     },
 
-    // the INCREMENTALLY refreshed store (base build + batch append
-    // assigned by the store's own codebook) answers the same oracle:
-    // refresh must be indistinguishable from a rebuild
+    // the INCREMENTALLY refreshed index (base commit + delta commit
+    // assigned by the index's own stored codebook) answers the same
+    // oracle: refresh must be indistinguishable from a rebuild
     QueryDef.sql("ann_ivf_refresh", ivfTopKOracleSql) {
-      (s, dir) =>
-        ivfTopKStored(s.read.parquet(refreshedIvfStoreFor(s, dir)))
+      (s, dir) => ivfManifestTopK(s, manifestIvfIndexFor(s, dir))
     },
 
     // the VERSIONED (manifest-backed) index through the declarative

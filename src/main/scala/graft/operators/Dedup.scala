@@ -161,8 +161,8 @@ object Dedup {
     *
     * The cached frame is memoized per (session, canonicalized input
     * plan), so repeated minhashPairs/minhashClusters calls over the same
-    * input (Bench, then DevProfile, ...) share ONE cache entry instead
-    * of leaking a fresh persisted copy per call. Entries live until
+    * input (Bench, then `Dev profile`, ...) share ONE cache entry
+    * instead of leaking a fresh persisted copy per call. Entries live until
     * [[releaseCaches]] (or session end); distinct inputs get distinct
     * entries.
     *
@@ -228,8 +228,7 @@ object Dedup {
 
   /** Unpersist and forget every memoized shingle/signature relation and
     * retained cluster-label frame — the explicit release half of the
-    * implicit index the dedup operators build (mirrors
-    * Ann.buildLshIndex's handle-based lifecycle). */
+    * implicit index the dedup operators build. */
   def releaseCaches(): Unit = {
     shingleCache.release()
     slimShingleCache.release()
@@ -1281,14 +1280,14 @@ object Dedup {
   }
 
   /** [[semanticDedup]] over an ALREADY-ASSIGNED
-    * (vec_id, label, cent_id, v) relation — the materialized-layout
-    * face: a corpus stored cell-partitioned ([[Ann.buildIvfIndex]],
-    * `cent_id` as the parquet partition column) skips the assignment
-    * projection entirely, and a per-cell maintenance pass
-    * (`store.where(cent_id === c)`) is directory-level partition
-    * pruning — the shape a 100 TB incremental dedup job runs cell by
-    * cell. Results are identical to the compute-on-scan face
-    * (AnnPartitionSpec pins equality and the pruned scan). */
+    * (vec_id, label, cent_id, v) relation — the stored-index face: the
+    * `'v'` rows of a manifest IVF index
+    * ([[Ann.refreshManifestIvfIndex]]) skip the assignment projection
+    * entirely, and after clustered compaction a per-cell maintenance
+    * pass (`index.where(cent_id === c)`) is zone-map segment pruning —
+    * the shape a 100 TB incremental dedup job runs cell by cell.
+    * Results are identical to the compute-on-scan face (AnnSpec pins
+    * equality and the pruned scan). */
   def semanticDedupAssigned(assigned: DataFrame,
       threshold: Double = 0.25): DataFrame = {
     val e = assigned.select(col("vec_id"), col("label"),

@@ -597,13 +597,12 @@ object Pipeline {
   // sampling recipe: target share ∝ (n_d)^τ, τ < 1 upweights the tail)
   // ------------------------------------------------------------------
 
-  /** Temperature τ = 1/2: target shares ∝ n_d^(1/2) via `sqrt`, the
-    * one fractional power whose IEEE result is correctly rounded in
-    * BOTH engines (the established cosine/norm precedent) — so the
-    * flattened shares stay bitwise-deterministic without any float
-    * fold beyond the one ORDERED weight sum. */
-  val TempMixTauNote = 0.5
-
+  /** Per-(domain, hash-bucket) counts for the temperature mix, whose
+    * τ = 1/2: target shares ∝ n_d^(1/2) via `sqrt`, the one fractional
+    * power whose IEEE result is correctly rounded in BOTH engines (the
+    * established cosine/norm precedent) — so the flattened shares stay
+    * bitwise-deterministic without any float fold beyond the one
+    * ORDERED weight sum. */
   private def tempHist(documents: DataFrame): DataFrame =
     documents
       .select(coalesce(col("source"), lit(LangNullSentinel)).as("domain"),

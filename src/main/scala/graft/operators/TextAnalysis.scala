@@ -964,8 +964,10 @@ object TextAnalysis {
     * every query after it reads only probed bucket directories.
     * (The reference has no text index at all — retrieval there is
     * vector-only, main.go:171-214; this is the lexical half of a
-    * hybrid retrieval stack, stored in the same
-    * partition-as-index layout as [[Ann.buildIvfIndex]].) */
+    * hybrid retrieval stack. This flat `partitionBy` layout is the
+    * last index store outside `ManifestStore`; its manifest face,
+    * [[refreshManifestTextIndex]], stores no positions and no df-cap
+    * yet.) */
   def buildTextIndex(documents: DataFrame, path: String,
       nBuckets: Long = TextIndexBuckets, dfCap: Long = 0L): Unit = {
     require(nBuckets > 0, s"text index needs nBuckets > 0, got $nBuckets")
@@ -1653,7 +1655,7 @@ object TextAnalysis {
 
   /** Memoized materialized text index per (session, fixture dir) —
     * the implicit index behind the `text_index_search` declared query;
-    * lifecycle mirrors [[Ann.ivfStoreFor]] (torn down by
+    * lifecycle mirrors [[Ann.manifestIvfIndexFor]] (torn down by
     * [[releaseCaches]], shutdown hook for lifecycle-skipping drivers). */
   private val textIndexes =
     new FixtureTables[String]("graft-text-index-")(identity)
@@ -2019,8 +2021,8 @@ object TextAnalysis {
 
     // the STORED-index face: same ranking, same oracle — the engine
     // side reads postings back from the bucket-partitioned store and
-    // must land on the identical result (plus AnnPartitionSpec-style
-    // pruning assertions in TextAnalysisSpec)
+    // must land on the identical result (plus partition-pruning
+    // assertions in TextAnalysisSpec)
     QueryDef.sql("text_index_search", bm25MultiOracleSql)((s, dir) =>
       bm25StoredTopK(s, textIndexFor(s, dir), Bm25QuerySuite, Bm25TopK)),
 

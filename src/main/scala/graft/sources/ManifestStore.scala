@@ -78,6 +78,11 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   */
 object ManifestStore {
 
+  /** The store's one log channel: WARN events with key=value fields,
+    * `event=…` first. */
+  private lazy val log =
+    org.apache.logging.log4j.LogManager.getLogger("graft.store")
+
   private val PtrPrefix = "ptr-"
   private val ClaimPrefix = "claim-"
   private val Tombstone = "tombstone"
@@ -97,7 +102,8 @@ object ManifestStore {
     * upsert of a 100 TB collection rewrites one segment, not 100 TB.
     * Pruning needs the merge key in the table's zone-map column set
     * ([[setZoneMapColumns]]) with matching stat kind; otherwise the
-    * merge falls back to the full rewrite, loudly (stderr warning).
+    * merge falls back to the full rewrite, loudly (a WARN on the
+    * `graft.store` logger).
     * The bound-based prune is sound because every change key lies
     * inside the batch bounds, so a non-intersecting segment cannot
     * hold any touched key; segments lacking stats rewrite
@@ -233,11 +239,11 @@ object ManifestStore {
          else changes.schema(key).dataType == all.schema(key).dataType)
       val rewriteSegs: Seq[Long] =
         if (!prunable) {
-          System.err.println(
-            s"graft.ManifestStore: merge on '$c' key '$key' is not " +
-              "zone-map-prunable (key unmapped, or stat kind differs " +
-              "between changes and collection) - falling back to a " +
-              "FULL collection rewrite; setZoneMapColumns to fix")
+          // key unmapped, or stat kind differs between changes and
+          // collection; setZoneMapColumns fixes it
+          log.warn(s"event=merge_full_rewrite table=$tablePath " +
+            s"collection=$c key=$key reason=key_not_zone_map_prunable " +
+            s"live_segments=${live.size}")
           live
         } else {
           val kCol =
@@ -814,15 +820,13 @@ object ManifestStore {
   private def stampInstant(content: String, prevInstant: Long): String = {
     val now = System.currentTimeMillis()
     if (prevInstant - now > MaxFallbackSkewMs)
-      System.err.println(
-        s"GRAFT WARN: commit instant axis skewed — newest retained " +
-          s"instant $prevInstant sits ${prevInstant - now} ms ahead of " +
-          s"this writer's clock $now (> ${MaxFallbackSkewMs} ms): a " +
-          "previous committer's far-future clock (or this one's slow " +
-          "clock) has pinned the durable instant axis; new commits " +
-          "stamp prev+1 and stay monotone, but versionAtTime/history " +
-          "resolution against wall-clock timestamps will be off until " +
-          "the skew source is fixed")
+      // a previous committer's far-future clock (or this one's slow
+      // clock) has pinned the durable instant axis: new commits stamp
+      // prev+1 and stay monotone, but versionAtTime/history resolution
+      // against wall-clock timestamps is off until the skew is fixed
+      log.warn(s"event=instant_axis_skew newest_instant_ms=$prevInstant " +
+        s"writer_clock_ms=$now ahead_ms=${prevInstant - now} " +
+        s"bound_ms=$MaxFallbackSkewMs")
     val i = math.max(now, prevInstant + 1L)
     if (content == Tombstone) s"$Tombstone;ts=$i$SegsSuffix"
     else if (content.startsWith(SegsPrefix) &&

@@ -26,6 +26,36 @@ class AnnSpec extends SparkSpecBase {
 
   private def emb = spark.read.parquet(s"$sf/embeddings.parquet")
 
+  /** The memoized fixture IVF index's `'v'` (assigned-vector) rows. */
+  private def ivfIndexVectors =
+    spark.read.format("graft")
+      .option("path", Ann.manifestIvfIndexFor(spark, sf))
+      .option("collection", Ann.IvfIndexCollection).load()
+      .where(col("kind") === "v")
+
+  /** (seg, name, length, mtime) of every file in a collection's
+    * segment dirs — what "the commit left these segments in place"
+    * means on disk. */
+  private def segFiles(table: String, c: String,
+      segs: Seq[Long]): Seq[(Long, String, Long, Long)] =
+    segs.flatMap { g =>
+      val d = new java.io.File(f"$table/collection=$c/seg=$g%06d")
+      assert(d.isDirectory, s"segment dir $d is missing")
+      d.listFiles().toSeq.map(f => (g, f.getName, f.length, f.lastModified))
+    }.sorted
+
+  /** `numFiles` of every file scan in `df`'s executed plan, AQE stages
+    * included (runs `df`). */
+  private def scanFileCounts(df: org.apache.spark.sql.DataFrame): Seq[Long] = {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    df.collect()
+    object Plans extends AdaptiveSparkPlanHelper
+    Plans.collect(df.queryExecution.executedPlan) {
+      case sc: FileSourceScanExec => sc.metrics("numFiles").value
+    }
+  }
+
   test("filtered IVF: every hit satisfies the metadata predicate AND " +
       "sits in a probed cell; recall measured against the filtered exact") {
     val docs = spark.read.parquet(s"$sf/documents.parquet")
@@ -108,8 +138,7 @@ class AnnSpec extends SparkSpecBase {
 
   test("IVF stats: stored occupancy ≡ a from-scratch assignment " +
       "recompute; shares sum to one corpus") {
-    val stats = Ann.ivfStats(
-      spark.read.parquet(Ann.ivfStoreFor(spark, sf))).collect()
+    val stats = Ann.ivfStats(ivfIndexVectors).collect()
     assert(stats.nonEmpty && stats.length <= Ann.NList)
     // the store holds every vector exactly once
     assert(stats.map(_.getAs[Long]("n_vectors")).sum == emb.count())
@@ -125,11 +154,12 @@ class AnnSpec extends SparkSpecBase {
     val shares = stats.map(_.getAs[Double]("share"))
     assert(stats.map(_.getAs[Double]("hot_share")).distinct.toSeq ==
       Seq(shares.max))
-    // scale shape: the audit reads ZERO data columns — cent_id is the
-    // partition column, so the scan costs parquet footers only
-    val p = Ann.ivfStats(spark.read.parquet(Ann.ivfStoreFor(spark, sf)))
-      .queryExecution.executedPlan.toString
-    assert(p.contains("ReadSchema: struct<>"), p)
+    // scale shape: the audit reads the kind and cent_id columns only,
+    // never the `v` payload
+    val p = Ann.ivfStats(ivfIndexVectors).queryExecution.executedPlan.toString
+    val read = "ReadSchema: struct<([^>]*)>".r.findAllMatchIn(p)
+      .map(_.group(1).split(',').map(_.takeWhile(_ != ':')).toSet).toSeq
+    assert(read.nonEmpty && read.forall(_ == Set("kind", "cent_id")), p)
   }
 
   test("IVF top-k: results come from <= NProbe cells, ranked correctly") {
@@ -236,7 +266,16 @@ class AnnSpec extends SparkSpecBase {
     val batchPred = col("vec_id") % 10 === 1 &&
       !col("vec_id").isin(Ann.CentroidIds: _*)
     assert(Ann.refreshManifestIvfIndex(emb.where(!batchPred), table, "base"))
+    def segs() = graft.sources.ManifestStore
+      .currentSegments(spark, table, Ann.IvfIndexCollection).get
+    val baseSegs = segs()
+    val baseFiles = segFiles(table, Ann.IvfIndexCollection, baseSegs)
     assert(Ann.refreshManifestIvfIndex(emb.where(batchPred), table, "d1"))
+    // the delta commit leaves the base segments in place: the old list
+    // is a prefix of the new one, and every base file keeps its name,
+    // length and mtime
+    assert(segs().startsWith(baseSegs) && segs().size > baseSegs.size)
+    assert(segFiles(table, Ann.IvfIndexCollection, baseSegs) == baseFiles)
     def ask() = Ann.ivfManifestTopK(spark, table).collect()
       .map(r => (r.getAs[Long]("vec_id"), r.getAs[Long]("cent_id"),
         r.getAs[Double]("similarity"))).toSeq
@@ -374,35 +413,64 @@ class AnnSpec extends SparkSpecBase {
   test("binary index refresh: a batch applies as a PURE APPEND (base " +
       "files untouched), refreshed store answers bitwise like a " +
       "full rebuild") {
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_bin_refresh").toString
+    import java.nio.file.Files
+    import graft.sources.ManifestStore
+    val c = Ann.BinaryIndexCollection
+    val path = Files.createTempDirectory("graft_bin_refresh").toString + "/t"
     val batchPred = col("vec_id") % 10 === 1
-    Ann.buildBinaryIndex(emb.where(!batchPred), path)
-    def parts() = new java.io.File(path).listFiles()
-      .filter(_.getName.endsWith(".parquet"))
-      .map(f => (f.getName, f.length, f.lastModified)).sortBy(_._1).toSeq
-    val base = parts()
-    Ann.refreshBinaryIndex(emb.where(batchPred), path)
-    val after = parts()
-    // every base part file survives byte-identical; new files appended
-    assert(after.size > base.size, "refresh must append new part files")
-    base.foreach(b => assert(after.contains(b),
-      s"base file $b was rewritten by the refresh"))
-    // refreshed store == full rebuild, bitwise (same pack, same ties)
-    val full = java.nio.file.Files
-      .createTempDirectory("graft_bin_full").toString
-    Ann.buildBinaryIndex(emb, full)
-    def ask(p: String) = Ann.binaryStoredTopK(spark, p, emb).collect()
+    Ann.initManifestBinaryIndex(spark, path)
+    assert(Ann.refreshManifestBinaryIndex(emb.where(!batchPred), path, "base"))
+    def segs(t: String) = ManifestStore.currentSegments(spark, t, c).get
+    val baseSegs = segs(path)
+    val baseFiles = segFiles(path, c, baseSegs)
+    assert(Ann.refreshManifestBinaryIndex(emb.where(batchPred), path, "d1"))
+    // every base segment file survives byte-identical; a new segment
+    // is appended after them
+    val after = segs(path)
+    assert(after.startsWith(baseSegs) && after.size > baseSegs.size,
+      s"refresh must append a segment: $baseSegs -> $after")
+    assert(segFiles(path, c, baseSegs) == baseFiles,
+      "a base segment file was rewritten by the refresh")
+    // exactly-once: the replayed tag commits nothing
+    assert(!Ann.refreshManifestBinaryIndex(emb.where(batchPred), path, "d1"))
+    assert(segs(path) == after)
+    // refreshed index == a one-commit full index, bitwise (same pack,
+    // same ties)
+    val full = Files.createTempDirectory("graft_bin_full").toString + "/t"
+    Ann.initManifestBinaryIndex(spark, full)
+    assert(Ann.refreshManifestBinaryIndex(emb, full, "all"))
+    def ask(p: String) = Ann.binaryManifestTopK(spark, p, emb).collect()
       .map(r => (r.getAs[Long]("vec_id"), r.getAs[Int]("hamming"),
         r.getAs[Double]("similarity"))).toSeq
     assert(ask(path) == ask(full))
     // ...and the signature SETS are identical relations
-    val a = spark.read.parquet(path).collect()
+    def sigs(p: String) = spark.read.format("graft").option("path", p)
+      .option("collection", c).load().select("vec_id", "sig").collect()
       .map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-    val b = spark.read.parquet(full).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-    assert(a == b)
+    assert(sigs(path) == sigs(full))
     Seq(path, full).foreach(p => org.apache.commons.io.FileUtils
-      .deleteQuietly(new java.io.File(p)))
+      .deleteQuietly(new java.io.File(p).getParentFile))
+  }
+
+  test("semanticDedupAssigned over the stored IVF index equals the " +
+      "compute-on-scan semanticDedup; a per-cell maintenance pass reads " +
+      "fewer files than the whole index") {
+    val got = Dedup.semanticDedupAssigned(ivfIndexVectors).collect()
+      .map(r => (r.getAs[Long]("vec_id"), r.getAs[Long]("cent_id"),
+        r.getAs[Boolean]("keep"))).toSeq
+    val expect = Dedup.semanticDedup(emb).collect()
+      .map(r => (r.getAs[Long]("vec_id"), r.getAs[Long]("cent_id"),
+        r.getAs[Boolean]("keep"))).toSeq
+    assert(got == expect)
+    // the incremental shape over the compacted index: every scan of a
+    // one-cell pass (both self-join sides and the keep join) is pruned
+    // to the segments whose cent_id zone map holds the cell
+    val all = scanFileCounts(ivfIndexVectors)
+    assert(all.size == 1, s"one scan expected: $all")
+    val c0 = expect.head._2
+    val oneCell = scanFileCounts(Dedup.semanticDedupAssigned(
+      ivfIndexVectors.where(col("cent_id") === c0)))
+    assert(oneCell.nonEmpty && oneCell.forall(_ < all.head),
+      s"per-cell pass must prune every scan below ${all.head} files: $oneCell")
   }
 }

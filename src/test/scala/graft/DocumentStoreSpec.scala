@@ -56,6 +56,45 @@ class DocumentStoreSpec extends SparkSpecBase {
     assert(diff == Set((2L, "updated"), (3L, "deleted"), (4L, "inserted")))
   }
 
+  test("a merge on a key without a zone map warns once on the " +
+      "graft.store logger (WARN, key=value fields) and still applies") {
+    import spark.implicits._
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val events = new java.util.concurrent.ConcurrentLinkedQueue[LogEvent]()
+    val capture = new AbstractAppender("graft-store-capture", null, null,
+        true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = events.add(e.toImmutable)
+    }
+    capture.start()
+    val logger = LogManager.getContext(false).asInstanceOf[LoggerContext]
+      .getLogger("graft.store")
+    logger.addAppender(capture)
+    try {
+      val table = tmp() + "/table" // no setZoneMapColumns for "k"
+      ManifestStore.store(Seq((1L, "a"), (2L, "b")).toDF("k", "txt"),
+        table, "m")
+      assert(ManifestStore.mergeCollection(spark, table, "m",
+        Seq((2L, "B", false)).toDF("k", "txt", "_deleted"), key = "k"))
+      val seen = events.toArray(Array.empty[LogEvent]).toSeq
+        .filter(_.getLoggerName == "graft.store")
+      assert(seen.size == 1, seen.map(_.getMessage.getFormattedMessage))
+      val msg = seen.head.getMessage.getFormattedMessage
+      assert(seen.head.getLevel == Level.WARN, msg)
+      Seq("event=merge_full_rewrite", "collection=m", "key=k",
+        s"table=$table").foreach(f => assert(msg.contains(f), msg))
+      assert(ManifestStore.readSinceInferred(spark, table, "m", 0L)
+        .select("k", "txt").collect()
+        .map(r => (r.getLong(0), r.getString(1))).toSet ==
+        Set((1L, "a"), (2L, "B")))
+    } finally {
+      logger.removeAppender(capture)
+      capture.stop()
+    }
+  }
+
   test("zone-map-pruned merge: a 1-key upsert rewrites ONLY the " +
       "intersecting segment; untouched segment dirs stay byte-identical") {
     import spark.implicits._
