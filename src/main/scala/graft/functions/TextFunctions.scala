@@ -60,9 +60,9 @@ object TextFunctions {
 
   /** Driver-side twin of [[polyHash]] (same fold as
     * [[PolyHashExpr.nullSafeEval]]) — lets planning code compute the
-    * same bucket a stored layout was partitioned by (probe selection
-    * over [[graft.operators.TextAnalysis.buildTextIndex]]'s postings)
-    * without a one-row Spark job. */
+    * same bucket a stored index hashed its postings into (probe
+    * selection in [[graft.operators.TextAnalysis.indexProbe]]) without
+    * a one-row Spark job. */
   def polyHashLocal(s: String): Long = {
     var h = 0L
     var i = 0

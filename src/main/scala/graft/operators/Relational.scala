@@ -61,8 +61,9 @@ object Relational {
     * rounded. That is the real output bound: past 2^53 unscaled (about
     * 9e11 currency units at scale 4, 9e9 at scale 6) the cast rounds
     * and the value may differ from the decimal path's, long before
-    * ANSI long-overflow throws at ~9.2e18. The bound is stated here,
-    * not yet checked at run time. */
+    * ANSI long-overflow throws at ~9.2e18. [[unscaledDouble]] checks
+    * the bound at run time: a sum past it fails the query loud
+    * instead of rounding. */
   // floor(x·100 + 0.5), not round(): Spark's Round on a double goes
   // through BigDecimal.valueOf per row; on a 2-decimal grid x·100 sits
   // within an ulp of its integer, so the pure-double floor recovers the
@@ -81,9 +82,19 @@ object Relational {
     * cast stops being correctly rounded past it), so nothing new is
     * assumed. Pure codegen arithmetic — the first long-formulation cut
     * used a per-row DECIMAL division here, which measurably dragged
-    * the window-sum queries (one division per output row). */
-  private def unscaledDouble(sumCol: Column, scale: Int): Column =
-    sumCol.cast("double") / lit(math.pow(10, scale))
+    * the window-sum queries (one division per output row). A non-null
+    * |N| >= 2^53 raises an error (the cast would round); a null sum
+    * (an empty group) stays null. `sumCol` is referenced more than
+    * once: pass a window sum as a computed column, or each reference
+    * becomes its own window aggregate. */
+  private def unscaledDouble(sumCol: Column, scale: Int): Column = {
+    val bound = lit(1L << 53)
+    when(sumCol >= bound || sumCol <= -bound,
+      raise_error(concat(lit(s"unscaled money sum at scale $scale is "),
+        sumCol.cast("string"), lit(", past the 2^53 exact-double " +
+          "envelope: its double rescale would round"))))
+      .otherwise(sumCol.cast("double") / lit(math.pow(10, scale)))
+  }
 
   /** Run SQL over per-call uniquely-named temp views. Dataset creation
     * analyzes eagerly, so the views can be dropped before returning the
@@ -587,11 +598,12 @@ object Relational {
     o.select(col("o_custkey"), col("o_orderkey"),
         col("o_orderdate").cast("date").as("order_date"), col("o_totalprice"))
       .withColumn("rn", row_number().over(w))
-      .withColumn("running_total",
-        unscaledDouble(sum(cents(col("o_totalprice"))).over(wRun), 2))
+      .withColumn("running_c", sum(cents(col("o_totalprice"))).over(wRun))
+      .withColumn("running_total", unscaledDouble(col("running_c"), 2))
       .withColumn("prev_price", lag(col("o_totalprice"), 1).over(w))
       .withColumn("gap_days",
         datediff(col("order_date"), lag(col("order_date"), 1).over(w)))
+      .drop("running_c")
       .orderBy("o_custkey", "rn")
   }
 
@@ -744,10 +756,10 @@ object Relational {
       .rangeBetween(-30, Window.currentRow)
     val wRow = Window.partitionBy(col("o_custkey"))
       .orderBy(col("day_nr"), col("o_orderkey"))
-    o.select(col("o_custkey"), col("o_orderkey"), col("day_nr"),
+    o.withColumn("spend_c", sum(cents(col("o_totalprice"))).over(wRange))
+      .select(col("o_custkey"), col("o_orderkey"), col("day_nr"),
         col("o_totalprice"),
-        unscaledDouble(sum(cents(col("o_totalprice"))).over(wRange), 2)
-          .as("spend_30d"),
+        unscaledDouble(col("spend_c"), 2).as("spend_30d"),
         lead(col("o_totalprice"), 1).over(wRow).as("next_price"),
         ntile(4).over(wRow).as("quartile"))
       .orderBy("o_custkey", "day_nr", "o_orderkey")

@@ -438,9 +438,10 @@ object TextAnalysis {
     * same literal-folded arithmetic). df is a window over the
     * semi-joined hits: exact as long as the tf relation contains ALL
     * of a matched word's postings (true trivially for the full
-    * relation; true for the stored face because postings are
-    * PARTITIONED BY the word's hash bucket, so probing a term's bucket
-    * yields the whole posting list). */
+    * relation; true for the stored face because every posting carries
+    * its word's hash bucket, so probing a term's bucket yields the
+    * whole posting list — and a capped probe drops whole words, never
+    * part of a list). */
   private def bm25Rank(tf: DataFrame, queries: DataFrame,
       stats: DataFrame, k: Int): DataFrame =
     scoreAndRank(bm25Hits(tf, queries), stats, k)
@@ -666,11 +667,11 @@ object TextAnalysis {
 
   /** [[wandPruneStats]] over the stored index's probe — the declared
     * `text_wand_stats` face. */
-  private[graft] def wandStatsStored(s: SparkSession, path: String,
+  private[graft] def wandStatsStored(s: SparkSession, tablePath: String,
       queries: Seq[(Long, String)], k: Int,
       seedTerms: Int = WandSeedTerms): DataFrame = {
     import s.implicits._
-    val (tf, stats) = storedProbe(s, path, queries.map(_._2))
+    val (tf, stats) = indexProbe(s, tablePath, Some(queries.map(_._2)))
     wandPruneStats(tf, queries.toDF("query_id", "term"), stats, k,
       seedTerms)
   }
@@ -896,191 +897,307 @@ object TextAnalysis {
   }
 
   // ----------------------------------------------------------------
-  // persisted inverted index — the stored-BM25 face
+  // stored inverted index — one ManifestStore collection, pruned probes
   // ----------------------------------------------------------------
 
-  /** Postings-store bucket count DEFAULT for new builds. Each posting
-    * row lands in the partition directory `bkt = polyHash(word) %
-    * n_buckets`, so ALL postings of a word share one directory — the
-    * invariant [[bm25Rank]]'s df window relies on — and a query probes
-    * exactly its terms' buckets. At 100 TB the knob trades directory
-    * fan-out against probe selectivity (buckets ≈ a few thousand keeps
-    * both listing cost and per-probe read fraction tiny).
+  /** Bucket count DEFAULT for new indexes. Each posting row carries
+    * `bkt = polyHash(word) % n_buckets`, so ALL postings of a word
+    * share one bucket — the invariant [[bm25Rank]]'s df window relies
+    * on — and a query probes exactly its terms' buckets (the `bkt IN
+    * (…)` filter the segment sidecars prune on). At 100 TB the knob
+    * trades zone-map granularity against probe selectivity.
     *
-    * The knob is ONLY a build-time default: the count an index was
+    * The knob is ONLY a first-commit default: the count an index was
     * actually built with is part of the index's identity and is
-    * PERSISTED with it (stats row / `'b'` config row), and every probe
-    * reads it back — a stored index built under yesterday's knob keeps
+    * PERSISTED with it (the `'b'` layout row), and every probe reads it
+    * back — a stored index built under yesterday's knob keeps
     * answering correctly after the constant changes, instead of being
-    * probed in the wrong directories and silently returning empty
-    * posting lists. */
+    * probed in the wrong buckets and silently returning empty posting
+    * lists. */
   val TextIndexBuckets = 64L
 
   /** Build-time df-cap for the capped-index face
     * ([[cappedTextIndexFor]]), as a PERCENTAGE of the corpus: words
     * appearing in more than `n_docs · pct / 100` documents (floored,
-    * both engines' integer division) are excluded from the postings
-    * store at build time. Stopword-class terms carry corpus-sized
-    * posting lists (SCALING.md's one documented IO-bound for the
-    * index); capping them bounds the hottest bucket's mass while
-    * keeping every SURVIVING word's posting list — and therefore its
-    * df and its BM25 scores — bitwise exact. A fraction (not an
-    * absolute) because "stopword" is a corpus-relative notion — the
-    * same knob serves every scale. The RESOLVED absolute cap is
-    * persisted in the stats row; a capped index refuses incremental
-    * refresh (exact incremental capping would need stored per-word
-    * dfs — a batch can push a surviving word over the cap; rebuild
-    * instead). 78 is tuned to the synthetic fixture's deliberately
-    * narrow template vocabulary (all terms live at 75-81% df, so the
-    * cap splits them); a natural-language corpus would sit at 10-50. */
+    * both engines' integer division) are excluded from the postings.
+    * Stopword-class terms carry corpus-sized posting lists (SCALING.md's
+    * one documented IO-bound for the index); capping them bounds the
+    * hottest bucket's mass while keeping every SURVIVING word's posting
+    * list — and therefore its df and its BM25 scores — bitwise exact.
+    * A fraction (not an absolute) because "stopword" is a
+    * corpus-relative notion — the same knob serves every scale. The
+    * RESOLVED absolute cap is persisted in the `'b'` layout row, and
+    * the `'d'` rows keep incremental commits exact (see
+    * [[refreshManifestTextIndex]]). 78 is tuned to the synthetic
+    * fixture's deliberately narrow template vocabulary (all terms live
+    * at 75-81% df, so the cap splits them); a natural-language corpus
+    * would sit at 10-50. */
   val TextIndexDfCapPct = 78L
 
-  /** Postings store schema incl. the `bkt` partition column (explicit
-    * on read: an empty index has nothing to infer from). `ps` is the
-    * sorted 1-based POSITION list of the word's occurrences in the
-    * document — what makes the store a positional index
-    * ([[phraseStoredTopK]]); BM25 probes simply don't read it
-    * (column-pruned at the scan). */
-  val PostingsSchema: org.apache.spark.sql.types.StructType =
-    org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("doc_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("dl",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("word",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("tf",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("ps",
-        org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.IntegerType)),
-      org.apache.spark.sql.types.StructField("bkt",
-        org.apache.spark.sql.types.IntegerType)))
+  /** The manifest collection name holding a versioned text index. */
+  val TextIndexCollection = "tindex"
 
-  /** Materialize the inverted index: per-(doc, word) term frequencies
-    * partitioned by the word's hash bucket, plus the 1-row corpus
-    * stats (N, Σdl) the BM25 arithmetic needs. The build is the ONE
-    * corpus tokenize+shuffle a search deployment pays up front;
-    * every query after it reads only probed bucket directories.
-    * (The reference has no text index at all — retrieval there is
-    * vector-only, main.go:171-214; this is the lexical half of a
-    * hybrid retrieval stack. This flat `partitionBy` layout is the
-    * last index store outside `ManifestStore`; its manifest face,
-    * [[refreshManifestTextIndex]], stores no positions and no df-cap
-    * yet.) */
-  def buildTextIndex(documents: DataFrame, path: String,
-      nBuckets: Long = TextIndexBuckets, dfCap: Long = 0L): Unit = {
+  private def indexTable(s: SparkSession, tablePath: String): DataFrame =
+    s.read.format("graft").option("path", tablePath)
+      .option("collection", TextIndexCollection).load()
+
+  /** One batch's index contribution as ONE relation, so maintenance is
+    * ONE tagged pointer commit (atomic + replay-idempotent — the
+    * [[graft.streaming.EventStream.ingestStoreRequests]]
+    * exactly-once discipline applied to index maintenance). Row
+    * shapes, discriminated by `kind`:
+    *   - `'p'` posting: (doc_id, dl, word, tf, bkt, ps) — bkt =
+    *     polyHash(word) % n_buckets, the probe axis; ps = the sorted
+    *     1-based POSITIONS of the word in the document, what makes the
+    *     index positional ([[phraseStoredTopK]]; BM25 probes never read
+    *     it — column-pruned at the scan);
+    *   - `'s'` stats contribution: doc_id := the batch's doc count,
+    *     dl := its Σdl — corpus stats are ADDITIVE, so the total is a
+    *     sum over stats rows and never needs read-modify-write. Stats
+    *     stay FULL-corpus even under a df-cap: BM25's N/avgdl
+    *     normalization describes the corpus, not the index;
+    *   - `'b'` layout identity: dl := the bucket count this batch was
+    *     hashed with, doc_id := the absolute df-cap (0 = uncapped).
+    *     Every commit carries one, so probe time can verify the WHOLE
+    *     index shares one layout — a knob change between commits is a
+    *     loud error, never a silently-empty posting list;
+    *   - `'d'` df contribution, capped indexes only: (word, bkt, tf :=
+    *     the batch's document count for the word) — additive like the
+    *     stats, summed on read, pruned by the same `bkt` filter as the
+    *     postings.
+    * Columns a kind does not use are NULL. Keeping all kinds in one
+    * commit means a crash can never publish postings without their
+    * stats/layout/df contribution or vice versa. (The reference has no
+    * text index at all — retrieval there is vector-only,
+    * main.go:171-214; this is the lexical half of a hybrid retrieval
+    * stack.) */
+  def indexRows(docs: DataFrame, nBuckets: Long = TextIndexBuckets,
+      dfCap: Long = 0L): DataFrame = {
     require(nBuckets > 0, s"text index needs nBuckets > 0, got $nBuckets")
-    val base = documents
-      .select(col("doc_id"), words(col("text")).as("ws"))
+    val bkt = (polyHash(col("word")) % lit(nBuckets)).as("bkt")
+    val noPs = lit(null).cast("array<int>").as("ps")
+    val base = docs.select(col("doc_id"), words(col("text")).as("ws"))
       .withColumn("dl", size(col("ws")).cast("long"))
       .where(col("dl") > 0)
-    // coalesce: an empty corpus writes (0, 0), not (0, NULL) — the
-    // merge arithmetic and the rank tail both read longs. n_buckets
-    // and df_cap travel WITH the index: probes must never recompute
-    // the layout from a constant that may have changed since build.
-    // Corpus stats stay FULL-corpus even under a df-cap: BM25's
-    // N/avgdl normalization describes the corpus, not the index.
-    base.agg(count(lit(1)).as("n_docs"),
-        coalesce(sum(col("dl")), lit(0L)).as("sum_dl"))
-      .select(col("n_docs"), col("sum_dl"),
-        lit(nBuckets).as("n_buckets"), lit(dfCap).as("df_cap"))
-      .coalesce(1).write.mode("overwrite").parquet(path + "/stats")
     // positional postings: tf + the sorted 1-based occurrence list —
-    // one posexplode, same (doc, word) shuffle as a tf-only build
-    val tf = base
+    // one posexplode, the same (doc, word) shuffle as a tf-only build
+    val postings = base
       .select(col("doc_id"), col("dl"),
         posexplode(col("ws")).as(Seq("p", "word")))
       .groupBy("doc_id", "dl", "word")
       .agg(count(lit(1)).as("tf"),
         sort_array(collect_list(col("p") + 1)).as("ps"))
-    // df-cap: drop WHOLE posting lists of over-cap words (tf rows are
-    // distinct (doc, word) pairs, so the per-word row count IS the
-    // corpus df). Surviving words keep their complete lists — their
-    // df window and scores stay bitwise exact. Only pay the extra
-    // word-partitioned window when a cap is actually set.
+      .select(lit("p").as("kind"), col("doc_id"), col("dl"), col("word"),
+        col("tf"), bkt, col("ps"))
+    val stats = base
+      .agg(count(lit(1)).as("doc_id"),
+        coalesce(sum(col("dl")), lit(0L)).as("dl"))
+      .select(lit("s").as("kind"), col("doc_id"), col("dl"),
+        lit(null).cast("string").as("word"), lit(null).cast("long").as("tf"),
+        lit(null).cast("long").as("bkt"), noPs)
+    val layout = docs.sparkSession.range(1)
+      .select(lit("b").as("kind"), lit(dfCap).as("doc_id"),
+        lit(nBuckets).as("dl"), lit(null).cast("string").as("word"),
+        lit(null).cast("long").as("tf"), lit(null).cast("long").as("bkt"),
+        noPs)
+    val rows = postings.unionByName(stats).unionByName(layout)
+    if (dfCap <= 0L) rows
+    else rows.unionByName(postings
+      // postings are distinct (doc, word) pairs: the per-word row count
+      // IS the batch's document frequency
+      .groupBy("word").agg(count(lit(1)).as("tf"))
+      .select(lit("d").as("kind"), lit(null).cast("long").as("doc_id"),
+        lit(null).cast("long").as("dl"), col("word"), col("tf"), bkt, noPs))
+  }
+
+  /** The layout a VERSIONED index was built with — (n_buckets, df_cap)
+    * from its `'b'` rows (df_cap 0 = uncapped; `'b'` rows committed
+    * before capping existed carry 0 there, so they read as uncapped).
+    * Exactly one distinct pair must exist: zero means the index
+    * predates layout versioning (its geometry is unknowable — rebuild),
+    * more than one means commits were made under different layouts (a
+    * corrupted index — posting lists are split across buckets or
+    * capped under different rules, and every df is suspect). */
+  def manifestIndexLayout(s: SparkSession,
+      tablePath: String): (Long, Long) = {
+    val layouts = indexTable(s, tablePath)
+      .where(col("kind") === "b").select(col("dl"), col("doc_id"))
+      .distinct().collect().map(r => (r.getLong(0), r.getLong(1))).sorted
+    require(layouts.length == 1,
+      if (layouts.isEmpty)
+        s"text index at $tablePath carries no 'b' layout row — it " +
+          "predates bucket-count versioning; rebuild it"
+      else
+        s"text index at $tablePath was committed under MULTIPLE bucket " +
+          "counts or df-caps (n_buckets, df_cap) = " +
+          s"${layouts.mkString("[", ", ", "]")} — posting lists are " +
+          "split across layouts; rebuild it")
+    layouts.head
+  }
+
+  /** Table config for a manifest text index: zone maps on the probe
+    * axis (effective once segments are bkt-clustered — see
+    * [[compactManifestTextIndex]]) plus blooms for point probes on
+    * post-append interleaved segments. Call once before the first
+    * commit. */
+  def initManifestTextIndex(s: SparkSession, tablePath: String): Unit = {
+    graft.sources.ManifestStore.setZoneMapColumns(s, tablePath, Seq("bkt"))
+    graft.sources.ManifestStore.setBloomColumns(s, tablePath, Seq("bkt"))
+  }
+
+  /** Apply one document batch to the versioned index — one tagged
+    * commit; a replayed tag is a no-op (returns false). Cost scales
+    * with the batch (plus, on a capped index, the stored `'d'` rows),
+    * never the postings. The FIRST commit establishes the layout (from
+    * `nBuckets` and the absolute `dfCap`, 0 = uncapped); every later
+    * batch is hashed and capped with the STORED layout — the
+    * parameters are ignored once the index exists, so a constant
+    * change can never split posting lists.
+    *
+    * On a capped index a commit keeps only the batch postings of words
+    * whose merged df (stored `'d'` sum + batch df) is ≤ the cap, so the
+    * first commit equals a one-pass capped build. A word a later batch
+    * pushes over the cap keeps its earlier postings in storage; the
+    * probe drops it ([[indexProbe]]) and compaction evicts it
+    * ([[foldIndexMeta]]). Exact because df only grows on an
+    * append-only corpus: a word at or under the cap has never been
+    * over it, so every one of its postings was committed. */
+  def refreshManifestTextIndex(docs: DataFrame, tablePath: String,
+      tag: String, nBuckets: Long = TextIndexBuckets,
+      dfCap: Long = 0L): Boolean = {
+    val s = docs.sparkSession
+    val live = graft.sources.ManifestStore
+      .currentSegments(s, tablePath, TextIndexCollection)
+      .toSeq.flatten
+    val (nb, cap) =
+      if (live.isEmpty) (nBuckets, dfCap) else manifestIndexLayout(s, tablePath)
+    val rows = indexRows(docs, nb, cap)
     val kept =
-      if (dfCap <= 0L) tf
-      else tf.withColumn("df",
-          count(lit(1)).over(Window.partitionBy(col("word"))))
-        .where(col("df") <= dfCap).drop("df")
-    kept
-      .withColumn("bkt",
-        graft.functions.TextFunctions.polyHash(col("word"))
-          % lit(nBuckets))
-      .write.mode("overwrite").partitionBy("bkt").parquet(path + "/postings")
-    // capped builds persist per-word dfs as ADDITIVE contribution rows
-    // (vocab-sized, summed on read — never read-modify-written):
-    // exact incremental capping needs the df of EVERY word, including
-    // the over-cap ones whose postings were dropped, or a later batch
-    // could not tell "newly over the cap" (evict the base list) from
-    // "over since build" (nothing stored to evict)
-    if (dfCap > 0L)
-      tf.groupBy("word").agg(count(lit(1)).as("df"))
-        .write.mode("overwrite").parquet(path + "/dfs")
+      if (cap <= 0L) rows
+      else if (live.isEmpty) evictOverCap(rows, cap, rows)
+      else evictOverCap(rows, cap, rows, indexTable(s, tablePath))
+    graft.sources.ManifestStore.storeBatch(
+      kept, tablePath, TextIndexCollection, tag)
   }
 
-  /** Schema of the additive per-word df store a CAPPED index carries
-    * (absent on uncapped indexes, whose df is derived from the probed
-    * posting lists and never stored). */
-  val DfsSchema: org.apache.spark.sql.types.StructType =
-    org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("word",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("df",
-        org.apache.spark.sql.types.LongType)))
-
-  /** The layout identity a stored index carries: (n_buckets, df_cap)
-    * read back from the stats row. Fails LOUD on a stats row without
-    * the layout columns — an index persisted before bucket-count
-    * versioning cannot be probed safely (the then-current constant is
-    * unknowable) and must be rebuilt. */
-  private def storedIndexLayout(s: SparkSession,
-      path: String): (Long, Long) = {
-    val stats = s.read.parquet(path + "/stats")
-    require(stats.columns.contains("n_buckets"),
-      s"text index at $path has no persisted n_buckets — it was built " +
-        "before bucket-count versioning and its layout is unknowable; " +
-        "rebuild it with buildTextIndex")
-    val r = stats.select(col("n_buckets"), col("df_cap")).head
-    (r.getLong(0), r.getLong(1))
+  /** `rows` without the `'p'` rows of every word whose df — summed over
+    * the `'d'` rows of `dfs` — exceeds `dfCap`; every other row passes.
+    * The one over-cap rule behind the capped commit, the capped probe
+    * and the compaction fold. */
+  private def evictOverCap(rows: DataFrame, dfCap: Long,
+      dfs: DataFrame*): DataFrame = {
+    val over = dfs
+      .map(_.where(col("kind") === "d").select("word", "tf"))
+      .reduce(_.unionByName(_))
+      .groupBy("word").agg(sum(col("tf")).as("df"))
+      .where(col("df") > dfCap)
+      .select(col("word").as("over_word"))
+    rows.join(VectorSearch.broadcastIfSmall(over),
+      col("kind") === "p" && col("word") === col("over_word"), "left_anti")
   }
 
-  /** BM25 over the MATERIALIZED index: probe buckets are computed
-    * driver-side from the query terms ([[graft.functions.TextFunctions
-    * .polyHashLocal]], the same fold the build partitioned by), so the
-    * postings scan carries the probe set as a PARTITION filter —
-    * directory pruning, nothing outside the probed buckets is listed
-    * or read, footers included. Stats ride the usual 1-row broadcast.
-    * Results are bitwise [[bm25MultiOn]]'s: both faces share
-    * [[bm25Rank]], and a probed bucket holds each matched word's
-    * ENTIRE posting list, so tf and df are identical relations. */
-  /** The stored-index probe shared by BOTH ranking faces: the term
-    * set's (bucket-pruned postings, 1-row stats) pair. Probe buckets
-    * are computed with the index's OWN stored bucket count — never the
-    * build-time constant, which may have changed since the index was
-    * written — and as Int literals: the read-back partition column
-    * infers as int, and long literals would wrap it in a cast that
-    * defeats directory pruning (the partition filter must compare the
-    * raw column). The explicit schema covers the empty index (no part
-    * files to infer from — a probe against it must answer empty, not
-    * fail). */
-  private def storedProbe(s: SparkSession, path: String,
-      terms: Seq[String]): (DataFrame, DataFrame) = {
-    val (nBuckets, _) = storedIndexLayout(s, path)
-    val probeBkts = terms.distinct
-      .map(t => (graft.functions.TextFunctions.polyHashLocal(t)
-        % nBuckets).toInt).distinct
-    val tf = s.read.schema(PostingsSchema).parquet(path + "/postings")
-      .where(col("bkt").isin(probeBkts: _*))
-      .select("doc_id", "dl", "word", "tf")
-    (tf, s.read.parquet(path + "/stats").select("n_docs", "sum_dl"))
+  /** Restore probe pruning after streaming appends: every batch
+    * segment spans most buckets, so bkt zone maps exclude little until
+    * a clustered rewrite lays the postings out in bkt ranges (one
+    * atomic pointer commit; probes then skip whole segments). The
+    * rewrite also FOLDS the per-batch metadata rows
+    * ([[foldIndexMeta]]), so the one-tiny-row-per-batch stats scans
+    * are bounded by compactions, not by commit count. Batches appended
+    * DURING the rewrite keep their own additive rows, which sum
+    * correctly beside the folded ones. */
+  def compactManifestTextIndex(s: SparkSession, tablePath: String,
+      segments: Int = 4): Unit =
+    if (graft.sources.ManifestStore
+        .currentSegments(s, tablePath, TextIndexCollection)
+        .exists(_.nonEmpty)) {
+      val (_, dfCap) = manifestIndexLayout(s, tablePath)
+      graft.sources.ManifestStore.zorderCompact(
+        s, tablePath, TextIndexCollection, Seq("bkt"), segments,
+        foldIndexMeta(dfCap))
+    }
+
+  /** The reader-equivalent metadata fold applied at compaction (see
+    * [[compactManifestTextIndex]]): the additive `'s'` stats
+    * contributions collapse to one summed row, the `'d'` df
+    * contributions to one summed row per word, the identical `'b'`
+    * layout rows to one distinct row — reader-equivalent by
+    * construction (stats and dfs are READ as sums, the layout as its
+    * distinct value set). On a capped index it also evicts the `'p'`
+    * rows of over-cap words, which every probe already drops; the
+    * folded postings then equal a one-commit capped build's.
+    * Multi-valued `'b'` layouts — the corruption [[manifestIndexLayout]]
+    * fails loud on — survive the distinct, so compaction can never mask
+    * that signal. Output keeps the input's schema. */
+  private[graft] def foldIndexMeta(dfCap: Long)(rows: DataFrame): DataFrame = {
+    def shaped(df: DataFrame): DataFrame = df.select(rows.schema.fields
+      .map(f => if (df.columns.contains(f.name)) col(f.name)
+        else lit(null).cast(f.dataType).as(f.name)).toIndexedSeq: _*)
+    // any kind this fold does not understand passes through UNTOUCHED —
+    // a future row kind added to indexRows must survive compaction
+    // verbatim, not be silently deleted the first time the rewrite
+    // runs (reader-equivalence by construction; a null kind is
+    // unknown too)
+    val other = rows.where(col("kind").isNull ||
+      !col("kind").isin("p", "s", "b", "d"))
+    val p = rows.where(col("kind") === "p")
+    val sRows = shaped(rows.where(col("kind") === "s")
+      .agg(coalesce(sum(col("doc_id")), lit(0L)).as("doc_id"),
+        coalesce(sum(col("dl")), lit(0L)).as("dl"),
+        count(lit(1)).as("n"))
+      .where(col("n") > 0)
+      .select(lit("s").as("kind"), col("doc_id"), col("dl")))
+    val bRows = rows.where(col("kind") === "b").distinct()
+    val dRows = shaped(rows.where(col("kind") === "d")
+      .groupBy("word", "bkt").agg(sum(col("tf")).as("tf"))
+      .withColumn("kind", lit("d")))
+    val kept = if (dfCap <= 0L) p else evictOverCap(p, dfCap, dRows)
+    kept.unionByName(sRows).unionByName(bRows).unionByName(dRows)
+      .unionByName(other)
   }
 
-  def bm25StoredTopK(s: SparkSession, path: String,
+  /** The stored-index probe shared by EVERY stored face: the term
+    * set's (postings, 1-row stats) pair over the manifest index at
+    * `tablePath`.
+    *   - Layout: read back and verified single-valued
+    *     ([[manifestIndexLayout]]); probe buckets are computed
+    *     driver-side with the index's OWN bucket count
+    *     ([[graft.functions.TextFunctions.polyHashLocal]], the same
+    *     fold the commit hashed with), never the first-commit constant.
+    *   - Postings: `kind = 'p' AND bkt IN (…)` — the `bkt` zone maps and
+    *     blooms exclude segments at planning time, and a probed bucket
+    *     holds each matched word's ENTIRE posting list, so tf and df
+    *     are exactly the full relation's. `None` probes every bucket.
+    *   - Cap: on a capped index every probed word whose summed `'d'` df
+    *     is over the cap is dropped (see [[refreshManifestTextIndex]]).
+    *   - Stats: the sum over the additive `'s'` rows.
+    * Returns the `'p'` rows without `kind`: (doc_id, dl, word, tf, bkt,
+    * ps). */
+  private[graft] def indexProbe(s: SparkSession, tablePath: String,
+      terms: Option[Seq[String]]): (DataFrame, DataFrame) = {
+    val (nBuckets, dfCap) = manifestIndexLayout(s, tablePath)
+    val rel = indexTable(s, tablePath)
+    val probed = terms.fold(lit(true)) { ts =>
+      col("bkt").isin(
+        ts.distinct.map(t => polyHashLocal(t) % nBuckets).distinct: _*)
+    }
+    val posts = rel.where(col("kind") === "p" && probed)
+    val kept =
+      if (dfCap <= 0L) posts
+      else evictOverCap(posts, dfCap, rel.where(col("kind") === "d" && probed))
+    val stats = rel.where(col("kind") === "s")
+      .agg(sum(col("doc_id")).as("n_docs"), sum(col("dl")).as("sum_dl"))
+    (kept.drop("kind"), stats)
+  }
+
+  /** BM25 over the stored index: the [[indexProbe]] relation into the
+    * [[bm25Rank]] tail [[bm25MultiOn]] uses — results are bitwise the
+    * scan face's (tf and df are identical relations), same oracle. The
+    * one BM25 probe for the memoized faces and the streaming face
+    * ([[graft.streaming.EventStream.maintainTextIndex]]). */
+  def bm25StoredTopK(s: SparkSession, tablePath: String,
       queries: Seq[(Long, String)], k: Int): DataFrame = {
     import s.implicits._
-    val (tf, stats) = storedProbe(s, path, queries.map(_._2))
+    val (tf, stats) = indexProbe(s, tablePath, Some(queries.map(_._2)))
     bm25Rank(tf, queries.toDF("query_id", "term"), stats, k)
   }
 
@@ -1090,10 +1207,10 @@ object TextAnalysis {
     * `text_index_search` / `text_index_wand` pins the equivalence in
     * the driver's gate, and TextAnalysisSpec pins that the prune
     * actually fires. */
-  def bm25WandStoredTopK(s: SparkSession, path: String,
+  def bm25WandStoredTopK(s: SparkSession, tablePath: String,
       queries: Seq[(Long, String)], k: Int): DataFrame = {
     import s.implicits._
-    val (tf, stats) = storedProbe(s, path, queries.map(_._2))
+    val (tf, stats) = indexProbe(s, tablePath, Some(queries.map(_._2)))
     wandRank(tf, queries.toDF("query_id", "term"), stats, k)
   }
 
@@ -1175,40 +1292,34 @@ object TextAnalysis {
       .limit(k)
   }
 
-  /** PHRASE search over the MATERIALIZED positional index: probe the
-    * two terms' buckets (directory pruning, like [[bm25StoredTopK]]),
-    * join the two posting lists on doc_id, and count adjacency as
+  /** PHRASE search over the stored POSITIONAL index: probe the two
+    * terms' buckets ([[indexProbe]], like [[bm25StoredTopK]]), join the
+    * two posting lists on doc_id, and count adjacency as
     * `|{p+1 : p ∈ ps(w1)} ∩ ps(w2)|` — positions are distinct, so the
     * intersect size IS the phrase tf. This is the classic positional-
     * index plan: the corpus is never touched, the join mass is the two
-    * posting lists, and at 100 TB the probe reads two bucket
-    * directories of an index built once. Bitwise the scan face's
-    * answers (same integer arithmetic), same oracle. */
-  def phraseStoredTopK(s: SparkSession, path: String, w1: String,
+    * posting lists, and at 100 TB the probe reads only the segments
+    * whose `bkt` sidecars admit the two buckets. Bitwise the scan
+    * face's answers (same integer arithmetic), same oracle. */
+  def phraseStoredTopK(s: SparkSession, tablePath: String, w1: String,
       w2: String, k: Int): DataFrame =
-    phraseStoredTopKN(s, path, Seq(w1, w2), k)
+    phraseStoredTopKN(s, tablePath, Seq(w1, w2), k)
 
-  /** [[phraseStoredTopK]] for an n-word phrase (n >= 2): probe the n
-    * terms' buckets (directory pruning — the probe reads at most n
-    * bucket directories, exactly one per DISTINCT term), inner-join
-    * the n posting lists on doc_id, and narrow the START-position set
-    * left to right: S_0 = ps(t_0), S_i = S_(i-1) ∩ {p - i : p ∈
-    * ps(t_i)} — positions are distinct, so |S_(n-1)| IS the phrase tf.
-    * A repeated term re-joins its own posting list under a fresh
-    * alias, shifted differently per occurrence. The corpus is never
-    * touched; the join mass is the n posting lists; at 100 TB an
-    * 8-13-gram decontamination probe reads n bucket directories of an
-    * index built once. Bitwise the scan face's answers, same
-    * oracle. */
-  def phraseStoredTopKN(s: SparkSession, path: String,
+  /** [[phraseStoredTopK]] for an n-word phrase (n >= 2): one
+    * [[indexProbe]] over the n terms' buckets, inner-join the n posting
+    * lists on doc_id, and narrow the START-position set left to right:
+    * S_0 = ps(t_0), S_i = S_(i-1) ∩ {p - i : p ∈ ps(t_i)} — positions
+    * are distinct, so |S_(n-1)| IS the phrase tf. A repeated term
+    * re-joins its own posting list under a fresh alias, shifted
+    * differently per occurrence. The corpus is never touched; the join
+    * mass is the n posting lists; at 100 TB an 8-13-gram
+    * decontamination probe reads only the segments the n buckets'
+    * sidecars admit, of an index built once. Bitwise the scan face's
+    * answers, same oracle. */
+  def phraseStoredTopKN(s: SparkSession, tablePath: String,
       terms: Seq[String], k: Int): DataFrame = {
     require(terms.size >= 2, s"a phrase needs >= 2 words: $terms")
-    val (nBuckets, _) = storedIndexLayout(s, path)
-    val bkts = terms.distinct
-      .map(t => (graft.functions.TextFunctions.polyHashLocal(t)
-        % nBuckets).toInt).distinct
-    val post = s.read.schema(PostingsSchema).parquet(path + "/postings")
-      .where(col("bkt").isin(bkts: _*))
+    val (post, _) = indexProbe(s, tablePath, Some(terms))
     val joined = terms.zipWithIndex.map { case (t, i) =>
       val base = post.where(col("word") === t)
       if (i == 0)
@@ -1228,369 +1339,71 @@ object TextAnalysis {
       .limit(k)
   }
 
-  /** INCREMENTAL index maintenance — apply an appended document batch
-    * to an existing index WITHOUT touching the base corpus: postings
-    * are per-(doc, word) rows, so an append-only batch (fresh doc_ids)
-    * contributes disjoint rows that land in their words' existing
-    * bucket directories (`mode("append")` + the same partitioning);
-    * the corpus stats are additive integers (N, Σdl), merged from one
-    * read of the old 1-row stats plus the batch's own aggregate. df
-    * stays exact with zero recomputation because it was never stored —
-    * [[bm25Rank]] derives it from the probed posting lists, which now
-    * simply include the batch's rows. Refresh cost scales with the
-    * batch, never the corpus — the nightly-dump shape
-    * ([[Dedup.corpusRefresh]]'s discipline applied to the index).
-    * (The fixture store is plain parquet; a production deployment
-    * versions the postings through [[graft.sources.ManifestStore]] so
-    * the append is a pointer commit — the layout and the merge
-    * algebra are identical.) */
-  def refreshTextIndex(batch: DataFrame, path: String): Unit = {
-    val s = batch.sparkSession
-    import s.implicits._
-    // the batch is bucketed by the STORE'S OWN layout (the ann_ivf_
-    // refresh discipline): a knob change between build and refresh
-    // must not split a word's posting list across two buckets
-    val (nBuckets, dfCap) = storedIndexLayout(s, path)
-    val base = batch
-      .select(col("doc_id"), words(col("text")).as("ws"))
-      .withColumn("dl", size(col("ws")).cast("long"))
-      .where(col("dl") > 0)
-    val old = s.read.parquet(path + "/stats")
-      .select("n_docs", "sum_dl").head
-    val d = base.agg(count(lit(1)).as("n_docs"),
-      coalesce(sum(col("dl")), lit(0L)).as("sum_dl")).head
-    val pairs = base.select(col("doc_id"), col("dl"),
-        posexplode(col("ws")).as(Seq("p", "word")))
-      .groupBy("doc_id", "dl", "word")
-      .agg(count(lit(1)).as("tf"),
-        sort_array(collect_list(col("p") + 1)).as("ps"))
-      .withColumn("bkt",
-        graft.functions.TextFunctions.polyHash(col("word"))
-          % lit(nBuckets))
-    if (dfCap <= 0L)
-      pairs.write.mode("append").partitionBy("bkt")
-        .parquet(path + "/postings")
-    else
-      refreshCapped(s, path, pairs, nBuckets, dfCap)
-    // stats LAST: full-corpus stats even under a cap, additive merge
-    Seq((old.getLong(0) + d.getLong(0), old.getLong(1) + d.getLong(1)))
-      .toDF("n_docs", "sum_dl")
-      .select(col("n_docs"), col("sum_dl"),
-        lit(nBuckets).as("n_buckets"), lit(dfCap).as("df_cap"))
-      .coalesce(1).write.mode("overwrite").parquet(path + "/stats")
-  }
+  /** Memoized text index behind `text_index_search`, `_wand`,
+    * `text_wand_stats`, `_phrase`, `_phrase_n` and `_stats`: one commit
+    * of the whole corpus, then the clustered rewrite. Lifecycle mirrors
+    * [[Ann.manifestIvfIndexFor]] (torn down by [[releaseCaches]],
+    * shutdown hook for lifecycle-skipping drivers). */
+  private val textIndexes =
+    new FixtureTables[String]("graft-text-index-")(identity)
 
-  /** The capped-refresh core — exact incremental capping against the
-    * STORED per-word dfs ([[DfsSchema]], written by every capped
-    * build): merged df = base + batch decides, per word,
-    *   - base ≤ cap < merged → NEWLY over: the word's existing posting
-    *     list is EVICTED (only its bucket directories rewrite — the
-    *     affected set is bounded by the layout's bucket count, never
-    *     the corpus);
-    *   - merged ≤ cap → surviving: the batch's rows append as usual;
-    *   - base > cap → over since build: nothing stored, batch rows
-    *     excluded.
-    * Every decision reads the OLD dfs store; the batch's own df
-    * contributions append LAST (additive rows — no read-modify-write),
-    * so the jobs that consume the joins see one consistent snapshot.
-    * Refreshed state ≡ a from-scratch capped rebuild at the same
-    * absolute cap, bitwise (spec-pinned). */
-  private def refreshCapped(s: SparkSession, path: String,
-      pairs: DataFrame, nBuckets: Long, dfCap: Long): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    require(fs.exists(new org.apache.hadoop.fs.Path(path + "/dfs")),
-      s"text index at $path was capped (df_cap=$dfCap) but carries no " +
-        "per-word df store — it predates capped-refresh support and " +
-        "exact incremental capping is impossible; rebuild instead")
-    // a leftover staging dir means a previous rewrite crashed between
-    // its renames — it may hold the ONLY copy of a bucket's surviving
-    // postings; destroying it (or rewriting around it) would turn a
-    // recoverable crash into silent data loss, so refuse loud
-    val staleStaging = new org.apache.hadoop.fs.Path(
-      path + "/.postings-rewrite")
-    require(!fs.exists(staleStaging),
-      s"text index at $path has a leftover capped-refresh staging dir " +
-        s"($staleStaging) — a previous rewrite did not complete; " +
-        "inspect/restore its bucket dirs before refreshing again")
-    // a leftover append marker means a previous refresh crashed
-    // between its postings append and its dfs append — batch postings
-    // are on disk WITHOUT their df contributions, so every later
-    // refresh would compute base_df too low and permanently diverge
-    // from a capped rebuild (a word pushed over the cap might never
-    // evict); re-running the batch would double-append. Neither is
-    // recoverable in place on the parquet face (no tag idempotency,
-    // unlike the manifest face's single tagged storeBatch) — refuse
-    // loud, rebuild.
-    require(!fs.exists(appendMarker(path)),
-      s"text index at $path has a leftover append marker " +
-        s"(${appendMarker(path)}) — a previous capped refresh crashed " +
-        "between its postings and dfs appends and the stored per-word " +
-        "dfs no longer match the postings; rebuild the index (crash-" +
-        "safe capped maintenance goes through the manifest face)")
-    // the batch relation feeds four jobs (evict collect, bucket
-    // rewrite, surviving append, dfs append) — materialize it once;
-    // released before return (the per-call persist is scoped, not
-    // leaked)
-    val cached = pairs.persist()
-    try refreshCappedOn(s, path, cached, nBuckets, dfCap)
-    finally { cached.unpersist(); () }
-  }
+  private[graft] def textIndexFor(s: SparkSession, dir: String): String =
+    textIndexes(s, dir)(corpusIndex(s, dir, _, dfCap = 0L))
 
-  private def refreshCappedOn(s: SparkSession, path: String,
-      pairs: DataFrame, nBuckets: Long, dfCap: Long): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    val batchDfs = pairs.groupBy("word").agg(count(lit(1)).as("df"))
-    val baseDfs = s.read.schema(DfsSchema).parquet(path + "/dfs")
-      .groupBy("word").agg(sum(col("df")).as("df"))
-    val merged = baseDfs
-      .select(col("word"), col("df").as("base_df"))
-      .join(batchDfs.select(col("word"), col("df").as("batch_df")),
-        Seq("word"), "full_outer")
-      .select(col("word"),
-        coalesce(col("base_df"), lit(0L)).as("base_df"),
-        coalesce(col("batch_df"), lit(0L)).as("batch_df"))
-    // 1. EVICT newly-over words: rewrite only their bucket dirs
-    //    (<= nBuckets of them — layout-bounded), via a staging dir
-    //    because a store cannot be overwritten while being read
-    val evict = merged
-      .where(col("base_df") > 0 && col("base_df") <= dfCap &&
-        col("base_df") + col("batch_df") > dfCap)
-      .select(col("word"),
-        (graft.functions.TextFunctions.polyHash(col("word"))
-          % lit(nBuckets)).cast("int").as("bkt"))
-    val affected = evict.select("bkt").distinct().collect()
-      .map(_.getInt(0)).sorted
-    if (affected.nonEmpty) {
-      val staging = new org.apache.hadoop.fs.Path(
-        path + "/.postings-rewrite")
-      s.read.schema(PostingsSchema).parquet(path + "/postings")
-        .where(col("bkt").isin(affected.map(Int.box): _*))
-        .join(evict.select("word"), Seq("word"), "left_anti")
-        .select("doc_id", "dl", "word", "tf", "ps", "bkt")
-        .write.partitionBy("bkt").parquet(staging.toString)
-      // rename-aside swap: the base bucket dir is MOVED into staging
-      // (never deleted before its replacement is in place), so no
-      // crash point leaves a bucket's surviving postings with zero
-      // copies on disk — a crash mid-swap is recovered from the
-      // staging dir the next refresh refuses loud over
-      affected.foreach { b =>
-        val dst = new org.apache.hadoop.fs.Path(
-          path + s"/postings/bkt=$b")
-        val bak = new org.apache.hadoop.fs.Path(staging, s"old-bkt=$b")
-        if (fs.exists(dst) && !fs.rename(dst, bak))
-          throw new java.io.IOException(
-            s"capped-refresh rewrite rename-aside of $dst failed")
-        val src = new org.apache.hadoop.fs.Path(staging, s"bkt=$b")
-        if (fs.exists(src) && !fs.rename(src, dst))
-          throw new java.io.IOException(
-            s"capped-refresh rewrite rename into $dst failed")
-      }
-      fs.delete(staging, true)
+  /** Memoized DF-CAPPED index behind `text_index_capped`: the same
+    * corpus, committed with the [[TextIndexDfCapPct]] cap resolved
+    * against its own size — stopword-class posting lists never stored,
+    * surviving terms' answers bitwise the uncapped index's (the oracle
+    * mirrors the floored cap arithmetic in SQL). */
+  private val cappedTextIndexes =
+    new FixtureTables[String]("graft-text-capped-")(identity)
+
+  private[graft] def cappedTextIndexFor(s: SparkSession, dir: String): String =
+    cappedTextIndexes(s, dir) { path =>
+      // project-then-filter (not a bare where) keeps the tokenize out
+      // of the FilterExec — one eval per row, and the plan-audit's
+      // zero-kernel-calls-in-Filter invariant holds for build jobs too
+      val nDocs = Tables(s, dir, "documents")
+        .select(graft.functions.TextHashExpressions
+          .optBarrier(size(words(col("text")))).as("nw"))
+        .where(col("nw") > 0).count()
+      corpusIndex(s, dir, path, dfCap = nDocs * TextIndexDfCapPct / 100L)
     }
-    // 2+3. APPEND the batch's surviving rows, then its df
-    // contributions. The two appends are separate non-atomic jobs; a
-    // crash between them would leave postings on disk with their df
-    // contributions missing (base_df permanently too low — silent
-    // divergence from a capped rebuild), so the pair is bracketed by
-    // a marker the next refresh refuses loud over (the staging dir's
-    // discipline extended to the append window). dfs still land LAST
-    // so in-flight readers see one snapshot.
-    val marker = appendMarker(path)
-    fs.create(marker, false).close()
-    pairs
-      .join(merged.where(col("base_df") + col("batch_df") <= dfCap)
-        .select("word"), Seq("word"), "left_semi")
-      .select("doc_id", "dl", "word", "tf", "ps", "bkt")
-      .write.mode("append").partitionBy("bkt")
-      .parquet(path + "/postings")
-    batchDfs.write.mode("append").parquet(path + "/dfs")
-    if (!fs.delete(marker, false))
-      throw new java.io.IOException(
-        s"capped-refresh append marker $marker could not be removed")
+
+  /** init → one commit of the fixture corpus → clustered compaction. */
+  private def corpusIndex(s: SparkSession, dir: String, path: String,
+      dfCap: Long): String = {
+    initManifestTextIndex(s, path)
+    refreshManifestTextIndex(
+      Tables(s, dir, "documents").select("doc_id", "text"), path,
+      "corpus", dfCap = dfCap)
+    compactManifestTextIndex(s, path)
+    path
   }
 
-  /** Marker bracketing the capped refresh's postings+dfs append pair —
-    * present on disk exactly while postings may exist without their df
-    * contributions (see [[refreshCapped]]'s refuse-loud check). */
-  private def appendMarker(path: String): org.apache.hadoop.fs.Path =
-    new org.apache.hadoop.fs.Path(path + "/.dfs-append-inflight")
+  /** Memoized REFRESHED index behind `text_index_refresh`: a commit of
+    * the anchored manifest snapshot (the stored nightly state), then a
+    * commit of exactly the segments appended since the anchor
+    * (`readSinceInferred` — the change feed). The refreshed index must
+    * answer queries bitwise like an index over the full corpus — the
+    * driver's oracle recomputes from scratch, which is the
+    * mergeability proof. */
+  private val refreshedIndexes =
+    new FixtureTables[String]("graft-text-refresh-")(identity)
 
-  // ----------------------------------------------------------------
-  // manifest-backed index — exactly-once maintenance, pruned probes
-  // ----------------------------------------------------------------
-
-  /** The manifest collection name holding a versioned text index. */
-  val TextIndexCollection = "tindex"
-
-  /** One batch's index contribution as ONE relation, so maintenance is
-    * ONE tagged pointer commit (atomic + replay-idempotent — the
-    * [[graft.streaming.EventStream.ingestStoreRequests]]
-    * exactly-once discipline applied to index maintenance). Row
-    * shapes, discriminated by `kind`:
-    *   - `'p'` posting: (doc_id, dl, word, tf, bkt) — bkt =
-    *     polyHash(word) % n_buckets, the probe axis;
-    *   - `'s'` stats contribution: doc_id := the batch's doc count,
-    *     dl := its Σdl, word/tf/bkt NULL — corpus stats are ADDITIVE,
-    *     so the total is a sum over stats rows and never needs
-    *     read-modify-write (the parquet-store refresh's one
-    *     non-commutative step, gone);
-    *   - `'b'` layout identity: dl := the bucket count this batch was
-    *     hashed with, everything else NULL/0. Every commit carries one,
-    *     so probe time can verify the WHOLE index shares one layout —
-    *     a knob change between commits is a loud error, never a
-    *     silently-empty posting list.
-    * Keeping all kinds in one commit means a crash can never publish
-    * postings without their stats/layout contribution or vice versa.
-    * (The manifest face is tf-only — it serves BM25; the PARQUET face
-    * additionally stores positions for [[phraseStoredTopK]].) */
-  def indexRows(docs: DataFrame,
-      nBuckets: Long = TextIndexBuckets): DataFrame = {
-    require(nBuckets > 0, s"text index needs nBuckets > 0, got $nBuckets")
-    val base = docs.select(col("doc_id"), words(col("text")).as("ws"))
-      .withColumn("dl", size(col("ws")).cast("long"))
-      .where(col("dl") > 0)
-    val postings = base
-      .select(col("doc_id"), col("dl"), explode(col("ws")).as("word"))
-      .groupBy("doc_id", "dl", "word")
-      .agg(count(lit(1)).as("tf"))
-      .select(lit("p").as("kind"), col("doc_id"), col("dl"), col("word"),
-        col("tf"),
-        (graft.functions.TextFunctions.polyHash(col("word"))
-          % lit(nBuckets)).as("bkt"))
-    val stats = base
-      .agg(count(lit(1)).as("doc_id"),
-        coalesce(sum(col("dl")), lit(0L)).as("dl"))
-      .select(lit("s").as("kind"), col("doc_id"), col("dl"),
-        lit(null).cast("string").as("word"), lit(null).cast("long").as("tf"),
-        lit(null).cast("long").as("bkt"))
-    val layout = docs.sparkSession.range(1)
-      .select(lit("b").as("kind"), lit(0L).as("doc_id"),
-        lit(nBuckets).as("dl"), lit(null).cast("string").as("word"),
-        lit(null).cast("long").as("tf"), lit(null).cast("long").as("bkt"))
-    postings.unionByName(stats).unionByName(layout)
-  }
-
-  /** The bucket count a VERSIONED index was built with, from its `'b'`
-    * layout rows. Exactly one distinct value must exist: zero means the
-    * index predates layout versioning (its geometry is unknowable —
-    * rebuild), more than one means commits were hashed under different
-    * layouts (a corrupted index — posting lists are split across
-    * buckets and every df is suspect). */
-  def manifestIndexBuckets(s: SparkSession, tablePath: String): Long = {
-    val nbs = s.read.format("graft").option("path", tablePath)
-      .option("collection", TextIndexCollection).load()
-      .where(col("kind") === "b").select(col("dl")).distinct()
-      .collect().map(_.getLong(0)).sorted
-    require(nbs.length == 1,
-      if (nbs.isEmpty)
-        s"text index at $tablePath carries no 'b' layout row — it " +
-          "predates bucket-count versioning; rebuild it"
-      else
-        s"text index at $tablePath was committed under MULTIPLE bucket " +
-          s"counts ${nbs.mkString("[", ", ", "]")} — posting lists are " +
-          "split across layouts; rebuild it")
-    nbs.head
-  }
-
-  /** Table config for a manifest text index: zone maps on the probe
-    * axis (effective once segments are bkt-clustered — see
-    * [[compactManifestTextIndex]]) plus blooms for point probes on
-    * post-append interleaved segments. Call once before the first
-    * commit. */
-  def initManifestTextIndex(s: SparkSession, tablePath: String): Unit = {
-    graft.sources.ManifestStore.setZoneMapColumns(s, tablePath, Seq("bkt"))
-    graft.sources.ManifestStore.setBloomColumns(s, tablePath, Seq("bkt"))
-  }
-
-  /** Apply one document batch to the versioned index — one tagged
-    * commit; a replayed tag is a no-op (returns false). Cost scales
-    * with the batch, never the index. The FIRST commit establishes the
-    * bucket count (from `nBuckets`); every later batch is hashed with
-    * the STORED layout — the parameter is ignored once the index
-    * exists, so a constant change can never split posting lists. */
-  def refreshManifestTextIndex(docs: DataFrame, tablePath: String,
-      tag: String, nBuckets: Long = TextIndexBuckets): Boolean = {
-    val s = docs.sparkSession
-    val live = graft.sources.ManifestStore
-      .currentSegments(s, tablePath, TextIndexCollection)
-      .toSeq.flatten
-    val nb = if (live.isEmpty) nBuckets else manifestIndexBuckets(s, tablePath)
-    graft.sources.ManifestStore.storeBatch(
-      indexRows(docs, nb), tablePath, TextIndexCollection, tag)
-  }
-
-  /** Restore probe pruning after streaming appends: every batch
-    * segment spans most buckets, so bkt zone maps exclude little until
-    * a clustered rewrite lays the postings out in bkt ranges (one
-    * atomic pointer commit; probes then skip whole segments). The
-    * rewrite also FOLDS the per-batch metadata rows: the additive `'s'`
-    * stats contributions collapse to one summed row and the identical
-    * `'b'` layout rows to one distinct row — reader-equivalent by
-    * construction (stats are READ as sums, the layout as its distinct
-    * value set), so the one-tiny-row-per-batch stats scans are bounded
-    * by compactions, not by commit count. Batches appended DURING the
-    * rewrite keep their own additive rows, which sum correctly beside
-    * the folded one. */
-  def compactManifestTextIndex(s: SparkSession, tablePath: String,
-      segments: Int = 4): Unit =
-    graft.sources.ManifestStore.zorderCompact(
-      s, tablePath, TextIndexCollection, Seq("bkt"), segments,
-      foldIndexMeta)
-
-  /** The reader-equivalent metadata fold applied at compaction (see
-    * [[compactManifestTextIndex]]). Multi-valued `'b'` layouts — the
-    * corruption [[manifestIndexBuckets]] fails loud on — survive the
-    * distinct, so compaction can never mask that signal. */
-  private[graft] def foldIndexMeta(rows: DataFrame): DataFrame = {
-    // any kind this fold does not understand passes through UNTOUCHED —
-    // a future row kind added to indexRows must survive compaction
-    // verbatim, not be silently deleted the first time the rewrite
-    // runs (reader-equivalence by construction; a null kind is
-    // unknown too)
-    val other = rows.where(col("kind").isNull ||
-      !col("kind").isin("p", "s", "b"))
-    val p = rows.where(col("kind") === "p")
-    val sRows = rows.where(col("kind") === "s")
-      .agg(coalesce(sum(col("doc_id")), lit(0L)).as("doc_id"),
-        coalesce(sum(col("dl")), lit(0L)).as("dl"),
-        count(lit(1)).as("n"))
-      .where(col("n") > 0)
-      .select(lit("s").as("kind"), col("doc_id"), col("dl"),
-        lit(null).cast("string").as("word"),
-        lit(null).cast("long").as("tf"),
-        lit(null).cast("long").as("bkt"))
-    val bRows = rows.where(col("kind") === "b")
-      .select("kind", "doc_id", "dl", "word", "tf", "bkt").distinct()
-    p.unionByName(sRows).unionByName(bRows).unionByName(other)
-  }
-
-  /** BM25 over the VERSIONED index through the declarative connector:
-    * probe buckets resolve driver-side as usual, and the `bkt IN (…)`
-    * filter prunes SEGMENTS via the zone-map/bloom sidecars (after
-    * [[compactManifestTextIndex]], whole bkt ranges skip at planning
-    * time). Stats are the SUM over the additive `'s'` rows. Same
-    * [[bm25Rank]] tail — bitwise the scan face's answers, same
-    * oracle. */
-  def bm25ManifestTopK(s: SparkSession, tablePath: String,
-      queries: Seq[(Long, String)], k: Int): DataFrame = {
-    import s.implicits._
-    // probe with the index's OWN committed layout (verified single-
-    // valued across commits), never the build-time constant
-    val nBuckets = manifestIndexBuckets(s, tablePath)
-    val probeBkts = queries.map(_._2).distinct
-      .map(t => graft.functions.TextFunctions.polyHashLocal(t)
-        % nBuckets).distinct
-    val rel = s.read.format("graft").option("path", tablePath)
-      .option("collection", TextIndexCollection).load()
-    val stats = rel.where(col("kind") === "s")
-      .agg(sum(col("doc_id")).as("n_docs"), sum(col("dl")).as("sum_dl"))
-    val tf = rel
-      .where(col("kind") === "p" && col("bkt").isin(probeBkts: _*))
-      .select("doc_id", "dl", "word", "tf")
-    bm25Rank(tf, queries.toDF("query_id", "term"), stats, k)
-  }
+  private[graft] def refreshedTextIndexFor(s: SparkSession,
+      dir: String): String =
+    refreshedIndexes(s, dir) { path =>
+      val (table, anchor) = Dedup.manifestDocsTable(s, dir)
+      initManifestTextIndex(s, path)
+      refreshManifestTextIndex(graft.sources.ManifestStore
+        .readAsOfInferred(s, table, "docs", anchor)
+        .select("doc_id", "text"), path, "base")
+      refreshManifestTextIndex(graft.sources.ManifestStore
+        .readSinceInferred(s, table, "docs", anchor)
+        .select("doc_id", "text"), path, "delta")
+      path
+    }
 
   /** Memoized manifest-backed index behind `text_index_manifest`:
     * initial commit from the corpus slice, one maintenance commit from
@@ -1613,80 +1426,21 @@ object TextAnalysis {
       path
     }
 
-  /** Memoized REFRESHED index behind `text_index_refresh`: base build
-    * from the anchored manifest snapshot (the stored nightly state),
-    * then [[refreshTextIndex]] applies exactly the segments appended
-    * since the anchor (`readSinceInferred` — the change feed). The
-    * refreshed index must answer queries bitwise like an index built
-    * from the full corpus — the driver's oracle recomputes from
-    * scratch, which is the mergeability proof. */
-  private val refreshedIndexes =
-    new FixtureTables[String]("graft-text-refresh-")(identity)
-
-  private[graft] def refreshedTextIndexFor(s: SparkSession,
-      dir: String): String =
-    refreshedIndexes(s, dir) { path =>
-      val (table, anchor) = Dedup.manifestDocsTable(s, dir)
-      buildTextIndex(graft.sources.ManifestStore
-        .readAsOfInferred(s, table, "docs", anchor)
-        .select("doc_id", "text"), path)
-      refreshTextIndex(graft.sources.ManifestStore
-        .readSinceInferred(s, table, "docs", anchor)
-        .select("doc_id", "text"), path)
-      path
-    }
-
-  /** Index OBSERVABILITY — per-bucket occupancy of the materialized
-    * postings store ([[Ann.lshBuckets]]'s discipline applied to text):
-    * distinct words, posting rows, and token mass per bucket. Read
-    * from the store itself and oracled against a from-scratch
-    * recomputation over the raw corpus — a standing integrity check
-    * that the persisted index IS the corpus's inverted index. Skew
-    * here (a stopword-heavy bucket) is what a stop-list or
+  /** Index OBSERVABILITY — per-bucket occupancy of the stored postings
+    * ([[Ann.lshBuckets]]'s discipline applied to text): distinct
+    * words, posting rows, and token mass per bucket. Read through
+    * [[indexProbe]] over every bucket and oracled against a
+    * from-scratch recomputation over the raw corpus — a standing
+    * integrity check that the persisted index IS the corpus's inverted
+    * index. Skew here (a stopword-heavy bucket) is what a stop-list or
     * impact-ordering decision is made from. */
   def textIndexStats(s: SparkSession, dir: String): DataFrame =
-    s.read.schema(PostingsSchema)
-      .parquet(textIndexFor(s, dir) + "/postings")
+    indexProbe(s, textIndexFor(s, dir), None)._1
       .groupBy(col("bkt").cast("int").as("bkt"))
       .agg(count_distinct(col("word")).as("n_words"),
         count(lit(1)).as("n_postings"),
         sum(col("tf")).as("n_tokens"))
       .orderBy("bkt")
-
-  /** Memoized materialized text index per (session, fixture dir) —
-    * the implicit index behind the `text_index_search` declared query;
-    * lifecycle mirrors [[Ann.manifestIvfIndexFor]] (torn down by
-    * [[releaseCaches]], shutdown hook for lifecycle-skipping drivers). */
-  private val textIndexes =
-    new FixtureTables[String]("graft-text-index-")(identity)
-
-  private[graft] def textIndexFor(s: SparkSession, dir: String): String =
-    textIndexes(s, dir) { path =>
-      buildTextIndex(Tables(s, dir, "documents"), path)
-      path
-    }
-
-  /** Memoized DF-CAPPED index behind `text_index_capped`: the same
-    * corpus, built with the [[TextIndexDfCapPct]] cap resolved against
-    * its own size — stopword-class posting lists never stored,
-    * surviving terms' answers bitwise the uncapped index's (the oracle
-    * mirrors the floored cap arithmetic in SQL). */
-  private val cappedTextIndexes =
-    new FixtureTables[String]("graft-text-capped-")(identity)
-
-  private[graft] def cappedTextIndexFor(s: SparkSession, dir: String): String =
-    cappedTextIndexes(s, dir) { path =>
-      val docs = Tables(s, dir, "documents")
-      // project-then-filter (not a bare where) keeps the tokenize out
-      // of the FilterExec — one eval per row, and the plan-audit's
-      // zero-kernel-calls-in-Filter invariant holds for build jobs too
-      val nDocs = docs
-        .select(graft.functions.TextHashExpressions
-          .optBarrier(size(words(col("text")))).as("nw"))
-        .where(col("nw") > 0).count()
-      buildTextIndex(docs, path, dfCap = nDocs * TextIndexDfCapPct / 100L)
-      path
-    }
 
   /** Drop every memoized materialized text index (every main calls
     * this on shutdown). */
@@ -2020,9 +1774,9 @@ object TextAnalysis {
       (s, dir) => bm25Multi(s, dir)),
 
     // the STORED-index face: same ranking, same oracle — the engine
-    // side reads postings back from the bucket-partitioned store and
-    // must land on the identical result (plus partition-pruning
-    // assertions in TextAnalysisSpec)
+    // side reads postings back from the manifest index's probed
+    // buckets and must land on the identical result (plus segment-
+    // pruning assertions in TextAnalysisSpec)
     QueryDef.sql("text_index_search", bm25MultiOracleSql)((s, dir) =>
       bm25StoredTopK(s, textIndexFor(s, dir), Bm25QuerySuite, Bm25TopK)),
 
@@ -2045,8 +1799,8 @@ object TextAnalysis {
       wandStatsStored(s, textIndexFor(s, dir), Bm25QuerySuite,
         Bm25TopK)),
 
-    // INCREMENTALLY-refreshed index (base build + change-feed delta
-    // append) must answer bitwise like an index over the full corpus:
+    // INCREMENTALLY-refreshed index (base commit + change-feed delta
+    // commit) must answer bitwise like an index over the full corpus:
     // the oracle recomputes from scratch — the mergeability proof
     QueryDef.sql("text_index_refresh", bm25MultiOracleSql)((s, dir) =>
       bm25StoredTopK(s, refreshedTextIndexFor(s, dir),
@@ -2055,7 +1809,7 @@ object TextAnalysis {
     // DF-CAPPED index: stopword-class posting lists (df > cap) are
     // never stored — the hottest buckets shed their corpus-sized
     // lists — while every SURVIVING term answers bitwise like the
-    // uncapped store (whole lists kept, df window exact); the oracle
+    // uncapped index (whole lists kept, df window exact); the oracle
     // recomputes from the raw corpus with the cap mirrored in SQL
     QueryDef.sql("text_index_capped",
       bm25MultiOracleSqlCapped(TextIndexDfCapPct))((s, dir) =>
@@ -2088,8 +1842,8 @@ object TextAnalysis {
       phraseTopK(Tables(s, dir, "documents"),
         PhraseTerms._1, PhraseTerms._2, PhraseTopK)),
 
-    // the same phrase served from the POSITIONAL stored index: two
-    // bucket probes + a posting-list join, corpus never touched —
+    // the same phrase served from the POSITIONAL stored index: one
+    // two-bucket probe + a posting-list join, corpus never touched —
     // must answer bitwise like the scan face, same oracle
     QueryDef.sql("text_index_phrase", phraseOracleSql)((s, dir) =>
       phraseStoredTopK(s, textIndexFor(s, dir),
@@ -2103,7 +1857,7 @@ object TextAnalysis {
         phraseNProbe(s, dir), PhraseTopK)),
 
     // ...and the same n-gram served from the POSITIONAL stored index:
-    // n bucket probes + n-1 posting-list joins narrowing the start-
+    // one n-bucket probe + n-1 posting-list joins narrowing the start-
     // position set, corpus never touched — bitwise the scan face,
     // same oracle
     QueryDef.sql("text_index_phrase_n", phraseNOracleSql)((s, dir) =>
@@ -2130,7 +1884,7 @@ object TextAnalysis {
     // connector: init -> tagged refresh -> clustered compaction, same
     // from-scratch oracle
     QueryDef.sql("text_index_manifest", bm25MultiOracleSql)((s, dir) =>
-      bm25ManifestTopK(s, manifestTextIndexFor(s, dir),
+      bm25StoredTopK(s, manifestTextIndexFor(s, dir),
         Bm25QuerySuite, Bm25TopK)),
 
     QueryDef.sql("text_word_freq",

@@ -668,12 +668,13 @@ object EventStream {
   /** Streaming maintenance of the VERSIONED text index — documents
     * dropped as JSON become one tagged index commit per micro-batch
     * ([[graft.operators.TextAnalysis.refreshManifestTextIndex]]):
-    * postings + the batch's additive stats row land atomically, and an
-    * at-least-once redelivery finds its `<ingest-id>-<batchId>` tag
-    * already in the pointer log and no-ops — the
-    * [[ingestStoreRequests]] exactly-once contract applied to
+    * positional postings + the batch's additive stats and layout rows
+    * land atomically, and an at-least-once redelivery finds its
+    * `<ingest-id>-<batchId>` tag already in the pointer log and no-ops
+    * — the [[ingestStoreRequests]] exactly-once contract applied to
     * index maintenance. Searches ([[graft.operators.TextAnalysis
-    * .bm25ManifestTopK]]) run against committed versions only; run
+    * .bm25StoredTopK]], the same probe the memoized faces use) run
+    * against committed versions only; run
     * [[graft.operators.TextAnalysis.compactManifestTextIndex]] on a
     * maintenance cadence to restore bkt-clustered probe pruning over
     * the appended batch segments. */

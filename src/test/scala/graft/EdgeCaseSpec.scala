@@ -282,7 +282,8 @@ class EdgeCaseSpec extends SparkSpecBase {
     // probes return empty rather than failing
     val dir = java.nio.file.Files
       .createTempDirectory("graft_edge_tidx").toString
-    TextAnalysis.buildTextIndex(noDocs, dir)
+    TextAnalysis.initManifestTextIndex(spark, dir)
+    assert(TextAnalysis.refreshManifestTextIndex(noDocs, dir, "empty"))
     assert(TextAnalysis.bm25StoredTopK(spark, dir,
       TextAnalysis.Bm25QuerySuite, 5).collect().isEmpty)
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))

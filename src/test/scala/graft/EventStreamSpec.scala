@@ -1088,7 +1088,7 @@ class EventStreamSpec extends SparkSpecBase {
       .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("doc_id"),
         r.getAs[Double]("score"), r.getAs[Int]("rnk"))).toSeq
     val streamed = asTuples(
-      TextAnalysis.bm25ManifestTopK(spark, table, suite, 5))
+      TextAnalysis.bm25StoredTopK(spark, table, suite, 5))
     // equals a from-scratch batch index over the union of both drops
     import spark.implicits._
     val all = Seq(
@@ -1108,7 +1108,7 @@ class EventStreamSpec extends SparkSpecBase {
     }
     assert(!TextAnalysis.refreshManifestTextIndex(
       all.where(col("doc_id") <= 3), table, s"$id-0"))
-    assert(asTuples(TextAnalysis.bm25ManifestTopK(
+    assert(asTuples(TextAnalysis.bm25StoredTopK(
       spark, table, suite, 5)) == expect)
     // replay-stable: the redelivered tag minted no version, no instant
     assert(durableInstantsOf(table) == vsBefore)

@@ -219,6 +219,25 @@ class RelationalSpec extends SparkSpecBase {
       full.head.getAs[Long]("n_customers") == 3L)
   }
 
+  test("money sums past the 2^53 exact-double envelope fail loud " +
+      "instead of rounding; sums just under it stay exact") {
+    import spark.implicits._
+    // 2^53 unscaled cents ~ 9.007e13 currency units: each order is
+    // under it, customer 1's SUM is over it
+    val over = Seq((1L, 5.0e13), (1L, 4.5e13), (2L, 10.0))
+      .toDF("o_custkey", "o_totalprice")
+    val e = intercept[Exception](Relational.paretoOn(over).collect())
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause)
+      .takeWhile(_ != null).map(t => String.valueOf(t.getMessage)).toSeq
+    assert(msgs.exists(_.contains("past the 2^53 exact-double envelope")),
+      msgs.mkString(" | "))
+    // a sum just under the bound is exact and not refused
+    val under = Seq((1L, 4.5e13), (1L, 4.5e13))
+      .toDF("o_custkey", "o_totalprice")
+    assert(Relational.paretoOn(under).head
+      .getAs[Double]("revenue_total") == 9.0e13)
+  }
+
   test("order count distribution: histogram masses reconcile with the " +
       "customer table and the filtered orders table") {
     val rows = Relational.orderCountDistribution(spark, sf).collect()

@@ -348,86 +348,53 @@ class TextAnalysisSpec extends SparkSpecBase {
       t.getAs[Long]("n_union").toDouble)
   }
 
-  test("stored inverted index: probe is bkt partition pruning, result " +
-      "bitwise equals the compute-on-scan bm25Multi, bucket holds " +
-      "whole posting lists") {
-    import java.nio.file.Files
-    val docs = spark.read.parquet(s"$sf/documents.parquet")
-    val dir = Files.createTempDirectory("graft_text_index").toString
-    TextAnalysis.buildTextIndex(docs, dir)
+  /** The text index collection at `table`, every row kind. */
+  private def indexRowsAt(table: String): DataFrame =
+    spark.read.format("graft").option("path", table)
+      .option("collection", TextAnalysis.TextIndexCollection).load()
 
-    // the probe's scan prunes directories on bkt (IN partition filter)
-    val stored = TextAnalysis.bm25StoredTopK(spark, dir,
-      TextAnalysis.Bm25QuerySuite, TextAnalysis.Bm25TopK)
-    val plan = stored.queryExecution.executedPlan.toString()
-    assert(plan.contains("PartitionFilters:") && plan.contains("bkt"),
-      s"stored probe must prune on bkt:\n$plan")
-    assert("PartitionFilters: \\[[^\\]]*bkt[^\\]]*IN".r
-      .findFirstIn(plan).nonEmpty,
-      s"probe set must be an IN partition filter:\n$plan")
-
-    // bitwise equality with the scan face (same bm25Rank tail)
-    val got = stored.collect().map(r => (r.getAs[Long]("query_id"),
-      r.getAs[Long]("doc_id"), r.getAs[Long]("dl"),
-      r.getAs[Double]("score"), r.getAs[Int]("rnk"))).toSeq
-    val expect = TextAnalysis.bm25Multi(spark, sf).collect()
-      .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("doc_id"),
-        r.getAs[Long]("dl"), r.getAs[Double]("score"),
-        r.getAs[Int]("rnk"))).toSeq
-    assert(got == expect)
-
-    // the df-window invariant: every word's postings live in exactly
-    // one bucket directory (partitioned by polyHash(word) % B)
-    val spread = spark.read.parquet(dir + "/postings")
-      .groupBy("word").agg(countDistinct(col("bkt")).as("nb"))
-      .where(col("nb") > 1).count()
-    assert(spread == 0L)
-
-    // driver-side bucket twin agrees with the stored layout
-    val bkts = spark.read.parquet(dir + "/postings")
-      .select("word", "bkt").distinct().collect()
-    bkts.foreach { r =>
-      assert(polyHashLocal(r.getString(0)) % TextAnalysis.TextIndexBuckets
-        == r.getAs[Int]("bkt").toLong, r.getString(0)) }
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+  /** A fresh manifest text index under a new temp dir: init, one
+    * commit per batch (tags "c0", "c1", …), optionally compacted. */
+  private def committedIndex(prefix: String, batches: Seq[DataFrame],
+      dfCap: Long = 0L, compact: Boolean = true): String = {
+    val table = java.nio.file.Files.createTempDirectory(prefix).toString +
+      "/t"
+    TextAnalysis.initManifestTextIndex(spark, table)
+    batches.zipWithIndex.foreach { case (b, i) =>
+      assert(TextAnalysis.refreshManifestTextIndex(b, table, s"c$i",
+        dfCap = dfCap))
+    }
+    if (compact) TextAnalysis.compactManifestTextIndex(spark, table)
+    table
   }
 
-  test("incremental index refresh: delta-only append (base files " +
-      "untouched), merged stats exact, answers bitwise like a " +
-      "full-corpus build") {
-    import java.nio.file.Files
-    import spark.implicits._
-    val docs = spark.read.parquet(s"$sf/documents.parquet")
-      .select("doc_id", "text")
-    val corpus = docs.where(col("doc_id") % 10 =!= 1)
-    val batch = docs.where(col("doc_id") % 10 === 1)
-    val dir = Files.createTempDirectory("graft_text_refresh").toString
-    TextAnalysis.buildTextIndex(corpus, dir)
-    def postingFiles() = spark.read.parquet(dir + "/postings")
-      .inputFiles.toSet
-    val before = postingFiles()
-    TextAnalysis.refreshTextIndex(batch, dir)
-    val after = postingFiles()
-    // append-only maintenance: every base file survives, new files add
-    assert(before.subsetOf(after) && after.size > before.size)
-    // merged stats equal a from-scratch aggregate
-    val st = spark.read.parquet(dir + "/stats").head
-    val full = docs
-      .select(size(words(col("text"))).cast("long").as("dl"))
-      .where(col("dl") > 0)
-      .agg(count(lit(1)), sum(col("dl"))).head
-    assert(st.getLong(0) == full.getLong(0) &&
-      st.getLong(1) == full.getLong(1))
-    // refreshed index answers bitwise like the full build
-    val fullDir = Files.createTempDirectory("graft_text_full").toString
-    TextAnalysis.buildTextIndex(docs, fullDir)
-    def ask(d: String) = TextAnalysis.bm25StoredTopK(spark, d,
-      TextAnalysis.Bm25QuerySuite, TextAnalysis.Bm25TopK).collect()
-      .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("doc_id"),
-        r.getAs[Double]("score"), r.getAs[Int]("rnk"))).toSeq
-    assert(ask(dir) == ask(fullDir))
-    Seq(dir, fullDir).foreach(d =>
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(d)))
+  private def dropIndex(table: String): Unit =
+    org.apache.commons.io.FileUtils.deleteQuietly(
+      new java.io.File(table).getParentFile)
+
+  private def ranked(df: DataFrame) = df.collect()
+    .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("doc_id"),
+      r.getAs[Long]("dl"), r.getAs[Double]("score"),
+      r.getAs[Int]("rnk"))).toSeq
+
+  /** Every distinct file scan in `df`'s executed plan, AQE stages
+    * included, deduped by identity (stage objects can be reached twice
+    * through AQE references). */
+  private def fileScans(df: DataFrame)
+      : Seq[org.apache.spark.sql.execution.FileSourceScanExec] = {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{
+      AdaptiveSparkPlanExec, QueryStageExec}
+    def scans(p: SparkPlan): Seq[FileSourceScanExec] = p match {
+      case a: AdaptiveSparkPlanExec => scans(a.executedPlan)
+      case q: QueryStageExec => scans(q.plan)
+      case s: FileSourceScanExec => Seq(s)
+      case other => other.children.flatMap(scans)
+    }
+    scans(df.queryExecution.executedPlan)
+      .foldLeft(Seq.empty[FileSourceScanExec]) { (acc, s) =>
+        if (acc.exists(_ eq s)) acc else acc :+ s
+      }
   }
 
   test("manifest-backed index: one tagged commit per batch (replay " +
@@ -435,56 +402,87 @@ class TextAnalysisSpec extends SparkSpecBase {
       "search bitwise equals the scan face") {
     import java.nio.file.Files
     import org.apache.spark.sql.execution.FileSourceScanExec
+    import graft.sources.ManifestStore
     val docs = spark.read.parquet(s"$sf/documents.parquet")
       .select("doc_id", "text")
     val table = Files.createTempDirectory("graft_text_mfst").toString + "/t"
+    val c = TextAnalysis.TextIndexCollection
     TextAnalysis.initManifestTextIndex(spark, table)
     assert(TextAnalysis.refreshManifestTextIndex(
       docs.where(col("doc_id") % 10 =!= 1), table, "base"))
+    def segs() = ManifestStore.currentSegments(spark, table, c).get
+    def segFiles(ss: Seq[Long]) = ss.flatMap { g =>
+      val d = new java.io.File(f"$table/collection=$c/seg=$g%06d")
+      assert(d.isDirectory, s"segment dir $d is missing")
+      d.listFiles().toSeq.map(f => (g, f.getName, f.length, f.lastModified))
+    }.sorted
+    val baseSegs = segs()
+    val baseFiles = segFiles(baseSegs)
     assert(TextAnalysis.refreshManifestTextIndex(
       docs.where(col("doc_id") % 10 === 1), table, "delta-1"))
+    // the delta commit leaves the base segments in place: the old list
+    // is a prefix of the new one, and every base file keeps its name,
+    // length and mtime
+    assert(segs().startsWith(baseSegs) && segs().size > baseSegs.size)
+    assert(segFiles(baseSegs) == baseFiles)
     // exactly-once: a replayed tag is a no-op and changes nothing
-    def ask() = TextAnalysis.bm25ManifestTopK(spark, table,
-      TextAnalysis.Bm25QuerySuite, TextAnalysis.Bm25TopK).collect()
-      .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("doc_id"),
-        r.getAs[Double]("score"), r.getAs[Int]("rnk"))).toSeq
+    def ask() = ranked(TextAnalysis.bm25StoredTopK(spark, table,
+      TextAnalysis.Bm25QuerySuite, TextAnalysis.Bm25TopK))
     val before = ask()
     assert(!TextAnalysis.refreshManifestTextIndex(
       docs.where(col("doc_id") % 10 === 1), table, "delta-1"))
     assert(ask() == before)
     // bitwise the scan face's ranking
-    val expect = TextAnalysis.bm25Multi(spark, sf).collect()
-      .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("doc_id"),
-        r.getAs[Double]("score"), r.getAs[Int]("rnk"))).toSeq
+    val expect = ranked(TextAnalysis.bm25Multi(spark, sf))
     assert(before == expect)
+    // the df-window invariant: every word's postings share ONE bucket,
+    // and it is the driver-side twin's polyHash(word) % n_buckets
+    val wordBkts = indexRowsAt(table).where(col("kind") === "p")
+      .groupBy("word").agg(collect_set(col("bkt")).as("bs")).collect()
+    assert(wordBkts.nonEmpty)
+    wordBkts.foreach { r =>
+      assert(r.getSeq[Long](1) == Seq(polyHashLocal(r.getString(0)) %
+        TextAnalysis.TextIndexBuckets), r.toString)
+    }
+    // the summed additive 's' rows equal a from-scratch aggregate
+    val st = indexRowsAt(table).where(col("kind") === "s")
+      .agg(sum(col("doc_id")), sum(col("dl"))).head
+    val full = docs
+      .select(size(words(col("text"))).cast("long").as("dl"))
+      .where(col("dl") > 0)
+      .agg(count(lit(1)), sum(col("dl"))).head
+    assert(st.getLong(0) == full.getLong(0) &&
+      st.getLong(1) == full.getLong(1))
     // clustered compaction restores bkt pruning: a one-term probe
-    // reads fewer files than the post-append layout scanned
-    // the postings probe only — the stats scan legitimately reads all
-    // segments (one tiny additive row each) and would mask the prune
-    def probeFiles(): Long = {
-      val bkt = polyHashLocal("spark") % TextAnalysis.TextIndexBuckets
-      val one = spark.read.format("graft").option("path", table)
-        .option("collection", TextAnalysis.TextIndexCollection).load()
-        .where(col("kind") === "p" && col("bkt") === bkt)
-      one.collect()
-      one.queryExecution.executedPlan.collect {
+    // reads fewer files than the post-append layout scanned, and fewer
+    // than the whole index — the postings probe only; the stats scan
+    // legitimately reads all segments (one tiny additive row each) and
+    // would mask the prune
+    def scannedFiles(df: DataFrame): Long = {
+      df.collect()
+      df.queryExecution.executedPlan.collect {
         case sc: FileSourceScanExec => sc.metrics("numFiles").value
       }.sum
     }
+    def probeFiles(): Long = scannedFiles(indexRowsAt(table).where(
+      col("kind") === "p" &&
+        col("bkt") === polyHashLocal("spark") % TextAnalysis.TextIndexBuckets))
     val loose = probeFiles()
     TextAnalysis.compactManifestTextIndex(spark, table, segments = 8)
     val clustered = probeFiles()
     assert(clustered < loose,
       s"clustered probe should scan fewer files ($clustered vs $loose)")
+    val whole = scannedFiles(indexRowsAt(table))
+    assert(clustered < whole,
+      s"clustered probe should scan fewer files than the index " +
+        s"($clustered vs $whole)")
     assert(ask() == expect) // compaction is reader-equivalent
     // ... and FOLDS the per-batch metadata: the two commits' additive
     // 's' rows collapse to ONE summed row, the identical 'b' layout
     // rows to ONE distinct row — stats scans bounded by compactions,
     // not commit count (scoring parity above already proves the folded
     // n_docs/sum_dl read back correctly)
-    val meta = spark.read.format("graft").option("path", table)
-      .option("collection", TextAnalysis.TextIndexCollection).load()
-      .where(col("kind") =!= "p").collect()
+    val meta = indexRowsAt(table).where(col("kind") =!= "p").collect()
     assert(meta.count(_.getString(0) == "s") == 1, meta.mkString(", "))
     assert(meta.count(_.getString(0) == "b") == 1, meta.mkString(", "))
     org.apache.commons.io.FileUtils.deleteQuietly(
@@ -493,7 +491,6 @@ class TextAnalysisSpec extends SparkSpecBase {
 
   test("phrase search: scan face == positional-index face == hand " +
       "count, incl. repeats, overlap, same-word phrases, and misses") {
-    import java.nio.file.Files
     import spark.implicits._
     val docs = Seq(
       (1L, "alpha merge group beta merge group"),     // tf 2
@@ -509,24 +506,22 @@ class TextAnalysisSpec extends SparkSpecBase {
     val scan = asTuples(TextAnalysis.phraseTopK(docs, "merge", "group", 10))
     assert(scan == Seq((1L, 6L, 2L), (2L, 3L, 1L), (4L, 2L, 1L)))
     // the stored positional face answers identically
-    val dir = Files.createTempDirectory("graft_text_pos").toString
-    TextAnalysis.buildTextIndex(docs, dir)
+    val table = committedIndex("graft_text_pos", Seq(docs))
     assert(asTuples(TextAnalysis.phraseStoredTopK(
-      spark, dir, "merge", "group", 10)) == scan)
+      spark, table, "merge", "group", 10)) == scan)
     // same-word phrase: adjacency within one posting list
     assert(asTuples(TextAnalysis.phraseStoredTopK(
-      spark, dir, "merge", "merge", 10)) == Seq((2L, 3L, 1L)))
+      spark, table, "merge", "merge", 10)) == Seq((2L, 3L, 1L)))
     assert(asTuples(TextAnalysis.phraseTopK(
       docs, "merge", "merge", 10)) == Seq((2L, 3L, 1L)))
     // a term the index never stored: empty, not a fault
     assert(TextAnalysis.phraseStoredTopK(
-      spark, dir, "zz", "merge", 10).count() == 0L)
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+      spark, table, "zz", "merge", 10).count() == 0L)
+    dropIndex(table)
   }
 
   test("n-word phrase search: scan face == positional-index face == " +
-      "hand count; probe reads one bucket dir per DISTINCT term") {
-    import java.nio.file.Files
+      "hand count; one pruned index scan per term") {
     import spark.implicits._
     val docs = Seq(
       (1L, "a b c a b c a b c"),        // 'a b c' tf 3
@@ -540,11 +535,10 @@ class TextAnalysisSpec extends SparkSpecBase {
     def asTuples(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("dl"),
         r.getAs[Long]("phrase_tf"))).toSeq
-    val dir = Files.createTempDirectory("graft_text_posn").toString
-    TextAnalysis.buildTextIndex(docs, dir)
+    val table = committedIndex("graft_text_posn", Seq(docs))
     def both(terms: Seq[String]) = {
       val scan = asTuples(TextAnalysis.phraseTopKN(docs, terms, 10))
-      val stored = TextAnalysis.phraseStoredTopKN(spark, dir, terms, 10)
+      val stored = TextAnalysis.phraseStoredTopKN(spark, table, terms, 10)
       assert(asTuples(stored) == scan, s"faces diverge for $terms")
       (scan, stored)
     }
@@ -558,104 +552,35 @@ class TextAnalysisSpec extends SparkSpecBase {
     assert(five == Seq((7L, 10L, 2L)))
     // miss: a valid prefix that never completes
     assert(both(Seq("a", "b", "c", "z"))._1.isEmpty)
-    // the stored probe plans one bucket directory per DISTINCT term
+    // one scan per term, each planning FEWER files than the whole
+    // compacted index — the bkt sidecars exclude segments, never a
+    // full-index read
     triStored.collect()
-    // descend through AQE wrappers: the joined probe is adaptive and
-    // its scans live inside query stages
-    def scans(p: org.apache.spark.sql.execution.SparkPlan):
-        Seq[org.apache.spark.sql.execution.FileSourceScanExec] = p match {
-      case a: org.apache.spark.sql.execution.adaptive
-          .AdaptiveSparkPlanExec => scans(a.executedPlan)
-      case q: org.apache.spark.sql.execution.adaptive
-          .QueryStageExec => scans(q.plan)
-      case s: org.apache.spark.sql.execution.FileSourceScanExec => Seq(s)
-      case other => other.children.flatMap(scans)
-    }
-    // stage objects can be reached twice through AQE references —
-    // dedupe by identity, then pin each scan's PLANNED file set
-    val distinctScans = scans(triStored.queryExecution.executedPlan)
-      .foldLeft(Seq.empty[org.apache.spark.sql.execution
-        .FileSourceScanExec]) { (acc, s) =>
-        if (acc.exists(_ eq s)) acc else acc :+ s
-      }
-    val bktDirs = Seq("a", "b", "c")
-      .map(t => graft.functions.TextFunctions.polyHashLocal(t)
-        % TextAnalysis.TextIndexBuckets).distinct
-    val fsDir = new java.io.File(dir + "/postings")
-    val filesInProbedBkts = bktDirs.map { b =>
-      Option(new java.io.File(fsDir, s"bkt=$b").listFiles())
-        .fold(0)(_.count(f => f.getName.endsWith(".parquet")))
-    }.sum
-    val totalFiles = Option(fsDir.listFiles()).fold(0)(
-      _.count(_.getName.startsWith("bkt=")))
-    assert(totalFiles > bktDirs.size, "fixture must have unprobed dirs")
-    // one scan per term, each planning ONLY the probed dirs' files —
-    // never the whole index
-    assert(distinctScans.size == 3, s"expected 3 scans: $distinctScans")
-    distinctScans.foreach { s =>
+    val whole = indexRowsAt(table)
+    whole.collect()
+    val wholeFiles = fileScans(whole)
+      .map(_.selectedPartitions.totalNumberOfFiles).sum
+    val perTerm = fileScans(triStored)
+    assert(perTerm.size == 3, s"expected 3 scans: $perTerm")
+    perTerm.foreach { s =>
       val planned = s.selectedPartitions.totalNumberOfFiles
-      assert(planned == filesInProbedBkts,
-        s"scan planned $planned files, probed dirs hold $filesInProbedBkts")
+      assert(planned < wholeFiles,
+        s"scan planned $planned files, the whole index holds $wholeFiles")
     }
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+    dropIndex(table)
   }
 
-  test("bucket count is a property of the STORED index: a non-default " +
-      "build probes correctly, refresh inherits the stored layout, a " +
-      "pre-versioned index fails loud") {
-    import java.nio.file.Files
-    val docs = spark.read.parquet(s"$sf/documents.parquet")
-      .select("doc_id", "text")
-    def ask(d: String) = TextAnalysis.bm25StoredTopK(spark, d,
-      TextAnalysis.Bm25QuerySuite, TextAnalysis.Bm25TopK).collect()
-      .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("doc_id"),
-        r.getAs[Double]("score"), r.getAs[Int]("rnk"))).toSeq
-    // built at 2× the constant: the probe must use the STORED count —
-    // probing with the constant would look in the wrong directories
-    // and silently answer empty
-    val wide = Files.createTempDirectory("graft_text_b128").toString
-    TextAnalysis.buildTextIndex(docs, wide,
-      nBuckets = TextAnalysis.TextIndexBuckets * 2)
-    val expect = TextAnalysis.bm25Multi(spark, sf).collect()
-      .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("doc_id"),
-        r.getAs[Double]("score"), r.getAs[Int]("rnk"))).toSeq
-    assert(ask(wide) == expect)
-    assert(spark.read.parquet(wide + "/stats").head
-      .getAs[Long]("n_buckets") == TextAnalysis.TextIndexBuckets * 2)
-    // refresh buckets the BATCH with the stored layout, not the
-    // constant: every word still lives in exactly one bucket dir
-    val dir = Files.createTempDirectory("graft_text_b16").toString
-    TextAnalysis.buildTextIndex(
-      docs.where(col("doc_id") % 10 =!= 1), dir, nBuckets = 16L)
-    TextAnalysis.refreshTextIndex(
-      docs.where(col("doc_id") % 10 === 1), dir)
-    val postings = spark.read.parquet(dir + "/postings")
-    assert(postings.groupBy("word")
-      .agg(countDistinct(col("bkt")).as("nb"))
-      .where(col("nb") > 1).count() == 0L)
-    assert(postings.agg(max(col("bkt"))).head.getInt(0) < 16)
-    assert(ask(dir) == expect)
-    // an index with no persisted layout (pre-versioning) is refused
-    val bare = Files.createTempDirectory("graft_text_bare").toString
-    import spark.implicits._
-    spark.read.parquet(dir + "/postings").select("doc_id", "dl", "word",
-      "tf", "bkt").write.partitionBy("bkt").parquet(bare + "/postings")
-    Seq((1L, 1L)).toDF("n_docs", "sum_dl")
-      .write.parquet(bare + "/stats")
-    val e = intercept[IllegalArgumentException] {
-      TextAnalysis.bm25StoredTopK(spark, bare,
-        TextAnalysis.Bm25QuerySuite, TextAnalysis.Bm25TopK)
-    }
-    assert(e.getMessage.contains("no persisted n_buckets"), e.getMessage)
-    Seq(wide, dir, bare).foreach(d =>
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(d)))
-  }
+  /** The 'p' rows of an index, comparable across indexes. */
+  private def postingsOf(table: String) = indexRowsAt(table)
+    .where(col("kind") === "p")
+    .select("doc_id", "dl", "word", "tf", "ps", "bkt").collect()
+    .map(r => (r.getLong(0), r.getLong(1), r.getString(2), r.getLong(3),
+      r.getSeq[Int](4).mkString(","), r.getLong(5)))
+    .sortBy(t => (t._1, t._3)).toSeq
 
-  test("df-capped index: over-cap posting lists are never stored, " +
-      "surviving terms answer bitwise like the uncapped store, the " +
-      "hottest bucket sheds mass, a df-less capped store refuses " +
-      "refresh") {
-    import java.nio.file.Files
+  test("df-capped index: over-cap posting lists are never committed, " +
+      "surviving terms answer bitwise like the uncapped index, the " +
+      "hottest bucket sheds mass, stats stay full-corpus") {
     import spark.implicits._
     // crafted corpus: 'the' in every doc (df 40 > cap), content words
     // in a few docs each; cap at 50% = 20 docs
@@ -663,62 +588,50 @@ class TextAnalysisSpec extends SparkSpecBase {
       val extra = if (i % 8 == 0) " spark join" else ""
       (i, s"the quick w$i doc number x${i % 4}$extra")
     }.toDF("doc_id", "text")
-    val full = Files.createTempDirectory("graft_text_uncapped").toString
-    val capped = Files.createTempDirectory("graft_text_capped").toString
-    TextAnalysis.buildTextIndex(docs, full)
-    TextAnalysis.buildTextIndex(docs, capped, dfCap = 20L)
-    val cw = spark.read.parquet(capped + "/postings")
-      .select("word").distinct().collect().map(_.getString(0)).toSet
-    // df('the') = df('quick') = df('doc') = 40 > 20: never stored
+    // uncompacted: the rows read back are exactly the committed ones
+    val full = committedIndex("graft_text_uncapped", Seq(docs),
+      compact = false)
+    val capped = committedIndex("graft_text_capped", Seq(docs),
+      dfCap = 20L, compact = false)
+    val cw = postingsOf(capped).map(_._3).toSet
+    // df('the') = df('quick') = df('doc') = 40 > 20: never committed
     assert(!cw.contains("the") && !cw.contains("quick"), cw.toString)
     // df('spark') = 5, df('x0') = 10: whole lists survive
     assert(cw.contains("spark") && cw.contains("x0"), cw.toString)
-    // surviving-term probes are bitwise the uncapped store's
+    // surviving-term probes are bitwise the uncapped index's
     val suite = Seq(1L -> "spark", 1L -> "join", 2L -> "x0")
-    def ask(d: String) = TextAnalysis.bm25StoredTopK(spark, d, suite, 5)
-      .collect().map(r => (r.getAs[Long]("query_id"),
-        r.getAs[Long]("doc_id"), r.getAs[Double]("score"),
-        r.getAs[Int]("rnk"))).toSeq
+    def ask(t: String) = ranked(TextAnalysis.bm25StoredTopK(spark, t,
+      suite, 5))
     assert(ask(capped) == ask(full) && ask(capped).nonEmpty)
     // an over-cap term finds nothing (list never stored) — not a fault
     assert(TextAnalysis.bm25StoredTopK(spark, capped,
       Seq(9L -> "the"), 5).count() == 0L)
     // the hottest bucket sheds posting mass
-    def hottest(d: String): Long = spark.read.parquet(d + "/postings")
+    def hottest(t: String): Long = indexRowsAt(t).where(col("kind") === "p")
       .groupBy("bkt").agg(count(lit(1)).as("n"))
       .agg(max(col("n"))).head.getLong(0)
     assert(hottest(capped) < hottest(full))
     // corpus stats stay FULL-corpus (BM25 normalization is about the
-    // corpus, not the index)
-    val (sf_, sc_) = (spark.read.parquet(full + "/stats").head,
-      spark.read.parquet(capped + "/stats").head)
-    assert(sf_.getAs[Long]("n_docs") == sc_.getAs[Long]("n_docs") &&
-      sf_.getAs[Long]("sum_dl") == sc_.getAs[Long]("sum_dl"))
-    assert(sc_.getAs[Long]("df_cap") == 20L)
-    // a capped build persists the per-word df store refresh needs
-    assert(new java.io.File(capped + "/dfs").exists())
-    // ...and a capped store WITHOUT it (pre-upgrade) refuses refresh
-    // loud — exact incremental capping is impossible without the dfs
-    org.apache.commons.io.FileUtils
-      .deleteDirectory(new java.io.File(capped + "/dfs"))
-    val e = intercept[IllegalArgumentException] {
-      TextAnalysis.refreshTextIndex(
-        Seq((99L, "fresh words")).toDF("doc_id", "text"), capped)
-    }
-    assert(e.getMessage.contains("df_cap"), e.getMessage)
-    Seq(full, capped).foreach(d =>
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(d)))
+    // corpus, not the index); the layout carries the absolute cap
+    def stats(t: String) = TextAnalysis.indexProbe(spark, t, Some(Nil))._2
+      .head.toSeq
+    assert(stats(capped) == stats(full) && stats(full).head == 40L)
+    assert(TextAnalysis.manifestIndexLayout(spark, capped) ==
+      (TextAnalysis.TextIndexBuckets, 20L))
+    assert(TextAnalysis.manifestIndexLayout(spark, full) ==
+      (TextAnalysis.TextIndexBuckets, 0L))
+    Seq(full, capped).foreach(dropIndex)
   }
 
-  test("capped-index incremental refresh == capped rebuild: newly " +
-      "over-cap words evict (only their buckets rewrite), surviving " +
-      "batch rows append, always-over words stay out") {
-    import java.nio.file.Files
+  test("capped-index incremental commits == capped rebuild: a word " +
+      "pushed over the cap drops at the probe and is evicted by " +
+      "compaction, surviving batch rows commit, a replayed tag commits " +
+      "nothing") {
     import spark.implicits._
-    // base: 'aa' df 4 (cap 5, near it), 'bb' df 8 (> cap since build),
-    // 'cc' df 2, per-doc unique words — batch pushes 'aa' to 7 (> cap:
-    // evict), leaves 'cc' at 4 (survives), adds fresh words, and adds
-    // more 'bb' (stays out)
+    // base: 'aa' df 4 (cap 5, near it), 'bb' df 8 (> cap since the
+    // first commit), 'cc' df 2, per-doc unique words — batch pushes
+    // 'aa' to 7 (> cap), leaves 'cc' at 4 (survives), adds fresh
+    // words, and adds more 'bb' (stays out); batch2 pushes 'cc' over
     def doc(i: Long, ws: Seq[String]) = (i, ws.mkString(" "))
     val base = ((0L until 8L).map(i => doc(i, Seq("bb", s"u$i") ++
       (if (i < 4) Seq("aa") else Nil) ++
@@ -726,92 +639,55 @@ class TextAnalysisSpec extends SparkSpecBase {
     val batch = ((100L until 103L).map(i => doc(i,
       Seq("aa", "bb", s"v$i") ++
       (if (i < 102L) Seq("cc") else Nil)))).toDF("doc_id", "text")
-    val inc = Files.createTempDirectory("graft_capref_inc").toString
-    val reb = Files.createTempDirectory("graft_capref_reb").toString
-    TextAnalysis.buildTextIndex(base, inc, dfCap = 5L)
-    // fingerprint untouched bucket files before the refresh
-    val evictBkt = (graft.functions.TextFunctions.polyHashLocal("aa")
-      % TextAnalysis.TextIndexBuckets).toInt
-    def bktFiles(d: String) = Option(new java.io.File(d + "/postings")
-        .listFiles()).fold(Seq.empty[String])(_.toSeq
-      .filter(f => f.getName.startsWith("bkt=") &&
-        f.getName != s"bkt=$evictBkt")
-      .flatMap(b => b.listFiles().toSeq
-        .filter(_.getName.endsWith(".parquet"))
-        .map(f => s"${b.getName}/${f.getName}:${f.length}")))
-      .sorted
-    val before = bktFiles(inc)
-    TextAnalysis.refreshTextIndex(batch, inc)
-    // non-evicted base bucket files survive untouched (append-only
-    // there; only the evicted word's bucket dir was rewritten)
-    assert(before.forall(bktFiles(inc).contains), bktFiles(inc).toString)
-    TextAnalysis.buildTextIndex(base.unionByName(batch), reb, dfCap = 5L)
-    // postings relations identical
-    def post(d: String) = spark.read
-      .schema(TextAnalysis.PostingsSchema).parquet(d + "/postings")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2),
-        r.getLong(3), r.getSeq[Int](4).mkString(","), r.getInt(5)))
-      .sortBy(t => (t._1, t._3)).toSeq
-    assert(post(inc) == post(reb))
-    val words = post(inc).map(_._3).toSet
-    assert(!words.contains("aa") && !words.contains("bb") &&
-      words.contains("cc") && words.contains("v100"), words.toString)
-    // stats identical (full-corpus normalization)
-    assert(spark.read.parquet(inc + "/stats").head.toSeq ==
-      spark.read.parquet(reb + "/stats").head.toSeq)
-    // stored df totals identical (additive rows sum to the rebuild's)
-    def dfs(d: String) = spark.read
-      .schema(TextAnalysis.DfsSchema).parquet(d + "/dfs")
-      .groupBy("word").agg(sum(col("df")).as("df"))
-      .collect().map(r => (r.getString(0), r.getLong(1))).sorted.toSeq
-    assert(dfs(inc) == dfs(reb))
-    // probes over both stores answer identically
-    val suite = Seq(1L -> "cc", 2L -> "v100", 3L -> "aa")
-    def ask(d: String) = TextAnalysis.bm25StoredTopK(spark, d, suite, 5)
-      .collect().map(r => (r.getAs[Long]("query_id"),
-        r.getAs[Long]("doc_id"), r.getAs[Double]("score"),
-        r.getAs[Int]("rnk"))).toSeq
-    assert(ask(inc) == ask(reb) && ask(inc).nonEmpty)
-    // a SECOND refresh composes (dfs stay additive): push 'cc' over
     val batch2 = ((200L until 203L).map(i =>
       doc(i, Seq("cc", s"w$i")))).toDF("doc_id", "text")
-    TextAnalysis.refreshTextIndex(batch2, inc)
-    val reb2 = Files.createTempDirectory("graft_capref_reb2").toString
-    TextAnalysis.buildTextIndex(
-      base.unionByName(batch).unionByName(batch2), reb2, dfCap = 5L)
-    assert(post(inc) == post(reb2))
-    assert(!post(inc).map(_._3).toSet.contains("cc"))
-    // a leftover staging dir marks a crashed rewrite that may hold the
-    // only copy of a bucket's surviving postings — refresh refuses
-    // loud instead of destroying it
-    val staging = new java.io.File(inc + "/.postings-rewrite")
-    assert(staging.mkdir())
-    val crash = intercept[IllegalArgumentException] {
-      TextAnalysis.refreshTextIndex(
-        ((300L to 302L).map(i => doc(i, Seq("aa")))).toDF("doc_id", "text"),
-        inc)
-    }
-    assert(crash.getMessage.contains("staging"), crash.getMessage)
-    assert(staging.delete())
-    // a leftover APPEND marker marks a crash between the postings and
-    // dfs appends — stored per-word dfs no longer match the postings
-    // (base_df permanently too low) — refresh refuses loud
-    val marker = new java.io.File(inc + "/.dfs-append-inflight")
-    assert(marker.createNewFile())
-    val crash2 = intercept[IllegalArgumentException] {
-      TextAnalysis.refreshTextIndex(
-        ((310L to 312L).map(i => doc(i, Seq("aa")))).toDF("doc_id", "text"),
-        inc)
-    }
-    assert(crash2.getMessage.contains("append marker"), crash2.getMessage)
-    assert(marker.delete())
-    // a clean refresh brackets its appends and removes the marker
-    TextAnalysis.refreshTextIndex(
-      ((320L to 321L).map(i => doc(i, Seq("dd")))).toDF("doc_id", "text"),
-      inc)
-    assert(!marker.exists())
-    Seq(inc, reb, reb2).foreach(d =>
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(d)))
+    val suite = Seq(1L -> "cc", 2L -> "v100", 3L -> "aa", 4L -> "w200")
+    def ask(t: String) = ranked(TextAnalysis.bm25StoredTopK(spark, t,
+      suite, 5))
+    val inc = committedIndex("graft_capref_inc", Seq(base, batch),
+      dfCap = 5L, compact = false)
+    val reb = committedIndex("graft_capref_reb",
+      Seq(base.unionByName(batch)), dfCap = 5L, compact = false)
+    // 'aa' crossed the cap after its base postings were committed: they
+    // are still stored, but the probe drops the word
+    assert(postingsOf(inc).exists(_._3 == "aa"))
+    assert(!postingsOf(reb).exists(_._3 == "aa"))
+    assert(TextAnalysis.bm25StoredTopK(spark, inc, Seq(3L -> "aa"), 5)
+      .count() == 0L)
+    assert(ask(inc) == ask(reb) && ask(inc).nonEmpty)
+    // the batch's surviving rows were committed; always-over 'bb' never
+    assert(postingsOf(inc).exists(t => t._1 == 100L && t._3 == "cc"))
+    assert(!postingsOf(inc).exists(_._3 == "bb"))
+    // a second batch composes ('d' rows stay additive): 'cc' goes over
+    assert(TextAnalysis.refreshManifestTextIndex(batch2, inc, "c2"))
+    val reb2 = committedIndex("graft_capref_reb2",
+      Seq(base.unionByName(batch).unionByName(batch2)), dfCap = 5L,
+      compact = false)
+    assert(ask(inc) == ask(reb2))
+    // a replayed tag commits nothing
+    val c = TextAnalysis.TextIndexCollection
+    val segsBefore = graft.sources.ManifestStore
+      .currentSegments(spark, inc, c).get
+    assert(!TextAnalysis.refreshManifestTextIndex(batch2, inc, "c2"))
+    assert(graft.sources.ManifestStore
+      .currentSegments(spark, inc, c).get == segsBefore)
+    // compaction evicts the over-cap words' postings: afterwards the
+    // 'p' rows and the summed 'd' rows equal the rebuild's
+    TextAnalysis.compactManifestTextIndex(spark, inc)
+    assert(postingsOf(inc) == postingsOf(reb2))
+    val words = postingsOf(inc).map(_._3).toSet
+    assert(!words.contains("aa") && !words.contains("bb") &&
+      !words.contains("cc") && words.contains("v100") &&
+      words.contains("w200"), words.toString)
+    def dfs(t: String) = indexRowsAt(t).where(col("kind") === "d")
+      .groupBy("word").agg(sum(col("tf")).as("df"))
+      .collect().map(r => (r.getString(0), r.getLong(1))).sorted.toSeq
+    assert(dfs(inc) == dfs(reb2) && dfs(inc).toMap.apply("aa") == 7L)
+    def stats(t: String) = TextAnalysis.indexProbe(spark, t, Some(Nil))._2
+      .head.toSeq
+    assert(stats(inc) == stats(reb2))
+    assert(ask(inc) == ask(reb2))
+    Seq(inc, reb, reb2).foreach(dropIndex)
   }
 
   test("manifest index layout: the first commit establishes the bucket " +
@@ -828,9 +704,9 @@ class TextAnalysisSpec extends SparkSpecBase {
     // the second batch ASKS for the default but inherits the stored 32
     assert(TextAnalysis.refreshManifestTextIndex(
       docs.where(col("doc_id") % 10 === 1), table, "delta-1"))
-    assert(TextAnalysis.manifestIndexBuckets(spark, table) == 32L)
+    assert(TextAnalysis.manifestIndexLayout(spark, table) == (32L, 0L))
     // probes resolve against the stored layout and match the scan face
-    val got = TextAnalysis.bm25ManifestTopK(spark, table,
+    val got = TextAnalysis.bm25StoredTopK(spark, table,
       TextAnalysis.Bm25QuerySuite, TextAnalysis.Bm25TopK).collect()
       .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("doc_id"),
         r.getAs[Double]("score"), r.getAs[Int]("rnk"))).toSeq
@@ -846,12 +722,24 @@ class TextAnalysisSpec extends SparkSpecBase {
         docs.where(col("doc_id") % 10 === 2), nBuckets = 16L),
       table, TextAnalysis.TextIndexCollection, "foreign")
     val e = intercept[IllegalArgumentException] {
-      TextAnalysis.bm25ManifestTopK(spark, table,
+      TextAnalysis.bm25StoredTopK(spark, table,
         TextAnalysis.Bm25QuerySuite, TextAnalysis.Bm25TopK)
     }
     assert(e.getMessage.contains("MULTIPLE bucket counts"), e.getMessage)
-    org.apache.commons.io.FileUtils.deleteQuietly(
-      new java.io.File(table).getParentFile)
+    // an index with no 'b' layout row (pre-versioning) is refused too:
+    // its bucket count is unknowable
+    val bare = Files.createTempDirectory("graft_text_bare").toString + "/t"
+    TextAnalysis.initManifestTextIndex(spark, bare)
+    graft.sources.ManifestStore.storeBatch(
+      TextAnalysis.indexRows(docs).where(col("kind") =!= "b"),
+      bare, TextAnalysis.TextIndexCollection, "bare")
+    val e2 = intercept[IllegalArgumentException] {
+      TextAnalysis.bm25StoredTopK(spark, bare,
+        TextAnalysis.Bm25QuerySuite, TextAnalysis.Bm25TopK)
+    }
+    assert(e2.getMessage.contains("carries no 'b' layout row"),
+      e2.getMessage)
+    Seq(table, bare).foreach(dropIndex)
   }
 
   test("WAND impact prune: results bitwise == the unpruned stored " +
@@ -867,11 +755,8 @@ class TextAnalysisSpec extends SparkSpecBase {
     assert(wand == plain)
     // the prune engages: the suite's mixed rare+stopword queries must
     // shed candidates, and no query keeps fewer than its answer size
-    val tf = spark.read.schema(TextAnalysis.PostingsSchema)
-      .parquet(path + "/postings")
-      .select("doc_id", "dl", "word", "tf")
-    val stats = spark.read.parquet(path + "/stats")
-      .select("n_docs", "sum_dl")
+    val (tf, stats) = TextAnalysis.indexProbe(spark, path,
+      Some(TextAnalysis.Bm25QuerySuite.map(_._2)))
     val ps = TextAnalysis.wandPruneStats(tf,
       TextAnalysis.Bm25QuerySuite.toDF("query_id", "term"), stats,
       TextAnalysis.Bm25TopK).collect()
